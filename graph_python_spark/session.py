@@ -13,12 +13,14 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    """Build a local session; parallelism defaults to $SPARK_GRAFT_CPUS or 32.
+    """Build a local session; parallelism defaults to $SPARK_GRAFT_CPUS, else
+    the number of CPUs this process may run on (``os.sched_getaffinity``).
 
     Shuffle partitions track core count (not Spark's default 200) so tiny
     iterations don't over-parallelize; AQE coalesces at larger scale.
     """
-    cores = parallelism or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = parallelism or int(os.environ.get("SPARK_GRAFT_CPUS")
+                               or len(os.sched_getaffinity(0)))
     shuffle = shuffle_partitions or cores
     b = (
         SparkSession.builder.master(f"local[{cores}]")

@@ -165,3 +165,49 @@ def test_loop_shuffle_width_bounds_and_restore(spark):
     except RuntimeError:
         pass
     assert spark.conf.get(key) == before
+
+
+def _plan_nodes(plan) -> list[str]:
+    """Operator names of a physical plan, pre-order.  An InMemoryTableScan
+    has no children, so a cached relation's own build plan (run once,
+    before the loop) is not counted."""
+    names = [plan.nodeName()]
+    children = plan.children()
+    for k in range(children.size()):
+        names += _plan_nodes(children.apply(k))
+    return names
+
+
+def test_pagerank_step_one_exchange(spark):
+    """PageRank's per-iteration step under loop_conf plans exactly one
+    exchange (the partial-aggregation one), no broadcast and no sort-merge
+    join — for a small contribution vector and for one past 1M rows, where
+    a size-picked join would switch strategy."""
+    import importlib
+
+    from pyspark.sql import functions as F
+
+    from graph_python_spark.plans.iterate import loop_conf, loop_shuffle_width
+
+    pr = importlib.import_module("graph_python_spark.algorithms.pagerank")
+    e = spark.createDataFrame([(0, 1), (0, 2), (1, 2), (2, 0), (3, 2)],
+                              "i long, j long")
+    prepared = pr.prepare_graph(e)
+    for rows in (10, 1_200_000):
+        with loop_conf(spark), loop_shuffle_width(spark, prepared.n) as width:
+            # a contrib as the loop pins it: hash(i) at the loop width; the
+            # lazy pin keeps the row-count stats the planner sizes joins by
+            contrib = (spark.range(rows)
+                       .select(F.col("id").alias("i"), F.lit(1.0).alias("c"))
+                       .repartition(width, "i").localCheckpoint(eager=False))
+            plan = pr._step(prepared.adj, 0.1, 0.2, contrib)
+            nodes = _plan_nodes(plan._jdf.queryExecution().executedPlan())
+        assert nodes.count("Exchange") == 1, (rows, nodes)
+        below = [n for n in nodes[nodes.index("Exchange") + 1:]
+                 if n != "InputAdapter" and not n.startswith("WholeStageCodegen")]
+        assert below[0] == "HashAggregate", (rows, nodes)
+        assert "BroadcastExchange" not in nodes, (rows, nodes)
+        assert "SortMergeJoin" not in nodes, (rows, nodes)
+        assert "ShuffledHashJoin" in nodes, (rows, nodes)
+    prepared.adj.unpersist()
+    prepared.vertices.unpersist()
