@@ -32,24 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_python_spark.plans.iterate import (iterative, loop_shuffle_width,
-                                              materialize)
-
-
-class _Pin:
-    """Rotating localCheckpoint holder (pin new, unpersist old)."""
-
-    def __init__(self):
-        self._prev: list[DataFrame] = []
-
-    def pin(self, *dfs: DataFrame) -> tuple[DataFrame, ...]:
-        out = tuple(df.localCheckpoint(eager=True) for df in dfs)
-        for p in self._prev:
-            try:
-                p.unpersist()
-            except Exception:
-                pass
-        self._prev = list(out)
-        return out
+                                              materialize, release)
 
 
 @iterative
@@ -84,7 +67,6 @@ def hits_fixed(
         .distinct()
     )
     n = vertices.count()
-    pin = _Pin()
     auth = None
     with loop_shuffle_width(spark, n) as width:
         w = partitions if partitions is not None else width
@@ -96,21 +78,22 @@ def hits_fixed(
         ebj = materialize(ebi.repartition(w, "j"))
         h = vertices.select(F.col("id").alias("i"), F.lit(1.0).alias("v"))
         for _ in range(iterations):
-            auth = (
+            new_auth = (
                 ebi.join(h, "i")
                 .groupBy(F.col("j"))
                 .agg(F.sum("v").alias("v"))
             )
-            h = (
-                ebj.join(auth, "j")
+            new_h = (
+                ebj.join(new_auth, "j")
                 .groupBy(F.col("i"))
                 .agg(F.sum("v").alias("v"))
             )
-            h, auth = pin.pin(h, auth)
-    # h/auth are pinned (eager localCheckpoint), so the cached edge copies
+            prev = (h, auth)
+            h, auth = materialize(new_h), materialize(new_auth)
+            release(*prev)
+    # h/auth are pinned (eager localCheckpoint), so the pinned edge copies
     # are no longer needed by the lazy result — release their blocks
-    ebi.unpersist()
-    ebj.unpersist()
+    release(ebi, ebj)
     sums = h.agg(F.sum("v")).crossJoin(auth.agg(F.sum("v"))).first()
     hsum, asum = float(sums[0]), float(sums[1])
     return (
@@ -158,7 +141,6 @@ def ppr_fixed(
         seeds.select(F.col("id").alias("i"),
                      F.lit((1.0 - damping) / n_seeds).alias("p"))
     )
-    pin = _Pin()
     r = tel.select("i", (F.col("p") / F.lit(1.0 - damping)).alias("v"))  # r_0 = p
     # width bound: support can grow to O(V) <= O(E); sizing by the edge
     # count never under-partitions an expansive graph, while a genuinely
@@ -171,17 +153,16 @@ def ppr_fixed(
                 .groupBy("i")
                 .agg(F.sum("w").alias("c"))
             )
-            r = (
+            prev, r = r, materialize(
                 tel.join(contrib, "i", "full_outer")
                 .select("i", (F.coalesce(F.col("p"), F.lit(0.0))
                               + F.coalesce(F.col("c"), F.lit(0.0))).alias("v"))
             )
-            (r,) = pin.pin(r)
+            release(prev)
     if iterations > 0:
         # r is pinned; the loop-invariant operands can release their blocks
         # (with 0 iterations r is still a lazy view over tel — keep it)
-        et.unpersist()
-        tel.unpersist()
+        release(et, tel)
     return r.select(F.col("i").alias("id"), F.col("v").alias("score"))
 
 
@@ -219,7 +200,6 @@ def ppr_batch(
         seeds.select(F.col("id").alias("s"), F.col("id").alias("i"),
                      F.lit(1.0 - damping).alias("p"))
     )
-    pin = _Pin()
     r = tel.select("s", "i", F.lit(1.0).alias("v"))  # r_0 = e_seed
     with loop_shuffle_width(edges.sparkSession, max(et.count(), 1)):
         for _ in range(iterations):
@@ -230,15 +210,14 @@ def ppr_batch(
                 .groupBy("s", "i")
                 .agg(F.sum("w").alias("c"))
             )
-            r = (
+            prev, r = r, materialize(
                 tel.join(contrib, ["s", "i"], "full_outer")
                 .select("s", "i", (F.coalesce(F.col("p"), F.lit(0.0))
                                    + F.coalesce(F.col("c"), F.lit(0.0))).alias("v"))
             )
-            (r,) = pin.pin(r)
+            release(prev)
     if iterations > 0:
-        et.unpersist()
-        tel.unpersist()
+        release(et, tel)
     return r.select(F.col("s").alias("seed"), F.col("i").alias("id"),
                     F.col("v").alias("score"))
 
@@ -299,10 +278,13 @@ def betweenness_sources(
             )
             nxt = nxt.localCheckpoint(eager=True)
             if nxt.isEmpty():
+                release(nxt)
                 break
             levels.append(nxt)
+            prev = visited
             visited = visited.unionByName(nxt.select("src", "v")) \
                              .localCheckpoint(eager=True)
+            release(prev)
 
         depth = len(levels) - 1
         deltas: list[DataFrame] = [None] * (depth + 1)
@@ -339,11 +321,7 @@ def betweenness_sources(
     # the result is pinned, so every per-level block can be released —
     # leaving O(levels) checkpointed frames cached would bleed executor
     # storage into whatever runs next on the session
-    for df in levels + [d for d in deltas if d is not None] + [visited, eb]:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+    release(*levels, *deltas, visited, eb)
     return out
 
 
@@ -372,7 +350,6 @@ def katz_fixed(
         .distinct()
     )
     n = vertices.count()
-    pin = _Pin()
     with loop_shuffle_width(spark, n) as width:
         w = partitions if partitions is not None else width
         if partitions is not None:
@@ -385,13 +362,13 @@ def katz_fixed(
                 .groupBy(F.col("j").alias("id"))
                 .agg(F.sum("v").alias("c"))
             )
-            x = (
+            prev, x = x, materialize(
                 vertices.join(contrib, "id", "left_outer")
                 .select("id", (F.lit(1.0) + F.lit(alpha)
                                * F.coalesce(F.col("c"), F.lit(0.0))).alias("v"))
             )
-            (x,) = pin.pin(x)
-    eb.unpersist()
+            release(prev)
+    release(eb)
     return x.select("id", F.col("v").alias("katz"))
 
 
@@ -425,7 +402,6 @@ def eigenvector_fixed(
         .distinct()
     )
     n = vertices.count()
-    pin = _Pin()
     with loop_shuffle_width(spark, n) as width:
         w = partitions if partitions is not None else width
         if partitions is not None:
@@ -438,13 +414,13 @@ def eigenvector_fixed(
                 .groupBy(F.col("j").alias("id"))
                 .agg(F.sum("v").alias("c"))
             )
-            x = (
+            prev, x = x, materialize(
                 vertices.join(contrib, "id", "left_outer")
                 .select("id", F.coalesce(F.col("c"), F.lit(0)).cast("long")
                         .alias("v"))
             )
-            (x,) = pin.pin(x)
-    eb.unpersist()
+            release(prev)
+    release(eb)
     total = x.agg(F.sum("v")).first()[0] or 1
     return x.select(
         "id", (F.col("v").cast("double") / F.lit(float(total))).alias("score"))
@@ -476,7 +452,6 @@ def _multi_source_distances(
         sources.select(F.col("id").alias("src"), F.col("id").alias("id"),
                        F.lit(0).cast("long").alias("v"))
     )
-    pin = _Pin()
     with loop_shuffle_width(spark, max(n_edges, 1)):
         for _ in range(rounds):
             cand = (
@@ -484,16 +459,14 @@ def _multi_source_distances(
                 .groupBy("src", F.col("j").alias("id"))
                 .agg(F.min(F.col("v") + 1).alias("_nd"))
             )
-            dist = (
+            prev, dist = dist, materialize(
                 dist.join(cand, ["src", "id"], "full_outer")
                 .select("src", "id",
                         F.least(F.col("v"), F.col("_nd")).alias("v"))
             )
-            (dist,) = pin.pin(dist)
-    out = dist.localCheckpoint(eager=True)
-    pin.pin()  # release the loop's last pinned state
-    eb.unpersist()
-    return out
+            release(prev)
+    release(eb)
+    return dist
 
 
 @iterative
@@ -518,7 +491,7 @@ def harmonic_centrality(
         .agg(F.sum(F.lit(1.0) / F.col("v")).alias("harmonic"))
     )
     out = out.localCheckpoint(eager=True)
-    dist.unpersist()
+    release(dist)
     return out
 
 
@@ -551,7 +524,7 @@ def closeness_centrality(
                  / F.col("sum_dist").cast("double")).alias("closeness"))
     )
     out = out.localCheckpoint(eager=True)
-    dist.unpersist()
+    release(dist)
     return out
 
 
@@ -588,7 +561,6 @@ def salsa_fixed(
         .distinct()
     )
     n = vertices.count()
-    pin = _Pin()
     with loop_shuffle_width(spark, n) as width:
         w = partitions if partitions is not None else width
         if partitions is not None:
@@ -607,19 +579,20 @@ def salsa_fixed(
         a = vertices.select(F.col("id").alias("j"), F.lit(1.0).alias("v"))
         h = None
         for _ in range(iterations):
-            h = (
+            new_h = (
                 ebj.join(a, "j")
                 .groupBy(F.col("i"))
                 .agg(F.sum(F.col("v") * F.col("inv_din")).alias("v"))
             )
-            a = (
-                ebi.join(h, "i")
+            new_a = (
+                ebi.join(new_h, "i")
                 .groupBy(F.col("j"))
                 .agg(F.sum(F.col("v") * F.col("inv_dout")).alias("v"))
             )
-            h, a = pin.pin(h, a)
-    ebi.unpersist()
-    ebj.unpersist()
+            prev = (h, a)
+            h, a = materialize(new_h), materialize(new_a)
+            release(*prev)
+    release(ebi, ebj)
     sums = h.agg(F.sum("v")).crossJoin(a.agg(F.sum("v"))).first()
     hsum, asum = float(sums[0]), float(sums[1])
     return (

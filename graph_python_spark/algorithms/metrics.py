@@ -256,8 +256,9 @@ def degree_quantiles(edges: DataFrame,
                      probs=(0.5, 0.9, 0.99, 0.999),
                      direction: str = "out") -> DataFrame:
     """Exact (linearly interpolated) quantiles of the degree distribution —
-    the skew diagnostic that decides salting / hub-chunking parameters
-    before running anything expensive on a power-law graph.
+    the skew diagnostic that decides hub-chunking parameters
+    (``adjacency_table``'s ``max_chunk``) before running anything
+    expensive on a power-law graph.
 
     Returns one row per probability (p, deg_q).  Spark's ``percentile`` is
     the exact type-7 estimator (same as DuckDB ``quantile_cont``), so the
@@ -449,7 +450,7 @@ def powerlaw_alpha(edges: DataFrame, d_min: int = 2) -> DataFrame:
     """Hill maximum-likelihood estimate of the degree-distribution tail
     exponent: α = 1 + n / Σ_{d ≥ d_min} ln(d / d_min), over out-degrees of
     the directed simple graph — the skew diagnostic that decides whether
-    a graph needs the salted/hub-capped plan variants.
+    a graph needs hub-capped adjacency rows.
 
     Returns ONE row (n_tail, d_min, alpha); alpha is NULL when every
     tail degree equals ``d_min`` (Σln = 0 — the sample carries no slope

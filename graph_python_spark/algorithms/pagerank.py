@@ -34,8 +34,9 @@ table rather than the raw edge list:
     a shuffled hash join building on contrib — no exchange, no sort, no
     broadcast job, whatever contrib's size.  The one shuffle per step is
     the O(distinct-dst) partial-agg exchange;
-  * every iteration is pinned by localCheckpoint (old state unpersisted),
-    so each step runs the same plan shape over a pinned contrib; durable
+  * every iteration is pinned by localCheckpoint and the old state's
+    blocks are released after its last read (plans/iterate.release), so
+    each step runs the same plan shape over a pinned contrib; durable
     IterationState saves every ``checkpoint_every`` iterations give the
     north-rule resume guarantee.  Cold, 10 iterations on a 100k-vertex /
     570k-edge Zipf graph (4 vCPU) take 6.9 s, against 10.5 s with a
@@ -46,8 +47,7 @@ At 1000-executor / 100 TB scale the plan holds: the adjacency table stays
 partitioned by src across iterations (per-row arrays bounded by max degree;
 a hub row's explode is one task's sequential scan), the rank vector is the
 only moving state, and power-law dst skew is handled by map-side partial
-aggregation plus the salted two-stage combine in ``operators/blocks.py``
-(⊕ associativity makes partial merges exact).
+aggregation (⊕ associativity makes partial merges exact).
 """
 
 from __future__ import annotations
@@ -60,24 +60,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_python_spark.plans.iterate import (IterationState, loop_conf,
-                                                loop_shuffle_width)
-
-
-class _Pinned:
-    """Rotating localCheckpoint holder: pin new state, unpersist the old."""
-
-    def __init__(self):
-        self.prev: Optional[DataFrame] = None
-
-    def pin(self, df: DataFrame) -> DataFrame:
-        out = df.localCheckpoint(eager=True)
-        if self.prev is not None:
-            try:
-                self.prev.unpersist()
-            except Exception:
-                pass
-        self.prev = out
-        return out
+                                                loop_shuffle_width,
+                                                materialize, release)
 
 
 @dataclass
@@ -164,11 +148,12 @@ def _step(adj, teleport: float, r0: float, contrib: Optional[DataFrame]) -> Data
     )
 
 
-def _contrib_loop(adj, teleport, r0, iterations, pinned, contrib=None,
+def _contrib_loop(adj, teleport, r0, iterations, contrib=None,
                   rdiff_cb=None, tol=None, step_fn=None):
     """Shared iteration body — the ONE place lineage truncation lives.
     Every iteration is pinned, so every step runs the same plan shape over
-    a pinned contrib (compiled once).  contrib=None means start from dense
+    a pinned contrib (compiled once); the old contrib is released once
+    rdiff_cb has read it.  contrib=None means start from dense
     r0=1/n; ``step_fn`` overrides the default unweighted SpMV step (used by
     the weighted variant) while keeping the identical loop mechanics."""
     if step_fn is None:
@@ -176,8 +161,9 @@ def _contrib_loop(adj, teleport, r0, iterations, pinned, contrib=None,
             return _step(adj, teleport, r0, c)
     iters_done = 0
     for k in range(iterations):
-        new_contrib = pinned.pin(step_fn(contrib))
+        new_contrib = materialize(step_fn(contrib))
         rdiff = rdiff_cb(contrib, new_contrib, k) if rdiff_cb is not None else None
+        release(contrib)
         contrib = new_contrib
         iters_done = k + 1
         if tol is not None and rdiff <= tol:
@@ -233,8 +219,6 @@ def pagerank(
             if rdiffs and rdiffs[-1] <= tol:
                 return _finalize(vertices, contrib, teleport), start_iter, rdiffs
 
-    pinned = _Pinned()
-
     def rdiff_cb(old_contrib, new_contrib, k):
         # Σ|r_new - r_old|: teleport cancels; vertices never receiving
         # contributions never change. First iteration diffs against r0=1/n
@@ -266,7 +250,7 @@ def pagerank(
     remaining = itermax - start_iter
     with _loop(adj.sparkSession, n, prepared.width):
         contrib, done = _contrib_loop(
-            adj, teleport, 1.0 / n, remaining, pinned, contrib=contrib,
+            adj, teleport, 1.0 / n, remaining, contrib=contrib,
             rdiff_cb=rdiff_cb, tol=tol,
         )
     return _finalize(vertices, contrib, teleport), start_iter + done, rdiffs
@@ -292,17 +276,12 @@ def iteration_times(prepared: PreparedGraph, iterations: int = 7,
     with _loop(adj.sparkSession, n, prepared.width):
         for k in range(warmups + iterations):
             t0 = time.time()
-            nc = _step(adj, teleport, 1.0 / n, contrib).localCheckpoint(eager=True)
-            if contrib is not None:
-                # blocking: the default async unpersist lets old checkpoint
-                # blocks linger while the next iteration writes new ones —
-                # storage pressure + eviction showed up as 2-3x iteration-
-                # time variance in the scaling bench
-                contrib.unpersist(blocking=True)
+            nc = materialize(_step(adj, teleport, 1.0 / n, contrib))
+            release(contrib)
             contrib = nc
             if k >= warmups:
                 times.append(time.time() - t0)
-    contrib.unpersist()
+    release(contrib)
     return times
 
 
@@ -324,9 +303,8 @@ def pagerank_fixed(
         return edges.sparkSession.createDataFrame([], "id long, score double")
     teleport = (1.0 - damping) / n
 
-    pinned = _Pinned()
     with _loop(adj.sparkSession, n, prepared.width):
-        contrib, _ = _contrib_loop(adj, teleport, 1.0 / n, iterations, pinned)
+        contrib, _ = _contrib_loop(adj, teleport, 1.0 / n, iterations)
     return _finalize(vertices, contrib, teleport)
 
 
@@ -350,24 +328,22 @@ def pagerank_weighted_fixed(
     only the O(distinct dst) partial sums.
 
     Measured ablation (22.9M edges / 4M vertices, local[32]): a weighted
-    CSR array loop (``operators/blocks.weighted_adjacency_table`` with
+    CSR array loop (aligned ``ds``/``ws`` adjacency arrays with
     damping·w/Σw folded in, explode-of-zipped-arrays fan-out) runs the SAME
     ~7-8.6 s/iteration as this edge join — the unweighted loop's 4× array
     win comes from exploding bare long arrays; zipping a weight alongside
     puts a struct in the explode and gives the gain back — while its 18 s
-    build never amortizes.  Edge form kept; the weighted adjacency builder
-    remains exported for block-level consumers.
+    build never amortizes.  Edge form kept.
     """
     spark = edges.sparkSession
     npart = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     e = edges.groupBy("i", "j").agg(F.sum("v").alias("w"))
     ow = e.groupBy("i").agg(F.sum("w").alias("ow"))
-    trans = (
+    trans = materialize(
         e.join(ow, "i")
         .select("i", "j",
                 (F.lit(damping) * F.col("w") / F.col("ow")).alias("p"))
         .repartition(npart, "i")
-        .localCheckpoint(eager=True)
     )
     vertices = (
         e.select(F.col("i").alias("id"))
@@ -391,13 +367,12 @@ def pagerank_weighted_fixed(
                  * F.col("p")).alias("x"))
         return src.groupBy(F.col("j").alias("i")).agg(F.sum("x").alias("c"))
 
-    pinned = _Pinned()
     with _loop(spark, n):
-        contrib, _ = _contrib_loop(None, teleport, r0, iterations, pinned,
+        contrib, _ = _contrib_loop(None, teleport, r0, iterations,
                                    step_fn=step_fn)
-    out = _finalize(vertices, contrib, teleport)
-    trans.unpersist()
-    return out
+    # contrib is pinned, so the lazy result no longer reads trans
+    release(trans)
+    return _finalize(vertices, contrib, teleport)
 
 
 def pagerank_incremental(
@@ -438,9 +413,7 @@ def pagerank_incremental(
         .select("i", (F.coalesce(F.col("_s0"), F.lit(1.0 / n))
                       - F.lit(teleport)).alias("c"))
     )
-    pinned = _Pinned()
     with _loop(adj.sparkSession, n, prepared.width):
-        contrib0 = pinned.pin(contrib0)
-        contrib, _ = _contrib_loop(adj, teleport, 1.0 / n, iterations, pinned,
-                                   contrib=contrib0)
+        contrib, _ = _contrib_loop(adj, teleport, 1.0 / n, iterations,
+                                   contrib=materialize(contrib0))
     return _finalize(vertices, contrib, teleport)

@@ -39,8 +39,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.iterate import loop_shuffle_width, materialize
-from .centrality import _Pin
+from ..plans.iterate import loop_shuffle_width, materialize, release
 from .pagerank import pagerank_fixed
 
 
@@ -68,7 +67,6 @@ def _seeded_fixed(
         seeds.select(F.col("id").alias("i"),
                      F.lit((1.0 - damping) * seed_weight).alias("p"))
     )
-    pin = _Pin()
     r = tel.select("i", F.lit(seed_weight).alias("v"))
     with loop_shuffle_width(edges.sparkSession, max(et.count(), 1)):
         for _ in range(iterations):
@@ -78,12 +76,13 @@ def _seeded_fixed(
                 .groupBy("i")
                 .agg(F.sum("w").alias("c"))
             )
-            (r,) = pin.pin(
+            prev, r = r, materialize(
                 tel.join(contrib, "i", "full_outer")
                 .select("i", (F.coalesce(F.col("p"), F.lit(0.0))
                               + F.coalesce(F.col("c"), F.lit(0.0))).alias("v"))
             )
-    et.unpersist()
+            release(prev)
+    release(et)
     return r.select(F.col("i").alias("id"), F.col("v").alias("score"))
 
 

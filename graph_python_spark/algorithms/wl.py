@@ -12,7 +12,7 @@ symmetrized edge list on the neighbor key plus ONE groupBy(vertex)
 collecting the neighbor-label list (map-side partials; the list is
 sorted array-locally, and its length is the vertex degree — the same
 bounded-hub-row caveat as the adjacency cache, see
-``operators/blocks.py``).  Labels are md5 hex — engine-replayable, so a
+``operators/blocks.adjacency_table``).  Labels are md5 hex — engine-replayable, so a
 fixed-round unroll is expressible in ANSI SQL for the oracle.
 """
 

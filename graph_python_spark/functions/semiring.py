@@ -8,19 +8,21 @@ parametrized by a ``Semiring`` carrying:
   * ``mul(a, b) -> Column``     the ⊗ applied to joined edge/vector values
   * ``add_agg(c) -> Column``    the ⊕ as a Spark aggregate (partial+final
                                 aggregation == map-side combine, free)
-  * ``identity``                the ⊕ identity (needed by blocked kernels)
+  * ``identity``                the ⊕ identity as a Python value (the
+                                kernels treat absent entries as the
+                                identity and never read it)
 
-All fast-path semirings stay JVM-side (whole-stage codegen); the blocked-CSR
-kernel path (operators/blocks.py) additionally knows how to evaluate the same
-semiring vectorized in numpy inside Arrow UDFs.
+Every semiring, built-in or registered, has one evaluation path: JVM Column
+expressions under whole-stage codegen.  SpMV is one equi-join followed by a
+group-by ⊕, so ``mxv``/``vxm``/``mxm`` need nothing else from a semiring.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import math
+from dataclasses import dataclass
 from typing import Any, Callable
 
-import numpy as np
 from pyspark.sql import Column
 
 from graph_python_spark.functions.ops import Monoid, binary, monoid
@@ -31,9 +33,6 @@ class Semiring:
     name: str
     add: Monoid
     mul: Callable[[Column, Column], Column]
-    # numpy twins for the blocked/Arrow kernel path
-    np_add: Any = None          # ufunc with .reduceat / .reduce
-    np_mul: Any = None          # callable (a, b) -> ndarray
     identity: Any = None
 
     def add_agg(self, c: Column) -> Column:
@@ -43,23 +42,11 @@ class Semiring:
         return f"semiring.{self.name}"
 
 
-def _np_first(a, b):
-    return np.broadcast_to(a, np.broadcast_shapes(np.shape(a), np.shape(b)))
-
-
-def _np_second(a, b):
-    return np.broadcast_to(b, np.broadcast_shapes(np.shape(a), np.shape(b)))
-
-
-def _np_pair(a, b):
-    return np.ones(np.broadcast_shapes(np.shape(a), np.shape(b)))
-
-
 _REGISTRY: dict[str, Semiring] = {}
 
 
-def _register(name: str, add: Monoid, mul, np_add, np_mul, identity) -> Semiring:
-    sr = Semiring(name, add, mul, np_add, np_mul, identity)
+def _register(name: str, add: Monoid, mul, identity) -> Semiring:
+    sr = Semiring(name, add, mul, identity)
     _REGISTRY[name] = sr
     return sr
 
@@ -76,9 +63,9 @@ class _SemiringNamespace:
     def __getitem__(self, name: str) -> Semiring:
         return _REGISTRY[name]
 
-    def register(self, name: str, add: Monoid, mul, np_add=None, np_mul=None, identity=None) -> Semiring:
+    def register(self, name: str, add: Monoid, mul, identity=None) -> Semiring:
         """UDF-ish extension point (reference: ``Semiring.register_new``)."""
-        return _register(name, add, mul, np_add, np_mul, identity)
+        return _register(name, add, mul, identity)
 
     def names(self):
         return sorted(_REGISTRY)
@@ -87,40 +74,37 @@ class _SemiringNamespace:
 semiring = _SemiringNamespace()
 
 # --- the workhorse semirings (reference: GrB/GxB catalog) -------------------
-_register("plus_times", monoid.plus, binary.times, np.add, np.multiply, 0)
-_register("plus_plus", monoid.plus, binary.plus, np.add, np.add, 0)
-_register("plus_first", monoid.plus, binary.first, np.add, _np_first, 0)
-_register("plus_second", monoid.plus, binary.second, np.add, _np_second, 0)  # PageRank SpMV
-_register("plus_pair", monoid.plus, binary.pair, np.add, _np_pair, 0)        # triangle count
-_register("plus_min", monoid.plus, binary.min, np.add, np.minimum, 0)
-_register("plus_max", monoid.plus, binary.max, np.add, np.maximum, 0)
-_register("min_plus", monoid.min, binary.plus, np.minimum, np.add, np.inf)   # SSSP
-_register("min_times", monoid.min, binary.times, np.minimum, np.multiply, np.inf)
-_register("min_first", monoid.min, binary.first, np.minimum, _np_first, np.inf)  # parent BFS
-_register("min_second", monoid.min, binary.second, np.minimum, _np_second, np.inf)  # FastSV hook
-_register("min_max", monoid.min, binary.max, np.minimum, np.maximum, np.inf)
-_register("max_plus", monoid.max, binary.plus, np.maximum, np.add, -np.inf)
-_register("max_times", monoid.max, binary.times, np.maximum, np.multiply, -np.inf)
-_register("max_first", monoid.max, binary.first, np.maximum, _np_first, -np.inf)
-_register("max_second", monoid.max, binary.second, np.maximum, _np_second, -np.inf)
-_register("max_min", monoid.max, binary.min, np.maximum, np.minimum, -np.inf)
-_register("lor_land", monoid.lor, binary.land, np.logical_or, np.logical_and, False)  # level BFS
-_register("land_lor", monoid.land, binary.lor, np.logical_and, np.logical_or, True)
-_register("lxor_land", monoid.lxor, binary.land, np.logical_xor, np.logical_and, False)
-_register("any_pair", monoid.any, binary.pair, np.maximum, _np_pair, None)   # reachability
-_register("any_first", monoid.any, binary.first, np.maximum, _np_first, None)
-_register("any_second", monoid.any, binary.second, np.maximum, _np_second, None)
-_register("times_times", monoid.times, binary.times, np.multiply, np.multiply, 1)
-_register("times_plus", monoid.times, binary.plus, np.multiply, np.add, 1)
+_register("plus_times", monoid.plus, binary.times, 0)
+_register("plus_plus", monoid.plus, binary.plus, 0)
+_register("plus_first", monoid.plus, binary.first, 0)
+_register("plus_second", monoid.plus, binary.second, 0)  # PageRank SpMV
+_register("plus_pair", monoid.plus, binary.pair, 0)  # triangle count
+_register("plus_min", monoid.plus, binary.min, 0)
+_register("plus_max", monoid.plus, binary.max, 0)
+_register("min_plus", monoid.min, binary.plus, math.inf)  # SSSP
+_register("min_times", monoid.min, binary.times, math.inf)
+_register("min_first", monoid.min, binary.first, math.inf)  # parent BFS
+_register("min_second", monoid.min, binary.second, math.inf)  # FastSV hook
+_register("min_max", monoid.min, binary.max, math.inf)
+_register("max_plus", monoid.max, binary.plus, -math.inf)
+_register("max_times", monoid.max, binary.times, -math.inf)
+_register("max_first", monoid.max, binary.first, -math.inf)
+_register("max_second", monoid.max, binary.second, -math.inf)
+_register("max_min", monoid.max, binary.min, -math.inf)
+_register("lor_land", monoid.lor, binary.land, False)  # level BFS
+_register("land_lor", monoid.land, binary.lor, True)
+_register("lxor_land", monoid.lxor, binary.land, False)
+_register("any_pair", monoid.any, binary.pair, None)  # reachability
+_register("any_first", monoid.any, binary.first, None)
+_register("any_second", monoid.any, binary.second, None)
+_register("times_times", monoid.times, binary.times, 1)
+_register("times_plus", monoid.times, binary.plus, 1)
 
-# complex FC64 semiring (SURVEY §1.2 struct<re,im> mapping): DataFrame path
-# only — the blocked/Arrow kernel path needs a flat numeric dtype, so the
-# numpy twins stay None and kernels fall back to the exchange-based plan.
-_register("plus_times_fc64", monoid.cplus, binary.ctimes, None, None, (0.0, 0.0))
+# complex FC64 semiring (SURVEY §1.2 struct<re,im> mapping).
+_register("plus_times_fc64", monoid.cplus, binary.ctimes, (0.0, 0.0))
 # FC32 twin: identical algebra at complex64 width; the monoid casts its
 # component sums back to float so FC32 storage survives mxm/reduce.
-_register("plus_times_fc32", monoid.cplus_fc32, binary.ctimes, None, None,
-          (0.0, 0.0))
+_register("plus_times_fc32", monoid.cplus_fc32, binary.ctimes, (0.0, 0.0))
 
 
 class _NumpySemiringResolver:
@@ -149,7 +133,7 @@ class _NumpySemiringResolver:
             mn, bn = name[:cut], name[cut + 1:]
             if mn in _m.numpy and bn in _b.numpy:
                 sr = Semiring(f"numpy.{name}", _m.numpy[mn], _b.numpy[bn],
-                              None, None, _m.numpy[mn].identity)
+                              _m.numpy[mn].identity)
                 self._cache[name] = sr
                 return sr
         raise AttributeError(f"unknown numpy semiring {name!r}")

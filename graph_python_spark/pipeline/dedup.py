@@ -81,14 +81,6 @@ def lsh_bands(signatures: DataFrame, k: int = 8, bands: int = 4) -> DataFrame:
     )
 
 
-def doc_token_sets(docs: DataFrame) -> DataFrame:
-    """(doc_id, toks: sorted array<string>, sz) — one row per document."""
-    return doc_tokens(docs).groupBy("doc_id").agg(
-        F.sort_array(F.collect_list("tok")).alias("toks"),
-        F.count("*").cast("long").alias("sz"),
-    )
-
-
 def minhash_lsh_pairs(docs: DataFrame, k: int = 8, bands: int = 4,
                       threshold_num: int = 1, threshold_den: int = 2) -> DataFrame:
     """Near-duplicate pairs via MinHash banding, verified with EXACT token

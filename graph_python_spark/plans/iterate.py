@@ -31,6 +31,25 @@ def materialize(df: DataFrame, storage: str = "local") -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
+def release(*dfs: Optional[DataFrame]) -> None:
+    """Free the blocks of frames pinned by :func:`materialize`.
+
+    ``DataFrame.unpersist()`` does nothing to a localCheckpoint: its RDD
+    is not in the cache manager, so the blocks stay until the session
+    ends.  This unpersists the checkpoint RDD under a pinned frame's
+    ``LogicalRDD`` plan directly and leaves any other frame alone (a
+    cached or lazy frame, a state read back from parquet, or None for a
+    loop's not-yet-existing previous state).  Call it only after the
+    frame's last read: a later read fails with
+    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND."""
+    for df in dfs:
+        if df is None:
+            continue
+        plan = df._jdf.logicalPlan()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+
+
 from contextlib import contextmanager  # noqa: E402
 
 

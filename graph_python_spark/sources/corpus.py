@@ -9,7 +9,7 @@ subset of rows regenerates identically at any parallelism) and distributed
 (mapInPandas over spark.range — data gen is not the query hot path).  The
 ``import`` lines inside ``content`` define the link graph; out-degree is
 Zipf(a≈2)-skewed with explicit hub files (~1% of edges each) to exercise
-the salted-repartition path.
+power-law degree skew in every link-graph workload built from it.
 
 Edge extraction is pure DataFrame ops (regexp_extract_all / explode / join
 against the vertex dictionary) and NEVER mutates content — the per-row

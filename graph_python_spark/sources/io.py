@@ -228,7 +228,7 @@ def vector_from_dense(spark: SparkSession, arr, dtype: str = "double") -> Vector
 # The pydata `sparse` package is optional (absent in this sandbox): imports
 # are lazy and the conversion itself is the canonical COO path, so these are
 # thin driver-side shims for notebook-scale interchange — the engine-scale
-# interchange formats remain parquet / Arrow blocks (operators/blocks.py).
+# interchange formats remain parquet / Arrow record batches (to_arrow).
 def from_pydata_sparse(spark: SparkSession, arr, dtype: str = "double"):
     """Build a MatrixFrame / VectorFrame from a pydata ``sparse`` array
     (COO/GCXS/DOK — anything ``sparse.as_coo`` accepts).  1-D arrays map

@@ -1,93 +1,4 @@
-"""Blocked/salted kernels: differential tests vs the join-based SpMV and
-skew fixtures (SURVEY.md §7 M2/M5)."""
-
-import pytest
-from pyspark.sql import functions as F
-
-from graph_python_spark import MatrixFrame, VectorFrame, semiring
-from graph_python_spark.operators.blocks import (
-    blocked_csr_shards,
-    degree_skew_stats,
-    spmv_blocked,
-    spmv_salted,
-)
-from tests.fixtures import A7_COLS, A7_N, A7_ROWS, A7_VALS, V7_IDX, V7_N, V7_VALS
-
-
-@pytest.fixture(scope="module")
-def A(spark):
-    return MatrixFrame.from_coo(spark, A7_ROWS, A7_COLS, A7_VALS, A7_N, A7_N)
-
-
-@pytest.fixture(scope="module")
-def x(spark):
-    return VectorFrame.from_coo(spark, V7_IDX, [float(v) for v in V7_VALS], V7_N)
-
-
-@pytest.fixture(scope="module")
-def zipf_edges(spark):
-    """Hub-skewed deterministic graph: vertex 0 receives 40% of all edges."""
-    rows = []
-    for s in range(200):
-        rows.append((s + 1, 0, 1.0))          # hub in-edges
-        rows.append((s, (s * 7 + 1) % 300, 1.0))
-        rows.append((s, (s * 13 + 5) % 300, 1.0))
-    return (
-        spark.createDataFrame(rows, "i long, j long, v double")
-        .groupBy("i", "j").agg(F.sum("v").alias("v"))
-    )
-
-
-def test_spmv_blocked_matches_join_kernel(A, x):
-    for sr in [semiring.plus_times, semiring.min_plus, semiring.max_second]:
-        want = A.mxv(x, sr).to_dict()
-        got = spmv_blocked(A.df, x, sr, n_blocks=3).to_dict()
-        assert got == want, sr.name
-
-
-def test_spmv_blocked_many_blocks(A, x):
-    # more blocks than rows: degenerate single-row blocks still correct
-    want = A.mxv(x, semiring.plus_times).to_dict()
-    got = spmv_blocked(A.df, x, semiring.plus_times, n_blocks=64).to_dict()
-    assert got == want
-
-
-def test_spmv_salted_exactness(zipf_edges, spark):
-    x = VectorFrame(
-        zipf_edges.select("i").distinct()
-        .select("i", ((F.col("i") % 11) + 1.0).alias("v"))
-    )
-    m = MatrixFrame(zipf_edges)
-    # unsalted reference: vxm = aggregate by dst
-    want = x.vxm(m, semiring.plus_times).to_dict()
-    got = spmv_salted(zipf_edges, x, semiring.plus_times, n_salts=8).to_dict()
-    assert got.keys() == want.keys()
-    for k in want:
-        assert got[k] == pytest.approx(want[k], rel=1e-12)
-    # min semiring: salting must also be exact for non-plus monoids
-    want = x.vxm(m, semiring.min_plus).to_dict()
-    got = spmv_salted(zipf_edges, x, semiring.min_plus, n_salts=8).to_dict()
-    assert got == want
-
-
-def test_degree_skew_stats(zipf_edges):
-    stats = degree_skew_stats(zipf_edges, "j")
-    assert stats["max_degree"] == 200  # the hub
-    assert stats["skew_ratio"] > 50
-
-
-def test_blocked_csr_shards_roundtrip(A, spark):
-    shards = blocked_csr_shards(A.df, n_blocks=3)
-    rows = shards.collect()
-    # every row shard sorted by j; flattening reproduces the matrix exactly
-    flat = {}
-    for r in rows:
-        assert r["block"] == r["i"] % 3
-        assert list(r["cols"]) == sorted(r["cols"])
-        for jj, vv in zip(r["cols"], r["vals"]):
-            flat[(r["i"], jj)] = vv
-    want = {(i, j): float(v) for i, j, v in zip(A7_ROWS, A7_COLS, A7_VALS)}
-    assert flat == want
+"""Adjacency table: hub chunking and PageRank over chunked hubs."""
 
 
 def test_adjacency_table_hub_chunking(spark):

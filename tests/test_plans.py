@@ -211,3 +211,33 @@ def test_pagerank_step_one_exchange(spark):
         assert "ShuffledHashJoin" in nodes, (rows, nodes)
     prepared.adj.unpersist()
     prepared.vertices.unpersist()
+
+
+@pytest.mark.parametrize("algo", ["pagerank.pagerank_fixed",
+                                  "centrality.hits_fixed"])
+def test_loops_release_pinned_state(spark, algo):
+    """Each loop frees an iteration's pinned state after its last read, so
+    the persistent RDDs a call leaves behind do not grow with the
+    iteration count (``DataFrame.unpersist`` never frees a
+    localCheckpoint).  Collecting the result proves nothing it still
+    reads was freed."""
+    import importlib
+
+    module, name = algo.split(".")
+    run = getattr(importlib.import_module(
+        f"graph_python_spark.algorithms.{module}"), name)
+    sc = spark.sparkContext
+    left = {}
+    for iterations in (2, 8):
+        # a fresh frame per run: a cached plan shared with the other run
+        # would hide its cache() from the count
+        e = spark.createDataFrame([(0, 1), (0, 2), (1, 2), (2, 0), (3, 2)],
+                                  "i long, j long")
+        # RDD ids only grow: count the call's own RDDs, whatever the
+        # context cleaner frees of earlier tests' meanwhile
+        first = sc.parallelize([0]).id()
+        out = run(e, iterations=iterations)
+        left[iterations] = sum(
+            1 for k in sc._jsc.getPersistentRDDs().keys() if k > first)
+        assert out.collect()
+    assert left[2] == left[8], left

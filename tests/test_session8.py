@@ -424,25 +424,6 @@ def test_vertex_features_differential(spark):
         assert abs(r.coeff - want) < 1e-9
 
 
-def test_weighted_adjacency_table_dups_and_chunks(spark):
-    from graph_python_spark.operators.blocks import weighted_adjacency_table
-
-    triples = [(1, 5, 2.0), (1, 5, 3.0), (1, 2, 1.0), (1, 9, 4.0),
-               (2, 1, 1.5), (2, 1, 0.5)]
-    e = spark.createDataFrame(triples, "s long, d long, w double")
-    # max_chunk=2 forces vertex 1 (deg 3) into two chunk rows
-    rows = weighted_adjacency_table(e, max_chunk=2, partitions=2).collect()
-    by_s = {}
-    for r in rows:
-        by_s.setdefault(r.s, []).append(r)
-    v1 = sorted(by_s[1], key=lambda r: r.ds[0])
-    assert len(v1) == 2 and all(r.deg == 3 and abs(r.tw - 10.0) < 1e-12 for r in v1)
-    flat = [(d, w) for r in v1 for d, w in zip(r.ds, r.ws)]
-    assert flat == [(2, 1.0), (5, 5.0), (9, 4.0)]
-    (v2,) = by_s[2]
-    assert list(v2.ds) == [1] and list(v2.ws) == [2.0] and v2.deg == 1
-
-
 # ---------------------------------------------------------------------------
 # structural properties
 # ---------------------------------------------------------------------------
