@@ -39,6 +39,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graph_python_spark.operators.blocks import simple, vertex_ids
 from graph_python_spark.plans.iterate import iterative, loop_shuffle_width, materialize
 
 
@@ -76,8 +77,7 @@ def anf_sketches(
       to 1e-6.  The ball includes v itself.
     """
     e = edges.select(F.col("i").alias("s"), F.col("j").alias("d")).distinct()
-    verts = (e.select(F.col("s").alias("id"))
-             .unionByName(e.select(F.col("d").alias("id"))).distinct())
+    verts = vertex_ids(e, "s", "d")
     n_verts = verts.count()
 
     with loop_shuffle_width(edges.sparkSession, n_verts) as width:
@@ -140,8 +140,7 @@ def neighborhood_function(
     no driver-side collect anywhere.
     """
     e = edges.select(F.col("i").alias("s"), F.col("j").alias("d")).distinct()
-    verts = (e.select(F.col("s").alias("id"))
-             .unionByName(e.select(F.col("d").alias("id"))).distinct())
+    verts = vertex_ids(e, "s", "d")
     n_verts = verts.count()
 
     def _total(state: DataFrame, r: int) -> DataFrame:
@@ -242,13 +241,9 @@ def hyperball_harmonic(
     ``algorithms/centrality.harmonic_sampled`` cannot take past a few
     thousand sources.
     """
-    if reverse:
-        e = edges.select(F.col("j").alias("s"), F.col("i").alias("d"))
-    else:
-        e = edges.select(F.col("i").alias("s"), F.col("j").alias("d"))
-    e = e.filter(F.col("s") != F.col("d")).distinct()
-    verts = (e.select(F.col("s").alias("id"))
-             .unionByName(e.select(F.col("d").alias("id"))).distinct())
+    src, dst = ("j", "i") if reverse else ("i", "j")
+    e = simple(edges, src, dst).toDF("s", "d")
+    verts = vertex_ids(e, "s", "d")
     n_verts = verts.count()
 
     def _est(state: DataFrame) -> DataFrame:

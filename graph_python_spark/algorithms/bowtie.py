@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_python_spark.algorithms.scc import strongly_connected_components
+from graph_python_spark.operators.blocks import simple, vertex_ids
 from graph_python_spark.plans.iterate import (iterative, loop_shuffle_width,
                                               materialize)
 
@@ -106,9 +107,7 @@ def bowtie_decomposition(
     TENDRIL, DISCONNECTED}; deterministic (largest SCC, ties by min id).
     """
     spark = edges.sparkSession
-    eb = (edges.select(F.col("i").alias("s"), F.col("j").alias("d"))
-          .filter(F.col("s") != F.col("d"))
-          .dropDuplicates(["s", "d"]))
+    eb = simple(edges).toDF("s", "d")
     if partitions is not None:
         eb = eb.repartition(partitions, "s")
     eb = materialize(eb)
@@ -122,11 +121,7 @@ def bowtie_decomposition(
                                F.col("d").alias("s"), F.col("s").alias("d")))
         .repartition("tag", "s")
     )
-    verts = materialize(
-        eb.select(F.col("s").alias("id"))
-        .unionByName(eb.select(F.col("d").alias("id")))
-        .distinct()
-    )
+    verts = materialize(vertex_ids(eb, "s", "d"))
     n_verts = verts.count()
 
     labels, _rounds = strongly_connected_components(

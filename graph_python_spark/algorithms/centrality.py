@@ -31,6 +31,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graph_python_spark.operators.blocks import vertex_ids
 from graph_python_spark.plans.iterate import (iterative, loop_shuffle_width,
                                               materialize, release)
 
@@ -61,11 +62,7 @@ def hits_fixed(
     # iterations, which is why it wins there.)
     spark = edges.sparkSession
     raw = edges.select("i", "j")
-    vertices = materialize(
-        raw.select(F.col("i").alias("id"))
-        .unionByName(raw.select(F.col("j").alias("id")))
-        .distinct()
-    )
+    vertices = materialize(vertex_ids(raw))
     n = vertices.count()
     auth = None
     with loop_shuffle_width(spark, n) as width:
@@ -78,19 +75,20 @@ def hits_fixed(
         ebj = materialize(ebi.repartition(w, "j"))
         h = vertices.select(F.col("id").alias("i"), F.lit(1.0).alias("v"))
         for _ in range(iterations):
-            new_auth = (
+            # pin the first half-step, then build the second from the pin,
+            # so each round computes new_auth once
+            new_auth = materialize(
                 ebi.join(h, "i")
                 .groupBy(F.col("j"))
                 .agg(F.sum("v").alias("v"))
             )
-            new_h = (
+            new_h = materialize(
                 ebj.join(new_auth, "j")
                 .groupBy(F.col("i"))
                 .agg(F.sum("v").alias("v"))
             )
-            prev = (h, auth)
-            h, auth = materialize(new_h), materialize(new_auth)
-            release(*prev)
+            release(h, auth)
+            h, auth = new_h, new_auth
     # h/auth are pinned (eager localCheckpoint), so the pinned edge copies
     # are no longer needed by the lazy result — release their blocks
     release(ebi, ebj)
@@ -344,11 +342,7 @@ def katz_fixed(
     """
     spark = edges.sparkSession
     raw = edges.select("i", "j")
-    vertices = materialize(
-        raw.select(F.col("i").alias("id"))
-        .unionByName(raw.select(F.col("j").alias("id")))
-        .distinct()
-    )
+    vertices = materialize(vertex_ids(raw))
     n = vertices.count()
     with loop_shuffle_width(spark, n) as width:
         w = partitions if partitions is not None else width
@@ -396,11 +390,7 @@ def eigenvector_fixed(
     """
     spark = edges.sparkSession
     raw = edges.select("i", "j")
-    vertices = materialize(
-        raw.select(F.col("i").alias("id"))
-        .unionByName(raw.select(F.col("j").alias("id")))
-        .distinct()
-    )
+    vertices = materialize(vertex_ids(raw))
     n = vertices.count()
     with loop_shuffle_width(spark, n) as width:
         w = partitions if partitions is not None else width
@@ -555,11 +545,7 @@ def salsa_fixed(
     """
     spark = edges.sparkSession
     raw = edges.select("i", "j")
-    vertices = materialize(
-        raw.select(F.col("i").alias("id"))
-        .unionByName(raw.select(F.col("j").alias("id")))
-        .distinct()
-    )
+    vertices = materialize(vertex_ids(raw))
     n = vertices.count()
     with loop_shuffle_width(spark, n) as width:
         w = partitions if partitions is not None else width
@@ -579,19 +565,19 @@ def salsa_fixed(
         a = vertices.select(F.col("id").alias("j"), F.lit(1.0).alias("v"))
         h = None
         for _ in range(iterations):
-            new_h = (
+            # first half-step pinned once; the second reads the pin
+            new_h = materialize(
                 ebj.join(a, "j")
                 .groupBy(F.col("i"))
                 .agg(F.sum(F.col("v") * F.col("inv_din")).alias("v"))
             )
-            new_a = (
+            new_a = materialize(
                 ebi.join(new_h, "i")
                 .groupBy(F.col("j"))
                 .agg(F.sum(F.col("v") * F.col("inv_dout")).alias("v"))
             )
-            prev = (h, a)
-            h, a = materialize(new_h), materialize(new_a)
-            release(*prev)
+            release(h, a)
+            h, a = new_h, new_a
     release(ebi, ebj)
     sums = h.agg(F.sum("v")).crossJoin(a.agg(F.sum("v"))).first()
     hsum, asum = float(sums[0]), float(sums[1])

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_python_spark.algorithms.mis import PRIO_MOD, PRIO_MULT
+from graph_python_spark.operators.blocks import symmetric
 from graph_python_spark.plans.iterate import (iterative, loop_shuffle_width,
                                               materialize)
 
@@ -69,17 +70,7 @@ def greedy_coloring(
     empties the uncolored set).
     """
     spark = edges.sparkSession
-    fwd = edges.select(F.col("i").alias("s"), F.col("j").alias("d"))
-    sym = (
-        fwd.unionByName(fwd.select(F.col("d").alias("s"),
-                                   F.col("s").alias("d")))
-        .filter(F.col("s") != F.col("d"))
-    )
-    if partitions is not None:
-        sym = sym.repartition(partitions, "s")
-    else:
-        sym = sym.repartition("s")
-    full = materialize(sym.dropDuplicates(["s", "d"]))
+    full = materialize(symmetric(edges, partitions=partitions))
     n_edges = full.count()
     cur = full  # residual: edges whose BOTH endpoints are uncolored
     unc = materialize(full.select(F.col("s").alias("id")).distinct())

@@ -21,13 +21,9 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graph_python_spark.operators.blocks import mirror, symmetric, vertex_ids
 from graph_python_spark.plans.iterate import (IterationState, materialize,
                                               iterative, loop_shuffle_width)
-
-
-def _symmetrize(edges: DataFrame) -> DataFrame:
-    fwd = edges.select(F.col("i").alias("s"), F.col("j").alias("d"))
-    return fwd.unionByName(fwd.select(F.col("d").alias("s"), F.col("s").alias("d"))).distinct()
 
 
 @iterative
@@ -38,11 +34,13 @@ def connected_components(
     partitions: Optional[int] = None,
     checkpoint: Optional[IterationState] = None,
 ) -> tuple[DataFrame, int]:
-    """Returns (labels(id, component), rounds). component = min id in component."""
+    """Returns (labels(id, component), rounds). component = min id in component.
+
+    The adjacency is built over ``mirror(edges)``: its self-loops keep a
+    vertex whose only edge is a self-loop, and the table dedupes itself."""
     from graph_python_spark.operators.blocks import adjacency_table
 
-    esym = _symmetrize(edges)
-    adj = adjacency_table(esym, "s", "d", partitions)
+    adj = adjacency_table(mirror(edges), "i", "j", partitions)
     if vertices is None:
         vertices = adj.select(F.col("s").alias("id")).distinct()  # s covers all; distinct: hub rows may be chunked
     vertices = vertices.select("id").cache()
@@ -111,9 +109,9 @@ def cc_fixed_rounds(edges: DataFrame, vertices: Optional[DataFrame] = None,
                     rounds: int = 12) -> DataFrame:
     """Exactly ``rounds`` hook+shortcut rounds (no convergence action) —
     deterministic output for the DuckDB-checked correctness query."""
-    esym = _symmetrize(edges).cache()
+    esym = symmetric(edges).cache()
     if vertices is None:
-        vertices = esym.select(F.col("s").alias("id")).distinct()
+        vertices = vertex_ids(edges)
     f = vertices.select(F.col("id").alias("i"), F.col("id").alias("v"))
     with loop_shuffle_width(edges.sparkSession, f.count()):
         return _cc_rounds(esym, f, rounds)
@@ -152,8 +150,8 @@ def cc_incremental(edges: DataFrame, init_labels: DataFrame,
 
     Same plan as ``cc_fixed_rounds`` plus one O(V) init join.
     """
-    esym = _symmetrize(edges).cache()
-    verts = esym.select(F.col("s").alias("id")).distinct()
+    esym = symmetric(edges).cache()
+    verts = vertex_ids(edges)
     # dedup defensively (min keeps the lattice-safe lower label): a
     # duplicate id in the init frame would duplicate the vertex row
     # through the left join and corrupt every round
@@ -186,8 +184,8 @@ def bipartite_sides(edges: DataFrame, cc_rounds: int = 12,
 
     Returns (id, component, side) with side ∈ {0, 1}.
     """
-    esym = _symmetrize(edges).cache()
-    vertices = esym.select(F.col("s").alias("id")).distinct()
+    esym = symmetric(edges).cache()
+    vertices = vertex_ids(edges)
     f = vertices.select(F.col("id").alias("i"), F.col("id").alias("v"))
     with loop_shuffle_width(edges.sparkSession, f.count()):
         comp = materialize(_cc_rounds(esym, f, cc_rounds))

@@ -21,8 +21,9 @@ which this loop iterates.
 Scale shape: the vertex state only shrinks; each round is (1) a degree
 groupBy on the live symmetric relation, (2) two 1-row count folds
 broadcast into the predicate, (3) a semi-join shrinking the edge state.
-The symmetric relation is re-partitioned on its join key once and the
-per-round exchanges ride on it (the PageRank adjacency pattern).
+The symmetric relation (``operators/blocks.symmetric``) comes out of its
+one dedupe shuffle partitioned on its join key, and the per-round
+exchanges ride on it (the PageRank adjacency pattern).
 """
 
 from __future__ import annotations
@@ -33,6 +34,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graph_python_spark.operators.blocks import symmetric
 from graph_python_spark.plans.iterate import (iterative, loop_shuffle_width,
                                               materialize)
 
@@ -63,19 +65,11 @@ def densest_subgraph(
     if p < 0 or q <= 0:
         raise ValueError("epsilon must be a non-negative Fraction")
 
-    sym = (
-        edges.select(F.least("i", "j").alias("a"),
-                     F.greatest("i", "j").alias("b"))
-        .filter(F.col("a") != F.col("b")).distinct()
-    )
-    both = (sym.select(F.col("a").alias("s"), F.col("b").alias("d"))
-            .unionByName(
-                sym.select(F.col("b").alias("s"), F.col("a").alias("d"))))
     spark = edges.sparkSession
-    n0 = both.select("s").distinct().count()
+    n0 = symmetric(edges).select("s").distinct().count()
 
     with loop_shuffle_width(spark, max(n0, 1)) as width:
-        live = materialize(both.repartition(partitions or width, "s"))
+        live = materialize(symmetric(edges, partitions=partitions or width))
         rounds_rows = []
         best = None          # (round, density_fraction, state)
         peeled_dry = False   # loop reached the empty graph (true fixpoint)

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..pipeline.sampling import _MOD, _P1
+from ..operators.blocks import simple
 from ..plans.iterate import loop_shuffle_width, materialize
 
 
@@ -67,12 +68,7 @@ def influence_spread(
     oracles it exactly.
     """
     spark = edges.sparkSession
-    e = (
-        edges.select(F.col("i").cast("long").alias("i"),
-                     F.col("j").cast("long").alias("j"))
-        .filter(F.col("i") != F.col("j"))
-        .distinct()
-    )
+    e = simple(edges.select(F.col("i").cast("long"), F.col("j").cast("long")))
     e = materialize(e.repartition(
         int(spark.conf.get("spark.sql.shuffle.partitions")), "i"))
 

@@ -40,25 +40,9 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graph_python_spark.operators.blocks import mirror, symmetric
 from graph_python_spark.plans.iterate import (iterative, loop_shuffle_width,
                                               materialize)
-
-
-def _sym_distinct(edges: DataFrame, partitions: Optional[int]) -> DataFrame:
-    """Undirected simple edge set partitioned on ``s``: symmetrize, drop
-    self-loops, dedup.  One shuffle total — hash(s) already co-locates every
-    (s, d) duplicate, so the dropDuplicates after the repartition needs no
-    second exchange, and the result's partitioning feeds the loop's
-    exchange-free degree aggregation."""
-    fwd = edges.select(F.col("i").alias("s"), F.col("j").alias("d"))
-    sym = fwd.unionByName(
-        fwd.select(F.col("d").alias("s"), F.col("s").alias("d"))
-    ).filter(F.col("s") != F.col("d"))
-    if partitions is not None:
-        sym = sym.repartition(partitions, "s")
-    else:
-        sym = sym.repartition("s")
-    return sym.dropDuplicates(["s", "d"])
 
 
 @iterative
@@ -97,7 +81,7 @@ def kcore(
                 cur = cur.repartition("s")
             cur = materialize(cur)
     if cur is None:
-        cur = materialize(_sym_distinct(edges, partitions))
+        cur = materialize(symmetric(edges, partitions=partitions))
     n_edges = cur.count()
     # peeled deltas up to this size become a literal InSet filter — one
     # job, no join, no exchange (a broadcast join collects to the driver
@@ -192,7 +176,7 @@ def coreness_rounds(edges: DataFrame, rounds: int = 8,
     """
     from pyspark.sql.window import Window
 
-    sym = materialize(_sym_distinct(edges, partitions))
+    sym = materialize(symmetric(edges, partitions=partitions))
     c = (sym.groupBy(F.col("s").alias("id"))
          .agg(F.count("*").cast("long").alias("c")))
     w = Window.partitionBy("s").orderBy(F.desc("cu"))
@@ -257,9 +241,8 @@ def s_core(
                        F.round(F.col("v") * 1e6, 0).cast("long").alias("_w"))
     und = (fwd.filter(F.col("a") != F.col("b"))
            .groupBy("a", "b").agg(F.max("_w").alias("_w")))
-    sym = (und.select(F.col("a").alias("s"), F.col("b").alias("d"), "_w")
-           .unionByName(und.select(F.col("b").alias("s"),
-                                   F.col("a").alias("d"), "_w")))
+    sym = mirror(und.select(F.col("a").alias("s"), F.col("b").alias("d"), "_w"),
+                 "s", "d")
     spark = edges.sparkSession
     with loop_shuffle_width(spark, max(sym.count(), 1)) as width:
         cur = materialize(sym.repartition(partitions or width, "s"))

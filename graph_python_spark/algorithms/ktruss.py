@@ -27,7 +27,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graph_python_spark.algorithms.triangles import canonical_edges
+from graph_python_spark.operators.blocks import undirected
 from graph_python_spark.plans.iterate import (iterative, loop_shuffle_width,
                                               materialize)
 
@@ -63,7 +63,7 @@ def ktruss(
     """
     if k < 3:
         raise ValueError("k-truss requires k >= 3")
-    sym = canonical_edges(edges)
+    sym = undirected(edges)
     if partitions is not None:
         sym = sym.repartition(partitions, "a")
     pinned = materialize(sym)  # the round's checkpointed frame (cur's blocks)
@@ -119,7 +119,7 @@ def trussness_rounds(edges: DataFrame, rounds: int = 8,
     """
     from pyspark.sql.window import Window
 
-    cur = canonical_edges(edges)
+    cur = undirected(edges)
     if partitions is not None:
         cur = cur.repartition(partitions, "a")
     cur = materialize(cur)

@@ -19,6 +19,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graph_python_spark.operators.blocks import mirror
 from graph_python_spark.plans.iterate import materialize, iterative
 
 
@@ -37,11 +38,9 @@ def label_propagation(
     """
     from graph_python_spark.operators.blocks import adjacency_table
 
-    fwd = edges.select(F.col("i").alias("s"), F.col("j").alias("d"))
     # self-loops dropped: a vertex's own label must not vote for itself
-    esym = (fwd.unionByName(fwd.select(F.col("d").alias("s"), F.col("s").alias("d")))
-            .filter(F.col("s") != F.col("d")).distinct())
-    adj = adjacency_table(esym, "s", "d", partitions)
+    adj = adjacency_table(mirror(edges).filter(F.col("i") != F.col("j")),
+                          "i", "j", partitions)
     if vertices is None:
         vertices = adj.select(F.col("s").alias("id")).distinct()  # s covers all; distinct: hub rows may be chunked
     vertices = vertices.select("id").cache()
@@ -107,11 +106,8 @@ def seeded_label_propagation(
     """
     from graph_python_spark.operators.blocks import adjacency_table
 
-    fwd = edges.select(F.col("i").alias("s"), F.col("j").alias("d"))
-    esym = (fwd.unionByName(
-        fwd.select(F.col("d").alias("s"), F.col("s").alias("d")))
-        .filter(F.col("s") != F.col("d")).distinct())
-    adj = adjacency_table(esym, "s", "d", partitions)
+    adj = adjacency_table(mirror(edges).filter(F.col("i") != F.col("j")),
+                          "i", "j", partitions)
     seed_rel = materialize(
         seeds.select(F.col("id").alias("i"), F.col("label").alias("lbl")))
     labels = seed_rel

@@ -48,33 +48,27 @@ from pyspark.sql import functions as F
 
 from typing import Optional
 
+from graph_python_spark.operators.blocks import mirror, vertex_ids
 from graph_python_spark.plans.iterate import (IterationState, iterative,
-                                              loop_shuffle_width)
+                                              loop_shuffle_width, materialize)
 
 
-def _symmetrize(edges: DataFrame, keep_self: bool = False) -> DataFrame:
-    """Undirected weighted edge relation: both directions, weights summed
-    over duplicates.  With ``keep_self`` a self-loop row (i, i, w) comes
-    out as (i, i, 2w) — the union adds the reversed copy onto itself —
-    which is exactly the doubled-directed convention's diagonal: it
-    contributes 2w to the vertex degree and 2w to m2, the invariants that
-    make community contraction (where a community's internal weight
-    becomes a super-vertex's self-loop) equivalent to optimizing the
-    original graph under the community constraint.  Without ``keep_self``
-    self-loops are dropped (the graph-kernel relation)."""
+def _symmetrize(edges: DataFrame) -> DataFrame:
+    """Undirected weighted edge relation: both directions (``mirror``),
+    weights summed over duplicates.  A self-loop row (i, i, w) comes out
+    as (i, i, 2w) — the mirror adds the reversed copy onto itself — which
+    is exactly the doubled-directed convention's diagonal: it contributes
+    2w to the vertex degree and 2w to m2, the invariants that make
+    community contraction (where a community's internal weight becomes a
+    super-vertex's self-loop) equivalent to optimizing the original graph
+    under the community constraint."""
     e = edges.select(F.col("i"), F.col("j"),
                      F.col("v").cast("double").alias("w"))
-    sym = e.unionByName(
-        e.select(F.col("j").alias("i"), F.col("i").alias("j"), "w")
-    )
-    if not keep_self:
-        sym = sym.filter(F.col("i") != F.col("j"))
-    return sym.groupBy("i", "j").agg(F.sum("w").alias("w"))
+    return mirror(e).groupBy("i", "j").agg(F.sum("w").alias("w"))
 
 
 @iterative
 def louvain_sweeps(edges: DataFrame, sweeps: int = 4,
-                   materialize=None,
                    checkpoint: Optional[IterationState] = None) -> DataFrame:
     """Fixed-sweep synchronous Louvain; returns (id, community).
 
@@ -89,7 +83,7 @@ def louvain_sweeps(edges: DataFrame, sweeps: int = 4,
     # 2x self weight — the contraction invariant); k_{v,c} uses only the
     # off-diagonal rows (links from v to OTHER members of c).  On a
     # self-loop-free input graph the two relations coincide.
-    sym_all = _symmetrize(edges, keep_self=True).cache()
+    sym_all = _symmetrize(edges).cache()
     sym = sym_all.filter(F.col("i") != F.col("j"))
     k = sym_all.groupBy("i").agg(F.sum("w").alias("k")).cache()
     m2 = sym_all.agg(F.sum("w")).first()[0]
@@ -98,8 +92,6 @@ def louvain_sweeps(edges: DataFrame, sweeps: int = 4,
     # fewer shuffles per sweep at any scale; k is loop-invariant data
     # riding in an already-moving O(V) row)
     labels = k.select("i", F.col("i").alias("c"), "k")
-    if materialize is None:
-        materialize = lambda df: df.localCheckpoint(eager=True)  # noqa: E731
 
     start = 0
     if checkpoint is not None:
@@ -109,13 +101,12 @@ def louvain_sweeps(edges: DataFrame, sweeps: int = 4,
             labels = states["labels"]
 
     with loop_shuffle_width(edges.sparkSession, k.count()):
-        labels = _sweep_loop(sym, m2, labels, sweeps, materialize,
+        labels = _sweep_loop(sym, m2, labels, sweeps,
                              start=start, checkpoint=checkpoint)
     return labels.select(F.col("i").alias("id"), F.col("c").alias("community"))
 
 
-def _sweep_loop(sym, m2, labels, sweeps, materialize, start=0,
-                checkpoint=None):
+def _sweep_loop(sym, m2, labels, sweeps, start=0, checkpoint=None):
     for sweep in range(start, sweeps):
         sigma = labels.groupBy("c").agg(F.sum("k").alias("sig"))
         nbr_lab = labels.select(F.col("i").alias("j"), F.col("c").alias("cn"))
@@ -171,7 +162,7 @@ def _sweep_loop(sym, m2, labels, sweeps, materialize, start=0,
 def modularity(edges: DataFrame, labels: DataFrame) -> float:
     """Q = Σ_c [Σ_in(c)/m2 − (Σ_tot(c)/m2)²] — the reference's
     compute_modularity on an explicit labeling (labels: (id, community))."""
-    sym = _symmetrize(edges, keep_self=True)
+    sym = _symmetrize(edges)
     m2 = sym.agg(F.sum("w")).first()[0]
     lab = labels.select(F.col("id").alias("i"), F.col("community").alias("c"))
     k = sym.groupBy("i").agg(F.sum("w").alias("k"))
@@ -220,8 +211,7 @@ def louvain_levels(edges: DataFrame, sweeps: int = 4,
         q = modularity(edges, mapping)
         n_comm = mapping.select("community").distinct().count()
         levels.append(LouvainLevel(mapping, q, n_comm))
-        n_vertices = cur.select(F.col("i").alias("x")).unionByName(
-            cur.select(F.col("j").alias("x"))).distinct().count()
+        n_vertices = vertex_ids(cur).count()
         if n_comm >= n_vertices:
             break
         relab = lab.select(F.col("id").alias("i"), F.col("community").alias("ci"))

@@ -32,17 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _canon(edges: DataFrame) -> DataFrame:
-    """Canonical undirected simple edge list (a < b)."""
-    return (
-        edges.select(
-            F.least(F.col("i"), F.col("j")).alias("a"),
-            F.greatest(F.col("i"), F.col("j")).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+from graph_python_spark.operators.blocks import undirected, vertex_ids
 
 
 def maximal_matching(edges: DataFrame, rounds: int = 4) -> DataFrame:
@@ -56,7 +46,7 @@ def maximal_matching(edges: DataFrame, rounds: int = 4) -> DataFrame:
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    alive = _canon(edges).localCheckpoint(eager=True)
+    alive = undirected(edges).localCheckpoint(eager=True)
     matched_parts = []
     for r in range(1, rounds + 1):
         pri = F.md5(F.concat_ws(":", F.col("a"), F.col("b"), F.lit(r)))
@@ -100,15 +90,11 @@ def residual_alive_edges(edges: DataFrame, matched: DataFrame) -> DataFrame:
     ``matched`` (a maximal_matching result).  A maximal matching leaves
     zero such edges — use ``residual_alive_edges(e, m).count() == 0`` to
     confirm the round budget reached the fixpoint."""
-    used = (
-        matched.select(F.col("a").alias("v"))
-        .unionByName(matched.select(F.col("b").alias("v")))
-        .distinct()
-    )
+    used = vertex_ids(matched, "a", "b")
     return (
-        _canon(edges)
-        .join(used.select(F.col("v").alias("a")), "a", "left_anti")
-        .join(used.select(F.col("v").alias("b")), "b", "left_anti")
+        undirected(edges)
+        .join(used.select(F.col("id").alias("a")), "a", "left_anti")
+        .join(used.select(F.col("id").alias("b")), "b", "left_anti")
     )
 
 

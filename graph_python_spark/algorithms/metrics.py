@@ -6,9 +6,10 @@ the algorithm outputs (reference: ``notebooks/Louvain.ipynb`` computes
 modularity as trace(C^T A C)/2m minus the degree-square term to score each
 contraction level).
 
-Both are single-pass DataFrame aggregations over the symmetrized simple
-graph — one shuffle for the degree/community joins, then a global
-aggregate.  Nothing here is iterative and nothing leaves the JVM.
+Both are single-pass DataFrame aggregations over the symmetric simple
+graph (``operators/blocks.symmetric``) — one shuffle for the
+degree/community joins, then a global aggregate.  Nothing here is
+iterative and nothing leaves the JVM.
 """
 
 from __future__ import annotations
@@ -16,15 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _symmetric_simple(edges: DataFrame) -> DataFrame:
-    """Distinct symmetrized edge list (s, d) without self-loops."""
-    fwd = edges.select(F.col("i").alias("s"), F.col("j").alias("d"))
-    return (
-        fwd.unionByName(fwd.select(F.col("d").alias("s"), F.col("s").alias("d")))
-        .filter(F.col("s") != F.col("d"))
-        .distinct()
-    )
+from graph_python_spark.operators.blocks import (simple, symmetric, undirected,
+                                                 vertex_ids)
 
 
 def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
@@ -43,7 +37,7 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     broadcast-eligible label side is left to AQE/Catalyst since labels is
     O(V) and may be huge.
     """
-    sym = _symmetric_simple(edges)
+    sym = symmetric(edges)
     lab = labels.select(F.col("id"), F.col("community"))
     deg = sym.groupBy(F.col("s").alias("id")).agg(F.count("*").alias("deg"))
     # per-community: total degree D_c and intra-community endpoint count
@@ -89,7 +83,7 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     integers, so Σx, Σx², Σxy are exact in 64-bit until ~2^53 — identical
     in any engine; only the final ratio is floating).
     """
-    sym = _symmetric_simple(edges)
+    sym = symmetric(edges)
     deg = sym.groupBy(F.col("s").alias("id")).agg(F.count("*").alias("deg"))
     xy = (
         sym.join(deg.select(F.col("id").alias("s"), F.col("deg").alias("x")), "s")
@@ -131,9 +125,7 @@ def transitivity(edges: DataFrame) -> DataFrame:
     in the wedge join is the tricount skew story: the a<b canonicalization
     already halves hub fan-out.
     """
-    from .triangles import canonical_edges
-
-    ue = canonical_edges(edges).localCheckpoint(eager=True)
+    ue = undirected(edges).localCheckpoint(eager=True)
     deg = (
         ue.select(F.col("a").alias("id"))
         .unionAll(ue.select(F.col("b").alias("id")))
@@ -176,10 +168,8 @@ def rich_club(edges: DataFrame, thresholds=(1, 2, 4, 8, 16, 32)) -> DataFrame:
     K·|deg| and K·|E| intermediate rows with map-side partial aggregation,
     never K scans of the edge table.  No windows, no collect.
     """
-    from .triangles import canonical_edges
-
     ks = F.array(*[F.lit(int(k)) for k in thresholds])
-    ue = canonical_edges(edges).localCheckpoint(eager=True)
+    ue = undirected(edges).localCheckpoint(eager=True)
     deg = (
         ue.select(F.col("a").alias("id"))
         .unionAll(ue.select(F.col("b").alias("id")))
@@ -236,7 +226,7 @@ def vertex_features(edges: DataFrame) -> DataFrame:
     from .triangles import clustering_coefficients
 
     base = clustering_coefficients(edges)
-    e = edges.select("i", "j").filter(F.col("i") != F.col("j")).distinct()
+    e = simple(edges)
     dout = e.groupBy(F.col("i").alias("id")).agg(
         F.count("*").cast("long").alias("out_deg"))
     din = e.groupBy(F.col("j").alias("id")).agg(
@@ -290,8 +280,7 @@ def reciprocity(edges: DataFrame) -> DataFrame:
     distinct edge set left-semi-joins its own transpose on the pair key —
     one hash join on (i, j), no window, no collect; O(E) shuffle.
     """
-    e = (edges.select("i", "j").filter(F.col("i") != F.col("j")).distinct()
-         .localCheckpoint(eager=True))
+    e = simple(edges).localCheckpoint(eager=True)
     rev = e.select(F.col("j").alias("i"), F.col("i").alias("j"))
     recip = e.join(rev, ["i", "j"], "left_semi")
     out = e.agg(F.count("*").cast("long").alias("n_edges")).crossJoin(
@@ -323,7 +312,7 @@ def conductance(edges: DataFrame, mapping: DataFrame) -> DataFrame:
     against the O(V) mapping, one groupBy(group), one tiny global-total
     broadcast.  No windows, no collect.
     """
-    sym = _symmetric_simple(edges)
+    sym = symmetric(edges)
     m = mapping.select("id", "group")
     tagged = (
         sym.join(m.select(F.col("id").alias("s"), F.col("group").alias("gs")), "s")
@@ -361,7 +350,7 @@ def attribute_assortativity(edges: DataFrame, attrs: DataFrame) -> DataFrame:
     Plan: two vertex-key joins + one groupBy on the attribute pair (the
     mixing matrix is |attr|² rows — tiny), then a scalar aggregate.
     """
-    sym = _symmetric_simple(edges)
+    sym = symmetric(edges)
     a = attrs.select("id", "attr")
     mix = (
         sym.join(a.select(F.col("id").alias("s"), F.col("attr").alias("xa")), "s")
@@ -426,10 +415,8 @@ def graph_summary(edges: DataFrame) -> DataFrame:
     floating division.  Plan: one distinct + two aggregates, O(E)
     shuffle; the three scalar relations cross-join (1 row each).
     """
-    e = edges.select("i", "j").filter(F.col("i") != F.col("j")).distinct() \
-        .localCheckpoint(eager=True)
-    verts = (e.select(F.col("i").alias("id"))
-             .unionByName(e.select(F.col("j").alias("id")))).distinct()
+    e = simple(edges).localCheckpoint(eager=True)
+    verts = vertex_ids(e)
     deg = e.groupBy("i").agg(F.count("*").alias("d"))
     nv = verts.agg(F.count("*").cast("long").alias("n_vertices"))
     ne = e.agg(F.count("*").cast("long").alias("n_edges"))
@@ -457,11 +444,8 @@ def powerlaw_alpha(edges: DataFrame, d_min: int = 2) -> DataFrame:
     information, e.g. a d_min-regular graph).  One degree aggregate +
     one scalar aggregate; the ln runs on exact integer degrees.
     """
-    deg = (
-        edges.select("i", "j").filter(F.col("i") != F.col("j")).distinct()
-        .groupBy("i").agg(F.count("*").alias("d"))
-        .filter(F.col("d") >= d_min)
-    )
+    deg = (simple(edges).groupBy("i").agg(F.count("*").alias("d"))
+           .filter(F.col("d") >= d_min))
     lnsum = F.sum(F.log(F.col("d") / F.lit(float(d_min))))
     return deg.agg(
         F.count("*").cast("long").alias("n_tail"),
@@ -488,8 +472,7 @@ def degree_drift(e_old: DataFrame, e_new: DataFrame,
     O(E) after the groupBys.
     """
     def hist(e, n_col):
-        deg = (e.select("i", "j").filter(F.col("i") != F.col("j")).distinct()
-               .groupBy("i").agg(F.count("*").alias("d")))
+        deg = simple(e).groupBy("i").agg(F.count("*").alias("d"))
         b = F.lit(int(buckets[0]))
         for t in buckets[1:]:
             b = F.when(F.col("d") >= t, F.lit(int(t))).otherwise(b)

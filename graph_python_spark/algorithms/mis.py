@@ -26,6 +26,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graph_python_spark.operators.blocks import symmetric
 from graph_python_spark.plans.iterate import (iterative, loop_shuffle_width,
                                               materialize)
 
@@ -51,17 +52,7 @@ def maximal_independent_set(
     selected vertices are adjacent) and the number of rounds executed
     (including the final round that empties the active set).
     """
-    fwd = edges.select(F.col("i").alias("s"), F.col("j").alias("d"))
-    sym = (
-        fwd.unionByName(fwd.select(F.col("d").alias("s"),
-                                   F.col("s").alias("d")))
-        .filter(F.col("s") != F.col("d"))
-    )
-    if partitions is not None:
-        sym = sym.repartition(partitions, "s")
-    else:
-        sym = sym.repartition("s")
-    cur = materialize(sym.dropDuplicates(["s", "d"]))
+    cur = materialize(symmetric(edges, partitions=partitions))
     n_edges = cur.count()
     spark = edges.sparkSession
     # vertices with no surviving neighbor are auto-selected, so the active

@@ -59,6 +59,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graph_python_spark.operators.blocks import vertex_ids
 from graph_python_spark.plans.iterate import (IterationState, loop_conf,
                                                 loop_shuffle_width,
                                                 materialize, release)
@@ -106,20 +107,20 @@ def prepare_graph(edges: DataFrame, vertices: Optional[DataFrame] = None,
 
     e = edges.select(F.col("i"), F.col("j"))
     if vertices is None:
-        vertices = (
-            e.select(F.col("i").alias("id"))
-            .unionByName(e.select(F.col("j").alias("id")))
-            .distinct()
-        )
+        vertices = vertex_ids(e)
     vertices = vertices.select("id").cache()
     n = vertices.count()
     with _loop(edges.sparkSession, n, partitions) as width:
+        table = adjacency_table(e, "i", "j", width)
+        # cache the projection the loop reads instead of the table under
+        # it (nothing is computed yet), so adj.unpersist() frees the build
+        table.unpersist()
         # deg (not size(js)): hub rows may be segmented into several bounded
         # chunks, each carrying the vertex's TOTAL out-degree
-        adj = adjacency_table(e, "i", "j", width).select(
+        adj = table.select(
             F.col("s").alias("i"), F.col("ds").alias("js"),
             (F.lit(damping) / F.col("deg")).alias("inv_d"),
-        )
+        ).cache()
         adj.count()
     return PreparedGraph(adj, vertices, n, damping, width)
 
@@ -196,9 +197,12 @@ def pagerank(
     ``edges``: DataFrame with long columns i (src), j (dst); duplicates OK
     (binarized).  ``checkpoint``: optional durable IterationState — a killed
     run resumes from the last saved iteration with identical results.
-    ``prepared``: pre-built loop-invariant state (its baked damping wins).
+    ``prepared``: pre-built loop-invariant state (its baked damping wins);
+    it stays the caller's to free.  Without it the adjacency built here is
+    freed once the loop is done.
     """
-    if prepared is None:
+    own = prepared is None
+    if own:
         prepared = prepare_graph(edges, vertices, damping, partitions)
     adj, vertices, n, damping = (prepared.adj, prepared.vertices,
                                  prepared.n, prepared.damping)
@@ -217,6 +221,8 @@ def pagerank(
             contrib = states["contrib"]
             rdiffs = list(metrics.get("rdiffs", []))
             if rdiffs and rdiffs[-1] <= tol:
+                if own:
+                    adj.unpersist()
                 return _finalize(vertices, contrib, teleport), start_iter, rdiffs
 
     def rdiff_cb(old_contrib, new_contrib, k):
@@ -253,6 +259,8 @@ def pagerank(
             adj, teleport, 1.0 / n, remaining, contrib=contrib,
             rdiff_cb=rdiff_cb, tol=tol,
         )
+    if own:
+        adj.unpersist()
     return _finalize(vertices, contrib, teleport), start_iter + done, rdiffs
 
 
@@ -294,8 +302,10 @@ def pagerank_fixed(
     prepared: Optional[PreparedGraph] = None,
 ) -> DataFrame:
     """Exactly ``iterations`` pagerank_3f steps, no convergence action —
-    deterministic output used by the DuckDB-checked correctness queries."""
-    if prepared is None:
+    deterministic output used by the DuckDB-checked correctness queries.
+    An adjacency built here (no ``prepared``) is freed after the loop."""
+    own = prepared is None
+    if own:
         prepared = prepare_graph(edges, vertices, damping, partitions)
     adj, vertices, n, damping = (prepared.adj, prepared.vertices,
                                  prepared.n, prepared.damping)
@@ -305,6 +315,8 @@ def pagerank_fixed(
 
     with _loop(adj.sparkSession, n, prepared.width):
         contrib, _ = _contrib_loop(adj, teleport, 1.0 / n, iterations)
+    if own:
+        adj.unpersist()
     return _finalize(vertices, contrib, teleport)
 
 
@@ -345,12 +357,7 @@ def pagerank_weighted_fixed(
                 (F.lit(damping) * F.col("w") / F.col("ow")).alias("p"))
         .repartition(npart, "i")
     )
-    vertices = (
-        e.select(F.col("i").alias("id"))
-        .unionByName(e.select(F.col("j").alias("id")))
-        .distinct()
-        .cache()
-    )
+    vertices = vertex_ids(e).cache()
     n = vertices.count()
     if n == 0:
         return spark.createDataFrame([], "id long, score double")
@@ -395,8 +402,8 @@ def pagerank_incremental(
     SAME graph, the output is a fixpoint (regression-tested).
 
     Same plan as ``pagerank_fixed``: cached co-partitioned adjacency,
-    one O(distinct-dst) shuffle per iteration; the init join is one
-    extra O(V) hash join before the loop.
+    one O(distinct-dst) shuffle per iteration, adjacency freed after
+    the loop; the init join is one extra O(V) hash join before it.
     """
     prepared = prepare_graph(edges, None, damping, partitions)
     adj, vertices, n = prepared.adj, prepared.vertices, prepared.n
@@ -416,4 +423,5 @@ def pagerank_incremental(
     with _loop(adj.sparkSession, n, prepared.width):
         contrib, _ = _contrib_loop(adj, teleport, 1.0 / n, iterations,
                                    contrib=materialize(contrib0))
+    adj.unpersist()
     return _finalize(vertices, contrib, teleport)

@@ -48,6 +48,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from graph_python_spark.operators.blocks import symmetric, undirected
 from graph_python_spark.plans.iterate import (iterative, loop_shuffle_width,
                                               materialize)
 
@@ -65,14 +66,7 @@ def partition_assign(
     """
     if k <= 0:
         raise ValueError("k must be positive")
-    sym = (
-        edges.select(F.least("i", "j").alias("a"),
-                     F.greatest("i", "j").alias("b"))
-        .filter(F.col("a") != F.col("b")).distinct()
-    )
-    both = (sym.select(F.col("a").alias("s"), F.col("b").alias("d"))
-            .unionByName(
-                sym.select(F.col("b").alias("s"), F.col("a").alias("d"))))
+    both = symmetric(edges)
     verts = both.select(F.col("s").alias("id")).distinct()
     n_verts = verts.count()
 
@@ -130,11 +124,7 @@ def partition_quality(edges: DataFrame, assign: DataFrame) -> DataFrame:
     distinct edge set — cut_edges counts each crossing edge under BOTH
     endpoint parts (so Σ cut = 2 × crossing edges).  One vertex-key join
     per endpoint + one part-key aggregate."""
-    sym = (
-        edges.select(F.least("i", "j").alias("a"),
-                     F.greatest("i", "j").alias("b"))
-        .filter(F.col("a") != F.col("b")).distinct()
-    )
+    sym = undirected(edges)
     pa = assign.select(F.col("id").alias("a"), F.col("part").alias("_pa"))
     pb = assign.select(F.col("id").alias("b"), F.col("part").alias("_pb"))
     tagged = sym.join(pa, "a").join(pb, "b")

@@ -20,18 +20,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from graph_python_spark.operators.blocks import symmetric, undirected
+
 
 def degree_relabel(edges: DataFrame) -> DataFrame:
     """(id, new_id, deg): dense new IDs 0..n-1 by (deg DESC, id ASC) over
     the undirected degree of the simple graph under ``edges`` (long
     columns src, dst; both endpoints count, self-loops dropped)."""
-    fwd = edges.select(F.col("src").cast("long").alias("s"),
-                       F.col("dst").cast("long").alias("d"))
-    sym = (
-        fwd.unionByName(fwd.select(F.col("d").alias("s"), F.col("s").alias("d")))
-        .filter(F.col("s") != F.col("d"))
-        .distinct()
-    )
+    sym = symmetric(edges.select(F.col("src").cast("long"),
+                                 F.col("dst").cast("long")), "src", "dst")
     deg = sym.groupBy(F.col("s").alias("id")).agg(F.count("*").alias("deg"))
     order = [F.col("deg").desc(), F.col("id").asc()]
     rp = deg.repartitionByRange(*order).withColumn("_pid", F.spark_partition_id())
@@ -50,23 +47,19 @@ def degree_relabel(edges: DataFrame) -> DataFrame:
 
 def relabel_locality(edges: DataFrame, mapping: DataFrame) -> DataFrame:
     """One-row report of the relabeling's edge locality: mean |Δid| over
-    the deduped symmetric edges under the ORIGINAL ids vs the NEW ids
+    the undirected simple edges (one a < b row per edge) under the
+    ORIGINAL ids vs the NEW ids
     (small mean gap = good cache/partition locality, the quantity
     gap-encoded adjacency compresses).  Two broadcast-free id-keyed joins;
     the mapping is the only relation touched twice."""
-    fwd = edges.select(F.col("src").cast("long").alias("s"),
-                       F.col("dst").cast("long").alias("d"))
-    sym = (
-        fwd.unionByName(fwd.select(F.col("d").alias("s"), F.col("s").alias("d")))
-        .filter(F.col("s") < F.col("d"))
-        .distinct()
-    )
-    ms = mapping.select(F.col("id").alias("s"), F.col("new_id").alias("ns"))
-    md = mapping.select(F.col("id").alias("d"), F.col("new_id").alias("nd"))
+    und = undirected(edges.select(F.col("src").cast("long"),
+                                  F.col("dst").cast("long")), "src", "dst")
+    ma = mapping.select(F.col("id").alias("a"), F.col("new_id").alias("ns"))
+    mb = mapping.select(F.col("id").alias("b"), F.col("new_id").alias("nd"))
     return (
-        sym.join(ms, "s").join(md, "d")
+        und.join(ma, "a").join(mb, "b")
         .agg(
-            F.round(F.avg(F.abs(F.col("s") - F.col("d"))), 6).alias("mean_gap_old"),
+            F.round(F.avg(F.abs(F.col("a") - F.col("b"))), 6).alias("mean_gap_old"),
             F.round(F.avg(F.abs(F.col("ns") - F.col("nd"))), 6).alias("mean_gap_new"),
             F.count("*").cast("long").alias("n_edges"),
         )

@@ -39,6 +39,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graph_python_spark.operators.blocks import simple, vertex_ids
 from graph_python_spark.plans.iterate import (iterative, loop_shuffle_width,
                                               materialize)
 
@@ -92,8 +93,7 @@ def strongly_connected_components(
     component), outer_rounds)`` with component = the smallest vertex id in
     the SCC (exact, permutation-invariant).
     """
-    eb = edges.select(F.col("i").alias("s"), F.col("j").alias("d")) \
-        .filter(F.col("s") != F.col("d")).dropDuplicates(["s", "d"])
+    eb = simple(edges).toDF("s", "d")
     # pin the edge state s-hash-partitioned so every min-prop round's
     # edges ⋈ delta join reuses the partitioning (the frontier side is
     # the only per-round exchange — the pagerank adjacency pattern)
@@ -102,11 +102,7 @@ def strongly_connected_components(
     else:
         eb = eb.repartition("s")
     cur = materialize(eb)
-    verts = materialize(
-        cur.select(F.col("s").alias("id"))
-        .unionByName(cur.select(F.col("d").alias("id")))
-        .distinct()
-    )
+    verts = materialize(vertex_ids(cur, "s", "d"))
     n_edges = cur.count()
     done_parts: list[DataFrame] = []
     rounds = 0

@@ -38,6 +38,8 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graph_python_spark.operators.blocks import mirror, simple
+
 
 def simrank(
     edges: DataFrame,
@@ -52,12 +54,8 @@ def simrank(
     (u < v) as (u, v, score double); pairs never touched stay implicit 0,
     the diagonal stays implicit 1.
     """
-    e = (
-        edges.select(F.col("src").cast("long").alias("src"),
-                     F.col("dst").cast("long").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    e = simple(edges.select(F.col("src").cast("long"), F.col("dst").cast("long")),
+               "src", "dst")
     ind = e.groupBy(F.col("dst").alias("id")).agg(F.count("*").alias("ind"))
     if max_indegree is not None:
         keep = ind.filter(F.col("ind") <= max_indegree).select("id")
@@ -89,8 +87,7 @@ def simrank(
         # from s1's expansion before this filter was hoisted).
         s = s.filter(F.col("score") >= eps)
     for _ in range(iters - 1):
-        sym = s.select(F.col("u").alias("i"), F.col("v").alias("j"), "score").unionByName(
-            s.select(F.col("v").alias("i"), F.col("u").alias("j"), "score"))
+        sym = mirror(s.select(F.col("u").alias("i"), F.col("v").alias("j"), "score"))
         t = (
             sym.join(e.select(F.col("src").alias("i"), F.col("dst").alias("a")), "i")
             .join(e.select(F.col("src").alias("j"), F.col("dst").alias("b")), "j")

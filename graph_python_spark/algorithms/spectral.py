@@ -34,6 +34,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graph_python_spark.operators.blocks import symmetric
 from graph_python_spark.plans.iterate import (iterative, loop_shuffle_width,
                                               materialize)
 
@@ -62,14 +63,7 @@ def spectral_gap(
     steps).  On a DISCONNECTED graph λ₂ = 1 and the gap is 0 — the
     correct answer (two components never mix).
     """
-    sym = (
-        edges.select(F.least("i", "j").alias("a"),
-                     F.greatest("i", "j").alias("b"))
-        .filter(F.col("a") != F.col("b")).distinct()
-    )
-    both = (sym.select(F.col("a").alias("s"), F.col("b").alias("d"))
-            .unionByName(sym.select(F.col("b").alias("s"),
-                                    F.col("a").alias("d"))))
+    both = symmetric(edges)
     deg = both.groupBy(F.col("s").alias("id")).agg(
         F.count(F.lit(1)).alias("_d"))
     spark = edges.sparkSession

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graph_python_spark.operators.blocks import symmetric, vertex_ids
 from graph_python_spark.plans.iterate import materialize, iterative, loop_shuffle_width
 
 
@@ -193,14 +194,8 @@ def pseudo_diameter(edges: DataFrame, rounds: int = 8) -> DataFrame:
     between-sweep selections are O(1)-row driver actions (like the Louvain
     m2 scalar), not data collects; each sweep moves frontier-sized rows.
     """
-    sym_fwd = edges.select(F.col("i"), F.col("j"))
-    sym = (
-        sym_fwd.unionByName(
-            sym_fwd.select(F.col("j").alias("i"), F.col("i").alias("j")))
-        .filter(F.col("i") != F.col("j"))
-        .distinct()
-    )
-    v0 = sym.agg(F.min(F.least("i", "j"))).first()[0]
+    sym = symmetric(edges).select(F.col("s").alias("i"), F.col("d").alias("j"))
+    v0 = sym.agg(F.min("i")).first()[0]
     d1 = minplus_fixed_rounds(sym, v0, rounds)
     a_row = d1.orderBy(F.col("v").desc(), F.col("id").asc()).first()
     a = a_row["id"]
@@ -233,8 +228,7 @@ def dag_longest_path_levels(edges: DataFrame, rounds: int = 16) -> DataFrame:
     (id, level) row per vertex.
     """
     e = edges.select(F.col("i").alias("s"), F.col("j").alias("d")).distinct()
-    verts = (e.select(F.col("s").alias("id"))
-             .unionByName(e.select(F.col("d").alias("id"))).distinct())
+    verts = vertex_ids(e, "s", "d")
     spark = edges.sparkSession
     with loop_shuffle_width(spark, verts.count()) as width:
         e = materialize(e.repartition(width, "s"))

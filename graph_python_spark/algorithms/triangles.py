@@ -5,7 +5,8 @@ Reference ingredients (SURVEY.md §2.8): plus_pair semiring
 (``core/operator/indexunary.py:105``), masked mxm — count =
 reduce(plus) of C(L.S) = L·Lᵀ with L the strictly-upper triangle.
 
-Spark plan: never materialize A·A.  Canonicalize to i<j edges, then a
+Spark plan: never materialize A·A.  Take the a<b edges
+(``operators/blocks.undirected``), then a
 3-way self-join closes wedges a<b<c with the (a,c) edge — i.e. the mask is
 pushed INTO the join (same effect as C(L.S)).  Two shuffles total; the
 ordering constraint a<b<c counts each triangle exactly once and keeps the
@@ -17,17 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def canonical_edges(edges: DataFrame) -> DataFrame:
-    """Undirected simple graph as a<b edges (tril/triu canonicalization)."""
-    return (
-        edges.select(
-            F.least(F.col("i"), F.col("j")).alias("a"),
-            F.greatest(F.col("i"), F.col("j")).alias("b"),
-        )
-        .filter(F.col("a") < F.col("b"))  # drop self-loops
-        .distinct()
-    )
+from graph_python_spark.operators.blocks import (mirror, simple, symmetric,
+                                                 undirected)
 
 
 def triangle_count(edges: DataFrame) -> int:
@@ -36,7 +28,7 @@ def triangle_count(edges: DataFrame) -> int:
 
 def triangles_df(edges: DataFrame) -> DataFrame:
     """One row (a, b, c) per triangle, a<b<c."""
-    ue = canonical_edges(edges).cache()
+    ue = undirected(edges).cache()
     e1 = ue.select(F.col("a"), F.col("b"))
     e2 = ue.select(F.col("a").alias("b"), F.col("b").alias("c"))
     e3 = ue.select(F.col("a"), F.col("b").alias("c"))
@@ -81,8 +73,7 @@ def directed_triangle_census(edges: DataFrame) -> DataFrame:
     `sparsify`/`max_degree`-capped edge table like every other wedge plan
     here.
     """
-    e = (edges.select("i", "j").filter(F.col("i") != F.col("j")).distinct()
-         .cache())
+    e = simple(edges).cache()
     # cache: both closures consume the (quadratic-in-hub-degree) wedge
     # relation — without it the dominant join would execute twice
     wedges = e.join(
@@ -107,7 +98,7 @@ def clustering_coefficients(edges: DataFrame) -> DataFrame:
     d = reduce_rowwise of one(A) — both single-pass aggregates here, with
     the triangle join's a < b < c orientation bounding hub-side skew.
     """
-    ue = canonical_edges(edges).cache()
+    ue = undirected(edges).cache()
     deg = (
         ue.select(F.col("a").alias("id"))
         .unionAll(ue.select(F.col("b").alias("id")))
@@ -149,12 +140,7 @@ def four_cycle_count(edges: DataFrame, max_degree: int | None = None) -> DataFra
 
     Returns ONE row (n_four_cycles).
     """
-    fwd = edges.select(F.col("i").alias("s"), F.col("j").alias("d"))
-    sym = (
-        fwd.unionByName(fwd.select(F.col("d").alias("s"), F.col("s").alias("d")))
-        .filter(F.col("s") != F.col("d"))
-        .distinct()
-    )
+    sym = symmetric(edges)
     if max_degree is not None:
         deg = sym.groupBy("s").agg(F.count("*").alias("_deg"))
         sym = (sym.join(deg.filter(F.col("_deg") <= max_degree), "s",
@@ -198,12 +184,10 @@ def triangles_incremental(edges_old: DataFrame,
 
     Returns one row: (n_added_edges, n_new_triangles).
     """
-    o = canonical_edges(edges_old)
-    a = canonical_edges(edges_all)
+    o = undirected(edges_old)
+    a = undirected(edges_all)
     added = a.join(o, ["a", "b"], "left_anti").cache()
-    sym = (a.select(F.col("a").alias("u"), F.col("b").alias("v"))
-           .unionByName(a.select(F.col("b").alias("u"),
-                                 F.col("a").alias("v"))))
+    sym = mirror(a.select(F.col("a").alias("u"), F.col("b").alias("v")), "u", "v")
     # common neighbors z of the added edge (x, y) over the FULL graph
     cand = (
         added.select(F.col("a").alias("x"), F.col("b").alias("y"))

@@ -39,6 +39,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.blocks import vertex_ids
 from ..plans.iterate import loop_shuffle_width, materialize, release
 from .pagerank import pagerank_fixed
 
@@ -120,11 +121,7 @@ def spam_mass(
     exact in the VLDB'06 sense.  One vertex-keyed left join combines
     them; vertices unreached by the core keep core_pr = 0 and
     spam_mass = 1 - teleport'/pr exactly."""
-    verts = (
-        edges.select(F.col("i").alias("id"))
-        .unionByName(edges.select(F.col("j").alias("id")))
-        .distinct()
-    )
+    verts = vertex_ids(edges)
     n = verts.count()
     if n == 0:
         return edges.sparkSession.createDataFrame(

@@ -28,6 +28,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from graph_python_spark.operators.blocks import mirror, symmetric
+
 
 def link_prediction_scores(
     edges: DataFrame,
@@ -54,12 +56,7 @@ def link_prediction_scores(
     ``max_degree`` prunes wedges THROUGH stop-hubs exactly as in
     `jaccard_neighbors` (their AA contribution ~ 1/ln(huge) ≈ 0 anyway).
     """
-    fwd = edges.select(F.col("i").alias("s"), F.col("j").alias("d"))
-    sym = (
-        fwd.unionByName(fwd.select(F.col("d").alias("s"), F.col("s").alias("d")))
-        .filter(F.col("s") != F.col("d"))
-        .distinct()
-    )
+    sym = symmetric(edges)
     deg = sym.groupBy(F.col("s").alias("id")).agg(F.count("*").alias("deg"))
     wedge_src = sym.join(
         deg.select(F.col("id").alias("s"), F.col("deg").alias("_dc")), "s"
@@ -231,12 +228,7 @@ def jaccard_neighbors(
     under ``edges`` (long columns i, j) with >= 1 common neighbor and
     Jaccard similarity >= ``min_sim``.  Returns (u, v, common, sim).
     """
-    fwd = edges.select(F.col("i").alias("s"), F.col("j").alias("d"))
-    sym = (
-        fwd.unionByName(fwd.select(F.col("d").alias("s"), F.col("s").alias("d")))
-        .filter(F.col("s") != F.col("d"))
-        .distinct()
-    )
+    sym = symmetric(edges)
     deg = sym.groupBy(F.col("s").alias("id")).agg(F.count("*").alias("deg"))
     wedge_src = sym
     if max_degree is not None:
@@ -273,8 +265,8 @@ def topk_neighbors(proj: DataFrame, k: int = 10) -> DataFrame:
     then ONE window PARTITIONED by the vertex key — parallel across
     vertices, never global; the output is O(V·k).
     """
-    sym = proj.select(F.col("u").alias("id"), F.col("v").alias("rec"), "weight").unionByName(
-        proj.select(F.col("v").alias("id"), F.col("u").alias("rec"), "weight"))
+    sym = mirror(proj.select(F.col("u").alias("id"), F.col("v").alias("rec"), "weight"),
+                 "id", "rec")
     w = Window.partitionBy("id").orderBy(F.col("weight").desc(), F.col("rec"))
     return (
         sym.withColumn("rank", F.row_number().over(w).cast("long"))

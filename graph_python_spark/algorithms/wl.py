@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graph_python_spark.operators.blocks import symmetric
+
 
 def wl_fingerprints(edges: DataFrame, rounds: int = 2) -> DataFrame:
     """(id, label) after ``rounds`` WL refinements over the undirected
@@ -29,13 +31,7 @@ def wl_fingerprints(edges: DataFrame, rounds: int = 2) -> DataFrame:
     Isolated-by-filtering vertices never appear (the vertex set is the
     edge support, as everywhere in this package).
     """
-    fwd = edges.select(F.col("i").alias("s"), F.col("j").alias("d"))
-    sym = (
-        fwd.unionByName(fwd.select(F.col("d").alias("s"), F.col("s").alias("d")))
-        .filter(F.col("s") != F.col("d"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    sym = symmetric(edges).localCheckpoint(eager=True)
     labels = (
         sym.groupBy(F.col("s").alias("id"))
         .agg(F.count("*").alias("_deg"))

@@ -1,11 +1,32 @@
-"""Adjacency table: the loop-invariant operand of the iterative SpMV loops.
+"""Graph views and the adjacency table: how an edge list becomes the graph
+an algorithm means.
 
-The per-partition CSR block of the north star is one cached,
-src-partitioned row per vertex holding its sorted neighbor array, with hub
-rows segmented so no array cell grows past ``max_chunk`` entries.  The
-PageRank, connected-components and label-propagation loops probe it.
-Semirings are not evaluated here: every semiring, built-in or registered,
-runs as JVM Column expressions through ``MatrixFrame.mxv/vxm/mxm``.
+Every undirected or simple graph an algorithm runs on is one of five
+whole-relation views of the edge list, each the reference op named in
+brackets (PAPER.md §1.1 and the triangle-count recipe):
+
+* :func:`vertex_ids` — the edge support ``i ∪ j`` [row and column
+  indices of A];
+* :func:`mirror` — ``A ∪ Aᵀ``, other columns carried along [``A.T`` is a
+  column swap, like ``MatrixFrame.T``];
+* :func:`simple` — directed, self-loops and duplicate arcs dropped
+  [``select.offdiag``, deduped];
+* :func:`symmetric` — ``offdiag(A ∪ Aᵀ)`` deduped, hash(s)-partitioned;
+* :func:`undirected` — one ``a < b`` row per undirected edge
+  [``select.triu(1)``].
+
+Weighted callers keep their own duplicate-collapsing aggregate (sum, max
+or min, each by its own rule) and may take only the orientation step
+from :func:`mirror`.
+
+The sixth view is the cached adjacency: :func:`adjacency_table` groups
+any of them into one src-partitioned row per vertex holding its sorted
+neighbor array, with hub rows segmented so no array cell grows past
+``max_chunk`` entries.  The PageRank, connected-components and
+label-propagation loops probe it.  It dedupes itself, so no view is
+``distinct``-ed before it.  Semirings are not evaluated here: every
+semiring, built-in or registered, runs as JVM Column expressions through
+``MatrixFrame.mxv/vxm/mxm``.
 """
 
 from __future__ import annotations
@@ -14,6 +35,58 @@ from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def vertex_ids(edges: DataFrame, src: str = "i", dst: str = "j") -> DataFrame:
+    """Every vertex that is an endpoint of an edge, as ``(id)``.  One
+    shuffle (the distinct)."""
+    return (edges.select(F.col(src).alias("id"))
+            .unionByName(edges.select(F.col(dst).alias("id")))
+            .distinct())
+
+
+def mirror(edges: DataFrame, src: str = "i", dst: str = "j") -> DataFrame:
+    """``A ∪ Aᵀ``: every row plus its reverse, with the column names and any
+    other columns kept (the reverse carries the row's values, as
+    ``MatrixFrame.T`` carries ``v``).  No shuffle and no dedupe: a
+    self-loop and a pair given in both directions each come out twice."""
+    swap = {src: F.col(dst).alias(src), dst: F.col(src).alias(dst)}
+    return edges.unionByName(
+        edges.select(*[swap.get(c, F.col(c)) for c in edges.columns]))
+
+
+def simple(edges: DataFrame, src: str = "i", dst: str = "j") -> DataFrame:
+    """The directed simple graph: ``(src, dst)`` under the given names,
+    self-loops and duplicate arcs dropped.  One shuffle."""
+    return (edges.select(src, dst)
+            .filter(F.col(src) != F.col(dst))
+            .distinct())
+
+
+def symmetric(edges: DataFrame, src: str = "i", dst: str = "j",
+              partitions: Optional[int] = None) -> DataFrame:
+    """The undirected simple graph with both directions as ``(s, d)``:
+    ``offdiag(A ∪ Aᵀ)``, deduped.  One shuffle: hash(s) at ``partitions``
+    (default: the session's shuffle width) co-locates every (s, d)
+    duplicate, so the dropDuplicates after it needs no second exchange,
+    and the result comes out hash(s)-partitioned for a degree groupBy or
+    an s-keyed join."""
+    width = partitions or int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    fwd = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+    return (mirror(fwd, "s", "d")
+            .filter(F.col("s") != F.col("d"))
+            .repartition(width, "s")
+            .dropDuplicates(["s", "d"]))
+
+
+def undirected(edges: DataFrame, src: str = "i", dst: str = "j") -> DataFrame:
+    """The undirected simple graph with one row per edge as ``(a, b)``,
+    ``a < b``: ``triu(A ∪ Aᵀ, 1)``, deduped.  One shuffle."""
+    return (
+        edges.select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
+        .filter(F.col("a") < F.col("b"))
+        .distinct()
+    )
 
 
 def _segments(grouped: DataFrame, max_chunk: int) -> DataFrame:

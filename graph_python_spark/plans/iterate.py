@@ -26,7 +26,7 @@ from typing import Any, Optional
 from pyspark.sql import DataFrame, SparkSession
 
 
-def materialize(df: DataFrame, storage: str = "local") -> DataFrame:
+def materialize(df: DataFrame) -> DataFrame:
     """Compute now; truncate lineage. Keeps the current partitioning."""
     return df.localCheckpoint(eager=True)
 

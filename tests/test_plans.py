@@ -213,14 +213,20 @@ def test_pagerank_step_one_exchange(spark):
     prepared.vertices.unpersist()
 
 
+# persistent RDDs a call may leave: the frames its lazy result reads
+# (pagerank: the vertex cache and the last contrib; hits: the pinned
+# vertices, hub and authority vectors)
+RESULT_FRAMES = {"pagerank.pagerank_fixed": 2, "centrality.hits_fixed": 3}
+
+
 @pytest.mark.parametrize("algo", ["pagerank.pagerank_fixed",
                                   "centrality.hits_fixed"])
 def test_loops_release_pinned_state(spark, algo):
-    """Each loop frees an iteration's pinned state after its last read, so
-    the persistent RDDs a call leaves behind do not grow with the
-    iteration count (``DataFrame.unpersist`` never frees a
-    localCheckpoint).  Collecting the result proves nothing it still
-    reads was freed."""
+    """Each loop frees an iteration's pinned state after its last read,
+    and whatever else it built for itself once the loop is done, so a
+    call leaves only the frames its result reads, whatever the iteration
+    count (``DataFrame.unpersist`` never frees a localCheckpoint).
+    Collecting the result proves nothing it still reads was freed."""
     import importlib
 
     module, name = algo.split(".")
@@ -240,4 +246,29 @@ def test_loops_release_pinned_state(spark, algo):
         left[iterations] = sum(
             1 for k in sc._jsc.getPersistentRDDs().keys() if k > first)
         assert out.collect()
-    assert left[2] == left[8], left
+    assert left[2] == left[8] == RESULT_FRAMES[algo], left
+
+
+@pytest.mark.parametrize("algo", ["hits_fixed", "salsa_fixed"])
+def test_hits_salsa_four_stages_per_round(spark, algo):
+    """A HITS or SALSA round is two SpMV half-steps of two stages each:
+    the second half reads the pinned first, so nothing is computed twice.
+    Stages come from the status tracker, 1 round against 3."""
+    from graph_python_spark.algorithms import centrality
+
+    sc = spark.sparkContext
+    stages = {}
+    for rounds in (1, 3):
+        e = spark.createDataFrame([(i, (i * 7 + 3) % 50) for i in range(50)]
+                                  + [(i, (i + 1) % 50) for i in range(50)],
+                                  "i long, j long")
+        group = f"{algo}-rounds-{rounds}"
+        sc.setJobGroup(group, group)
+        try:
+            getattr(centrality, algo)(e, iterations=rounds)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        st = sc.statusTracker()
+        stages[rounds] = sum(len(st.getJobInfo(j).stageIds)
+                             for j in st.getJobIdsForGroup(group))
+    assert (stages[3] - stages[1]) / 2 == 4, stages
