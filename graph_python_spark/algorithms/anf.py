@@ -36,11 +36,13 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from graph_python_spark.operators.blocks import simple, vertex_ids
-from graph_python_spark.plans.iterate import iterative, loop_shuffle_width, materialize
+from graph_python_spark.plans.iterate import (fixpoint, iterative,
+                                              loop_shuffle_width, materialize,
+                                              release)
 
 
 def _digest64():
@@ -59,6 +61,42 @@ def _merge_sketches(col, k: int):
     return F.slice(F.array_sort(F.array_distinct(F.flatten(col))), 1, k)
 
 
+def _grow(e: DataFrame, k: int):
+    """One radius of ball growth over the source-partitioned edge table
+    ``e`` (s, d): sketch(v) ← sketch(v) ∪ ⋃_{v→u} sketch(u), as the step
+    of a :func:`fixpoint` loop over the (id, sketch, ...) state; any other
+    state columns pass through unchanged."""
+    def step(state: DataFrame) -> DataFrame:
+        nbr = (
+            e.join(state.select(F.col("id").alias("d"), "sketch"), "d")
+            .groupBy(F.col("s").alias("id"))
+            .agg(F.collect_list("sketch").alias("nbr_sketches"))
+        )
+        rest = [c for c in state.columns if c not in ("id", "sketch")]
+        return (
+            state.join(nbr, "id", "left")
+            .select(
+                "id",
+                _merge_sketches(
+                    F.concat(F.array(F.col("sketch")),
+                             F.coalesce(F.col("nbr_sketches"),
+                                        F.array().cast("array<array<long>>"))),
+                    k).alias("sketch"),
+                *rest)
+        )
+    return step
+
+
+def _estimate(k: int):
+    """Per-vertex ball-size estimate from a KMV sketch: the exact size
+    below k members, else (k−1)/U(kth digest)."""
+    kth_frac = (F.element_at("sketch", k).cast("double")
+                / F.lit(float(16 ** 15)))
+    n_exact = F.size("sketch")
+    return (F.when(n_exact < k, n_exact.cast("double"))
+            .otherwise(F.lit(float(k - 1)) / kth_frac))
+
+
 @iterative
 def anf_sketches(
     edges: DataFrame,
@@ -75,6 +113,8 @@ def anf_sketches(
     * ``est_reach`` — KMV estimate (k−1)/U(kth digest) when the sketch
       saturated, where U maps the int64 digest to (0,1); rounded
       to 1e-6.  The ball includes v itself.
+
+    The result reads the last pinned sketch state.
     """
     e = edges.select(F.col("i").alias("s"), F.col("j").alias("d")).distinct()
     verts = vertex_ids(e, "s", "d")
@@ -83,41 +123,13 @@ def anf_sketches(
     with loop_shuffle_width(edges.sparkSession, n_verts) as width:
         # edges partitioned by source once; every round's join reuses it
         e = materialize(e.repartition(partitions or width, "s"))
-        state = materialize(
-            verts.select("id", F.array(_digest64()).alias("sketch")))
-        for _ in range(radius):
-            nbr = (
-                e.join(state.select(F.col("id").alias("d"), "sketch"), "d")
-                .groupBy(F.col("s").alias("id"))
-                .agg(F.collect_list("sketch").alias("nbr_sketches"))
-            )
-            new = (
-                state.join(nbr, "id", "left")
-                .select(
-                    "id",
-                    _merge_sketches(
-                        F.concat(F.array(F.col("sketch")),
-                                 F.coalesce(F.col("nbr_sketches"),
-                                            F.array().cast("array<array<long>>"))),
-                        k).alias("sketch"))
-            )
-            prev, state = state, materialize(new)
-            prev.unpersist()
-
-    kth_frac = (F.element_at("sketch", k).cast("double")
-                / F.lit(float(16 ** 15)))
-    n_exact = F.size("sketch").cast("long")
-    out = (
-        state.select(
-            "id", n_exact.alias("n_exact"),
-            F.round(
-                F.when(n_exact < k, n_exact.cast("double"))
-                .otherwise(F.lit(float(k - 1)) / kth_frac), 6).alias("est_reach"))
-    )
-    out = out.localCheckpoint(eager=True)
-    state.unpersist()
-    e.unpersist()
-    return out
+        state, _ = fixpoint(
+            materialize(verts.select("id", F.array(_digest64()).alias("sketch"))),
+            _grow(e, k), radius)
+    release(e)
+    return state.select(
+        "id", F.size("sketch").cast("long").alias("n_exact"),
+        F.round(_estimate(k), 6).alias("est_reach"))
 
 
 @iterative
@@ -136,64 +148,39 @@ def neighborhood_function(
     Per-vertex estimates are quantized to integer micro-units BEFORE the
     global sum (`sum(round(est*1e6))` as BIGINT) so the total is
     order-independent and engine-bit-identical — the same trick the
-    k-means centroid update uses.  One extra 1-row aggregate per round;
-    no driver-side collect anywhere.
+    k-means centroid update uses.  Each round's total is observed on the
+    round's own pin, so the totals cost no job of their own; the result
+    is the (radius + 1)-row curve built from them.
     """
     e = edges.select(F.col("i").alias("s"), F.col("j").alias("d")).distinct()
     verts = vertex_ids(e, "s", "d")
     n_verts = verts.count()
 
-    def _total(state: DataFrame, r: int) -> DataFrame:
-        kth_frac = (F.element_at("sketch", k).cast("double")
-                    / F.lit(float(16 ** 15)))
-        n_exact = F.size("sketch")
-        est = (F.when(n_exact < k, n_exact.cast("double"))
-               .otherwise(F.lit(float(k - 1)) / kth_frac))
-        return state.agg(
-            F.lit(r).cast("long").alias("r"),
-            F.sum(F.round(est * 1e6, 0).cast("long")).alias("total_micro"))
+    total = F.sum(F.round(_estimate(k) * 1e6, 0).cast("long")).alias("t")
+    observed: list[Observation] = []
+
+    def step(state: DataFrame) -> DataFrame:
+        # the round's total is read off its own pin: no extra job
+        observed.append(Observation())
+        return grow(state).observe(observed[-1], total)
 
     with loop_shuffle_width(edges.sparkSession, n_verts) as width:
         e = materialize(e.repartition(partitions or width, "s"))
+        grow = _grow(e, k)
         state = materialize(
             verts.select("id", F.array(_digest64()).alias("sketch")))
-        totals = [materialize(_total(state, 0))]
-        for t in range(1, radius + 1):
-            nbr = (
-                e.join(state.select(F.col("id").alias("d"), "sketch"), "d")
-                .groupBy(F.col("s").alias("id"))
-                .agg(F.collect_list("sketch").alias("nbr_sketches"))
-            )
-            new = (
-                state.join(nbr, "id", "left")
-                .select(
-                    "id",
-                    _merge_sketches(
-                        F.concat(F.array(F.col("sketch")),
-                                 F.coalesce(F.col("nbr_sketches"),
-                                            F.array().cast("array<array<long>>"))),
-                        k).alias("sketch"))
-            )
-            prev, state = state, materialize(new)
-            prev.unpersist()
-            totals.append(materialize(_total(state, t)))
-        state.unpersist()
-        e.unpersist()
+        totals = [state.agg(total).first()["t"]]
+        state, _ = fixpoint(state, step, radius)
+        totals += [o.get["t"] for o in observed]
+    release(state, e)
 
-    curve = totals[0]
-    for t in totals[1:]:
-        curve = curve.unionByName(t)
-    final = totals[-1].select(F.col("total_micro").alias("_tm"))
-    out = (
-        curve.crossJoin(F.broadcast(final))
+    return (
+        edges.sparkSession.createDataFrame(
+            list(enumerate(totals)), "r long, total_micro long")
         .select("r", "total_micro",
-                F.round(F.col("total_micro").cast("double") / F.col("_tm"), 6)
-                .alias("frac"))
+                F.round(F.col("total_micro").cast("double")
+                        / F.lit(totals[-1]), 6).alias("frac"))
     )
-    out = out.localCheckpoint(eager=True)
-    for t in totals:
-        t.unpersist()
-    return out
 
 
 @iterative
@@ -225,8 +212,8 @@ def hyperball_harmonic(
     (k−1)/U estimator, same left-associated Δ/r accumulation), so the
     parity check holds even for saturated sketches.
 
-    Digests are the first 15 hex chars of md5(id) as int64 (60 bits) —
-    NOT the 33-byte hex strings anf_sketches carries: at 4M vertices the
+    Digests are ``_digest64``, the first 15 hex chars of md5(id) as
+    int64 (60 bits), not 33-byte hex strings: at 4M vertices the
     per-round sketch exchange drops ~5× (16·8B longs vs 16·33B strings)
     and the merge sorts machine ints, while lexicographic order of the
     fixed-width lowercase-hex prefix equals numeric order, so the SQL
@@ -235,9 +222,10 @@ def hyperball_harmonic(
 
     Scale shape: identical to :func:`anf_sketches` — one edge ⋈ state
     shuffle per radius over a pinned source-partitioned edge table,
-    O(V·k) state; the per-round (id, est) snapshots are O(V)-thin and
-    only joined once at the end.  No reference counterpart
-    (python-graphblas has no sketches); this is the scale path the exact
+    O(V·k) state; the running estimate and harmonic sum ride in the
+    pinned state as two doubles per vertex, so the result reads only the
+    last pin.  No reference counterpart (python-graphblas has no
+    sketches); this is the scale path the exact
     ``algorithms/centrality.harmonic_sampled`` cannot take past a few
     thousand sources.
     """
@@ -246,59 +234,30 @@ def hyperball_harmonic(
     verts = vertex_ids(e, "s", "d")
     n_verts = verts.count()
 
-    def _est(state: DataFrame) -> DataFrame:
-        kth_frac = (F.element_at("sketch", k).cast("double")
-                    / F.lit(float(16 ** 15)))
-        n_exact = F.size("sketch")
-        return state.select(
-            "id",
-            F.when(n_exact < k, n_exact.cast("double"))
-            .otherwise(F.lit(float(k - 1)) / kth_frac).alias("est"))
-
-    digest = F.conv(
-        F.substring(F.md5(F.col("id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
     with loop_shuffle_width(edges.sparkSession, n_verts) as width:
         e = materialize(e.repartition(partitions or width, "s"))
-        state = materialize(
-            verts.select("id", F.array(digest).alias("sketch")))
-        ests = [materialize(_est(state))]
-        for _ in range(radius):
-            nbr = (
-                e.join(state.select(F.col("id").alias("d"), "sketch"), "d")
-                .groupBy(F.col("s").alias("id"))
-                .agg(F.collect_list("sketch").alias("nbr_sketches"))
-            )
-            new = (
-                state.join(nbr, "id", "left")
-                .select(
-                    "id",
-                    _merge_sketches(
-                        F.concat(F.array(F.col("sketch")),
-                                 F.coalesce(F.col("nbr_sketches"),
-                                            F.array().cast("array<array<long>>"))),
-                        k).alias("sketch"))
-            )
-            prev, state = state, materialize(new)
-            prev.unpersist()
-            ests.append(materialize(_est(state)))
-        state.unpersist()
-        e.unpersist()
+        grow = _grow(e, k)
+        r = 0
 
-    # left-associated Δ/r accumulation — the oracle mirrors this exact
-    # expression tree, so the double arithmetic is engine-bit-identical
-    out = ests[0].select("id", F.col("est").alias("est0"))
-    for r in range(1, radius + 1):
-        out = out.join(
-            ests[r].select("id", F.col("est").alias(f"est{r}")), "id")
-    h = F.lit(0.0)
-    for r in range(1, radius + 1):
-        h = h + (F.col(f"est{r}") - F.col(f"est{r - 1}")) / F.lit(float(r))
-    out = out.select("id", F.round(h, 6).alias("harmonic"))
-    out = out.localCheckpoint(eager=True)
-    for s in ests:
-        s.unpersist()
-    return out
+        def step(state: DataFrame) -> DataFrame:
+            # left-associated Δ/r accumulation — the oracle mirrors this
+            # exact expression tree, so the double arithmetic is
+            # engine-bit-identical
+            nonlocal r
+            r += 1
+            est = _estimate(k)
+            return grow(state).select(
+                "id", "sketch", est.alias("est"),
+                (F.col("h") + (est - F.col("est")) / F.lit(float(r))).alias("h"))
+
+        state, _ = fixpoint(
+            materialize(
+                verts.select("id", F.array(_digest64()).alias("sketch"))
+                .select("id", "sketch", _estimate(k).alias("est"),
+                        F.lit(0.0).alias("h"))),
+            step, radius)
+    release(e)
+    return state.select("id", F.round("h", 6).alias("harmonic"))
 
 
 def effective_diameter(
@@ -349,6 +308,4 @@ def effective_diameter(
                 / (F.col("total_micro") - F.col("_prev")).cast("double"))
             .alias("_eff"))
     )
-    out = hit.select(F.round("_eff", 6).alias("eff_diameter"), "r", "frac")
-    curve.unpersist()
-    return out
+    return hit.select(F.round("_eff", 6).alias("eff_diameter"), "r", "frac")

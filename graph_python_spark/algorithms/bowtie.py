@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 from graph_python_spark.algorithms.scc import strongly_connected_components
 from graph_python_spark.operators.blocks import simple, vertex_ids
 from graph_python_spark.plans.iterate import (iterative, loop_shuffle_width,
-                                              materialize)
+                                              materialize, release)
 
 
 def _reach_tagged(tagged_edges: DataFrame, tagged_seeds: DataFrame,
@@ -74,7 +74,7 @@ def _reach_tagged(tagged_edges: DataFrame, tagged_seeds: DataFrame,
             .join(reached, ["tag", "id"], "left_anti")
         )
         if nxt.isEmpty():
-            nxt.unpersist()
+            release(nxt)
             break
         parts.append(nxt)
         frontier = nxt
@@ -180,9 +180,5 @@ def bowtie_decomposition(
         .select("id", region.alias("region"))
     )
     res = materialize(res)
-    for df in (eb, tagged, verts, core, in_, out):
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+    release(eb, tagged, verts, core, in_, out)
     return res

@@ -19,8 +19,10 @@ hops of S, so on a 10^9-vertex graph a 5-seed PPR touches only the seed
 neighborhood — the frontier-sized shuffles are the whole point of running
 this sparse instead of reusing the dense-teleport pagerank loop.
 
-Both loops: cached adjacency built once, localCheckpoint per round
-(lineage truncation), shuffle width derived from the moving-state size
+Both loops: cached adjacency built once, every round pinned and the
+replaced state freed (the single-vector loops through the loop driver
+``plans/iterate.fixpoint``; HITS/SALSA pin their two half-steps
+themselves), shuffle width derived from the moving-state size
 (``loop_shuffle_width``), zero per-row Python.
 """
 
@@ -32,8 +34,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_python_spark.operators.blocks import vertex_ids
-from graph_python_spark.plans.iterate import (iterative, loop_shuffle_width,
-                                              materialize, release)
+from graph_python_spark.plans.iterate import (fixpoint, iterative,
+                                              loop_shuffle_width, materialize,
+                                              release)
 
 
 @iterative
@@ -123,6 +126,30 @@ def ppr_fixed(
     Returns the SPARSE result (id, score): exactly the vertices with
     score > 0 — seeds plus everything within ``iterations`` hops.
     """
+    n_seeds = seeds.count()
+    if n_seeds == 0:
+        return edges.sparkSession.createDataFrame([], "id long, score double")
+    return _seeded_pagerank(edges, seeds, n_seeds, iterations, damping,
+                           partitions)
+
+
+def _seeded_pagerank(
+    edges: DataFrame,
+    seeds: DataFrame,
+    norm: int,
+    iterations: int,
+    damping: float,
+    partitions: Optional[int],
+) -> DataFrame:
+    """Exactly ``iterations`` steps of r_{t+1} = (1-d)·p + d·A_row^T r_t
+    with p = 1/``norm`` on ``seeds`` (column id), 0 elsewhere, and
+    r_0 = p — sparse support, pagerank_3f dangling convention.  The one
+    seeded loop: ``ppr_fixed`` passes norm = |seeds|, TrustRank's
+    core-biased PageRank norm = |V|.  As in the oracles, the teleport
+    term is written (1-d)/norm and r_0 as 1/norm.
+
+    Returns the sparse (id, score) relation, reading only the last
+    pinned state once a step has run."""
     eb = edges.select("i", "j").distinct()
     if partitions is not None:
         eb = eb.repartition(partitions, "i")
@@ -132,35 +159,32 @@ def ppr_fixed(
         eb.join(eb.groupBy("i").agg(F.count("*").alias("_deg")), "i")
         .select("i", "j", (F.lit(damping) / F.col("_deg")).alias("t"))
     )
-    n_seeds = seeds.count()
-    if n_seeds == 0:
-        return edges.sparkSession.createDataFrame([], "id long, score double")
     tel = materialize(
         seeds.select(F.col("id").alias("i"),
-                     F.lit((1.0 - damping) / n_seeds).alias("p"))
+                     F.lit((1.0 - damping) / norm).alias("p"))
     )
-    r = tel.select("i", (F.col("p") / F.lit(1.0 - damping)).alias("v"))  # r_0 = p
+
+    def step(r):
+        contrib = (
+            et.join(r, "i")
+            .select(F.col("j").alias("i"), (F.col("t") * F.col("v")).alias("w"))
+            .groupBy("i")
+            .agg(F.sum("w").alias("c"))
+        )
+        return (
+            tel.join(contrib, "i", "full_outer")
+            .select("i", (F.coalesce(F.col("p"), F.lit(0.0))
+                          + F.coalesce(F.col("c"), F.lit(0.0))).alias("v"))
+        )
+
     # width bound: support can grow to O(V) <= O(E); sizing by the edge
     # count never under-partitions an expansive graph, while a genuinely
     # local PPR still gets the narrow-loop win from the configured cap
     with loop_shuffle_width(edges.sparkSession, max(et.count(), 1)):
-        for _ in range(iterations):
-            contrib = (
-                et.join(r, "i")
-                .select(F.col("j").alias("i"), (F.col("t") * F.col("v")).alias("w"))
-                .groupBy("i")
-                .agg(F.sum("w").alias("c"))
-            )
-            prev, r = r, materialize(
-                tel.join(contrib, "i", "full_outer")
-                .select("i", (F.coalesce(F.col("p"), F.lit(0.0))
-                              + F.coalesce(F.col("c"), F.lit(0.0))).alias("v"))
-            )
-            release(prev)
-    if iterations > 0:
-        # r is pinned; the loop-invariant operands can release their blocks
-        # (with 0 iterations r is still a lazy view over tel — keep it)
-        release(et, tel)
+        r, done = fixpoint(tel.select("i", F.lit(1.0 / norm).alias("v")),
+                           step, iterations)
+    # with no step run, r is still a view of tel
+    release(et, tel if done else None)
     return r.select(F.col("i").alias("id"), F.col("v").alias("score"))
 
 
@@ -198,24 +222,25 @@ def ppr_batch(
         seeds.select(F.col("id").alias("s"), F.col("id").alias("i"),
                      F.lit(1.0 - damping).alias("p"))
     )
-    r = tel.select("s", "i", F.lit(1.0).alias("v"))  # r_0 = e_seed
+
+    def step(r):
+        contrib = (
+            et.join(r, "i")
+            .select("s", F.col("j").alias("i"),
+                    (F.col("t") * F.col("v")).alias("w"))
+            .groupBy("s", "i")
+            .agg(F.sum("w").alias("c"))
+        )
+        return (
+            tel.join(contrib, ["s", "i"], "full_outer")
+            .select("s", "i", (F.coalesce(F.col("p"), F.lit(0.0))
+                               + F.coalesce(F.col("c"), F.lit(0.0))).alias("v"))
+        )
+
     with loop_shuffle_width(edges.sparkSession, max(et.count(), 1)):
-        for _ in range(iterations):
-            contrib = (
-                et.join(r, "i")
-                .select("s", F.col("j").alias("i"),
-                        (F.col("t") * F.col("v")).alias("w"))
-                .groupBy("s", "i")
-                .agg(F.sum("w").alias("c"))
-            )
-            prev, r = r, materialize(
-                tel.join(contrib, ["s", "i"], "full_outer")
-                .select("s", "i", (F.coalesce(F.col("p"), F.lit(0.0))
-                                   + F.coalesce(F.col("c"), F.lit(0.0))).alias("v"))
-            )
-            release(prev)
-    if iterations > 0:
-        release(et, tel)
+        r, done = fixpoint(tel.select("s", "i", F.lit(1.0).alias("v")),  # r_0 = e_seed
+                           step, iterations)
+    release(et, tel if done else None)
     return r.select(F.col("s").alias("seed"), F.col("i").alias("id"),
                     F.col("v").alias("score"))
 
@@ -340,29 +365,9 @@ def katz_fixed(
     once partitioned on the join key, one O(E) contribution shuffle per
     round, per-round state pinned.
     """
-    spark = edges.sparkSession
-    raw = edges.select("i", "j")
-    vertices = materialize(vertex_ids(raw))
-    n = vertices.count()
-    with loop_shuffle_width(spark, n) as width:
-        w = partitions if partitions is not None else width
-        if partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
-        eb = materialize(raw.repartition(w, "i").dropDuplicates(["i", "j"]))
-        x = vertices.select(F.col("id"), F.lit(1.0).alias("v"))
-        for _ in range(iterations):
-            contrib = (
-                eb.join(x.withColumnRenamed("id", "i"), "i")
-                .groupBy(F.col("j").alias("id"))
-                .agg(F.sum("v").alias("c"))
-            )
-            prev, x = x, materialize(
-                vertices.join(contrib, "id", "left_outer")
-                .select("id", (F.lit(1.0) + F.lit(alpha)
-                               * F.coalesce(F.col("c"), F.lit(0.0))).alias("v"))
-            )
-            release(prev)
-    release(eb)
+    x = _in_spmv_fixed(
+        edges, iterations, partitions, F.lit(1.0),
+        lambda c: F.lit(1.0) + F.lit(alpha) * F.coalesce(c, F.lit(0.0)))
     return x.select("id", F.col("v").alias("katz"))
 
 
@@ -388,6 +393,21 @@ def eigenvector_fixed(
     over all vertices, L1-normalized (score sums to 1; vertices with no
     in-edges reached within K rounds score 0).
     """
+    x = _in_spmv_fixed(
+        edges, iterations, partitions, F.lit(1).cast("long"),
+        lambda c: F.coalesce(c, F.lit(0)).cast("long"))
+    total = x.agg(F.sum("v")).first()[0] or 1
+    return x.select(
+        "id", (F.col("v").cast("double") / F.lit(float(total))).alias("score"))
+
+
+def _in_spmv_fixed(edges: DataFrame, iterations: int,
+                   partitions: Optional[int], x0, update) -> DataFrame:
+    """Exactly ``iterations`` rounds of x(j) ← update(Σ_{i→j} x(i)) over
+    every vertex of the deduped directed edge set, from x = ``x0``;
+    ``update`` maps the summed contribution Column (null where nothing
+    flows in) to the new value.  Returns (id, v): the last pinned round,
+    which reads nothing else once a round has run."""
     spark = edges.sparkSession
     raw = edges.select("i", "j")
     vertices = materialize(vertex_ids(raw))
@@ -397,23 +417,21 @@ def eigenvector_fixed(
         if partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
         eb = materialize(raw.repartition(w, "i").dropDuplicates(["i", "j"]))
-        x = vertices.select("id", F.lit(1).cast("long").alias("v"))
-        for _ in range(iterations):
+
+        def step(x):
             contrib = (
                 eb.join(x.withColumnRenamed("id", "i"), "i")
                 .groupBy(F.col("j").alias("id"))
                 .agg(F.sum("v").alias("c"))
             )
-            prev, x = x, materialize(
-                vertices.join(contrib, "id", "left_outer")
-                .select("id", F.coalesce(F.col("c"), F.lit(0)).cast("long")
-                        .alias("v"))
-            )
-            release(prev)
-    release(eb)
-    total = x.agg(F.sum("v")).first()[0] or 1
-    return x.select(
-        "id", (F.col("v").cast("double") / F.lit(float(total))).alias("score"))
+            return (vertices.join(contrib, "id", "left_outer")
+                    .select("id", update(F.col("c")).alias("v")))
+
+        x, done = fixpoint(vertices.select("id", x0.alias("v")), step,
+                           iterations)
+    # with no round run, x is still a view of vertices
+    release(eb, vertices if done else None)
+    return x
 
 
 def _multi_source_distances(
@@ -438,23 +456,24 @@ def _multi_source_distances(
     eb = materialize(eb.dropDuplicates(["i", "j"]))
     n_edges = eb.count()
 
-    dist = materialize(
-        sources.select(F.col("id").alias("src"), F.col("id").alias("id"),
-                       F.lit(0).cast("long").alias("v"))
-    )
+    def step(dist):
+        cand = (
+            eb.join(dist.withColumnRenamed("id", "i"), "i")
+            .groupBy("src", F.col("j").alias("id"))
+            .agg(F.min(F.col("v") + 1).alias("_nd"))
+        )
+        return (
+            dist.join(cand, ["src", "id"], "full_outer")
+            .select("src", "id",
+                    F.least(F.col("v"), F.col("_nd")).alias("v"))
+        )
+
     with loop_shuffle_width(spark, max(n_edges, 1)):
-        for _ in range(rounds):
-            cand = (
-                eb.join(dist.withColumnRenamed("id", "i"), "i")
-                .groupBy("src", F.col("j").alias("id"))
-                .agg(F.min(F.col("v") + 1).alias("_nd"))
-            )
-            prev, dist = dist, materialize(
-                dist.join(cand, ["src", "id"], "full_outer")
-                .select("src", "id",
-                        F.least(F.col("v"), F.col("_nd")).alias("v"))
-            )
-            release(prev)
+        dist, _ = fixpoint(
+            materialize(sources.select(
+                F.col("id").alias("src"), F.col("id").alias("id"),
+                F.lit(0).cast("long").alias("v"))),
+            step, rounds)
     release(eb)
     return dist
 

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from graph_python_spark.algorithms.mis import PRIO_MOD, PRIO_MULT
 from graph_python_spark.operators.blocks import symmetric
 from graph_python_spark.plans.iterate import (iterative, loop_shuffle_width,
-                                              materialize)
+                                              materialize, release)
 
 ROUND_SALT = 777767777
 
@@ -67,7 +67,8 @@ def greedy_coloring(
     Returns ``(colors(id, color), rounds)``: a proper coloring (adjacent
     vertices never share a color; colors are dense small ints starting at
     0) and the number of rounds executed (including the final round that
-    empties the uncolored set).
+    empties the uncolored set).  The colors are the last pinned round
+    itself; every other round's state is freed.
     """
     spark = edges.sparkSession
     full = materialize(symmetric(edges, partitions=partitions))
@@ -114,13 +115,14 @@ def greedy_coloring(
                         ).cast("long").alias("color"),
                     )
                 )
-                colors = materialize(colors.unionByName(newc))
+                prev, colors = colors, materialize(colors.unionByName(newc))
+                release(prev)
             else:
                 colors = materialize(
                     cand.select("id", F.lit(0).cast("long").alias("color")))
             # retire the winners from the uncolored set + residual edges
             unc_next = materialize(unc.join(cand, "id", "left_anti"))
-            unc.unpersist()
+            release(unc)
             unc = unc_next
             probe = cand.limit(inset_cap + 1).collect()
             if len(probe) <= inset_cap:
@@ -134,16 +136,11 @@ def greedy_coloring(
                        .join(rm_d, "d", "left_anti"))
             nxt = materialize(nxt)
             if cur is not full:
-                cur.unpersist()
+                release(cur)
             cur = nxt
-            cand.unpersist()
+            release(cand)
 
+    release(full, cur, unc)
     if colors is None:
         colors = spark.createDataFrame([], "id long, color long")
-    out = materialize(colors.select("id", "color"))
-    for df in (full, cur, unc, colors):
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    return out, rounds
+    return colors, rounds

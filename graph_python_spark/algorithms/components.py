@@ -22,8 +22,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_python_spark.operators.blocks import mirror, symmetric, vertex_ids
-from graph_python_spark.plans.iterate import (IterationState, materialize,
-                                              iterative, loop_shuffle_width)
+from graph_python_spark.plans.iterate import (IterationState, fixpoint,
+                                              iterative, loop_shuffle_width,
+                                              materialize, release)
 
 
 @iterative
@@ -37,7 +38,9 @@ def connected_components(
     """Returns (labels(id, component), rounds). component = min id in component.
 
     The adjacency is built over ``mirror(edges)``: its self-loops keep a
-    vertex whose only edge is a self-loop, and the table dedupes itself."""
+    vertex whose only edge is a self-loop, and the table dedupes itself.
+    The adjacency and vertex caches are freed after the loop; the result
+    reads only the last pinned labels."""
     from graph_python_spark.operators.blocks import adjacency_table
 
     adj = adjacency_table(mirror(edges), "i", "j", partitions)
@@ -54,19 +57,11 @@ def connected_components(
             f = states["labels"]
     f = materialize(f)
 
-    rounds = start
-    with loop_shuffle_width(edges.sparkSession, vertices.count()):
-        f, rounds = _cc_converge_loop(
-            adj, f, start, max_rounds, rounds, checkpoint)
-    return f.select(F.col("i").alias("id"), F.col("v").alias("component")), rounds
-
-
-def _cc_converge_loop(adj, f, start, max_rounds, rounds, checkpoint):
-    for k in range(start, max_rounds):
+    def step(f):
         # hook: mngp[d] = min over neighbors s of f[s]   (min_second SpMV,
         # adjacency form: O(V) join probe, O(E) explode inline)
         nbrmin = (
-            adj.join(f.withColumnRenamed("i", "s"), "s")
+            adj.join(f.select(F.col("i").alias("s"), "v"), "s")
             .select(F.explode("ds").alias("i"), "v")
             .groupBy("i")
             .agg(F.min("v").alias("_nm"))
@@ -82,26 +77,25 @@ def _cc_converge_loop(adj, f, start, max_rounds, rounds, checkpoint):
             F.coalesce(F.col("_nm"), F.col("v")),
             F.coalesce(F.col("_gp"), F.col("v")),
         )
-        # _chg rides along in the materialized frame, so the convergence
-        # check is one cheap aggregate over the cached checkpoint instead
-        # of a second join + recompute per round
-        new_f = (
-            f.join(nbrmin, "i", "left_outer")
+        return (
+            f.select("i", "v")
+            .join(nbrmin, "i", "left_outer")
             .join(gp, "i", "left_outer")
-            .select("i", nv.alias("_nv"), (nv != F.col("v")).alias("_chg"))
-            .select("i", F.col("_nv").alias("v"), "_chg")
+            .select("i", nv.alias("v"), (nv != F.col("v")).alias("_chg"))
         )
-        new_f = materialize(new_f)
-        changed = int(new_f.agg(
-            F.coalesce(F.max(F.col("_chg").cast("int")), F.lit(0))
-        ).first()[0])
-        f = new_f.drop("_chg")
-        rounds = k + 1
+
+    def after(_old, new, k):
         if checkpoint is not None:
-            checkpoint.save(rounds, {"labels": f}, {"changed": changed})
-        if changed == 0:
-            break
-    return f, rounds
+            checkpoint.save(start + k + 1, {"labels": new.select("i", "v")}, {})
+
+    # each round's _chg flag rides along in the pinned state, so the
+    # driver reads convergence off the pin itself, in the same job
+    with loop_shuffle_width(edges.sparkSession, vertices.count()):
+        f, done = fixpoint(f, step, max_rounds - start,
+                           changed=F.max("_chg"), after=after)
+    release(adj, vertices)
+    return (f.select(F.col("i").alias("id"), F.col("v").alias("component")),
+            start + done)
 
 
 @iterative
@@ -114,22 +108,26 @@ def cc_fixed_rounds(edges: DataFrame, vertices: Optional[DataFrame] = None,
         vertices = vertex_ids(edges)
     f = vertices.select(F.col("id").alias("i"), F.col("id").alias("v"))
     with loop_shuffle_width(edges.sparkSession, f.count()):
-        return _cc_rounds(esym, f, rounds)
+        f = _cc_rounds(esym, f, rounds)
+    release(esym)
+    return f.select(F.col("i").alias("id"), F.col("v").alias("component"))
 
 
 def _cc_rounds(esym: DataFrame, f: DataFrame, rounds: int) -> DataFrame:
-    for _ in range(rounds):
+    """Exactly ``rounds`` min-label hook rounds over the symmetric edge
+    relation from labels ``f`` (i, v); returns the pinned (i, v) state."""
+    def step(f):
         nbrmin = (
             esym.join(f.withColumnRenamed("i", "s"), "s")
             .groupBy(F.col("d").alias("i"))
             .agg(F.min("v").alias("_nm"))
         )
-        f = (
+        return (
             f.join(nbrmin, "i", "left_outer")
             .select("i", F.least(F.col("v"), F.coalesce(F.col("_nm"), F.col("v"))).alias("v"))
         )
-        f = materialize(f)
-    return f.select(F.col("i").alias("id"), F.col("v").alias("component"))
+
+    return fixpoint(f, step, rounds)[0]
 
 
 def cc_incremental(edges: DataFrame, init_labels: DataFrame,
@@ -162,7 +160,9 @@ def cc_incremental(edges: DataFrame, init_labels: DataFrame,
                 F.coalesce(F.col("_c0"), F.col("id")).alias("v"))
     )
     with loop_shuffle_width(edges.sparkSession, f.count()):
-        return _cc_rounds(esym, f, rounds)
+        f = _cc_rounds(esym, f, rounds)
+    release(esym)
+    return f.select(F.col("i").alias("id"), F.col("v").alias("component"))
 
 
 def bipartite_sides(edges: DataFrame, cc_rounds: int = 12,
@@ -188,23 +188,27 @@ def bipartite_sides(edges: DataFrame, cc_rounds: int = 12,
     vertices = vertex_ids(edges)
     f = vertices.select(F.col("id").alias("i"), F.col("id").alias("v"))
     with loop_shuffle_width(edges.sparkSession, f.count()):
-        comp = materialize(_cc_rounds(esym, f, cc_rounds))
-        dist = comp.filter(F.col("id") == F.col("component")).select(
-            "id", F.lit(0).cast("long").alias("v"))
-        for _ in range(bfs_rounds):
+        comp = _cc_rounds(esym, f, cc_rounds)
+
+        def step(dist):
             cand = (
                 esym.join(dist.withColumnRenamed("id", "s"), "s")
                 .groupBy(F.col("d").alias("id"))
                 .agg(F.min(F.col("v") + 1).alias("_nd"))
             )
-            dist = (
+            return (
                 dist.join(cand, "id", "full_outer")
                 .select("id", F.least(F.col("v"), F.col("_nd")).alias("v"))
             )
-            dist = materialize(dist)
+
+        dist, _ = fixpoint(
+            comp.filter(F.col("i") == F.col("v")).select(
+                F.col("i").alias("id"), F.lit(0).cast("long").alias("v")),
+            step, bfs_rounds)
     out = (
-        comp.join(dist, "id")
+        comp.select(F.col("i").alias("id"), F.col("v").alias("component"))
+        .join(dist, "id")
         .select("id", "component", (F.col("v") % 2).alias("side"))
     )
-    esym.unpersist()
+    release(esym)
     return out

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from graph_python_spark.operators.blocks import symmetric
 from graph_python_spark.plans.iterate import (iterative, loop_shuffle_width,
-                                              materialize)
+                                              materialize, release)
 
 
 @iterative
@@ -86,7 +86,7 @@ def densest_subgraph(
             # alive beyond the loop state (earliest round wins ties)
             if best is None or Fraction(n_e, n_v) > best[1]:
                 if best is not None and best[2] is not live:
-                    best[2].unpersist()
+                    release(best[2])
                 best = (r, Fraction(n_e, n_v), live)
             # peel: deg·V·q <= 2E·(p+q), all 64-bit integers
             deg = live.groupBy("s").agg(F.count(F.lit(1)).alias("_deg"))
@@ -98,7 +98,7 @@ def densest_subgraph(
                 .join(keep.withColumnRenamed("s", "d"), "d", "left_semi")
                 .repartition(partitions or width, "s"))
             if live is not best[2]:
-                live.unpersist()
+                release(live)
             live = new_live
 
         if not peeled_dry:
@@ -127,11 +127,8 @@ def densest_subgraph(
         if best is not None:
             members = best[2].select(F.col("s").alias("id")).distinct() \
                 .localCheckpoint(eager=True)
-            best[2].unpersist()
+            release(best[2])
         else:
             members = spark.createDataFrame([], "id long")
-        try:
-            live.unpersist()
-        except Exception:
-            pass
+        release(live)
     return summary, members

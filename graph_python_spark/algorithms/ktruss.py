@@ -28,8 +28,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_python_spark.operators.blocks import undirected
-from graph_python_spark.plans.iterate import (iterative, loop_shuffle_width,
-                                              materialize)
+from graph_python_spark.plans.iterate import (fixpoint, iterative,
+                                              loop_shuffle_width, materialize,
+                                              release)
 
 
 def _edge_support(cur: DataFrame) -> DataFrame:
@@ -80,15 +81,15 @@ def ktruss(
             rounds += 1
             if n_edges == prev_edges:
                 # fixpoint: no edge dropped, so `support` is final
-                pinned.unpersist()
+                release(pinned)
                 return kept, rounds
-            pinned.unpersist()
+            release(pinned)
             pinned = kept
             cur = kept.select("a", "b")
             prev_edges = n_edges
     # max_rounds exhausted: report the current state's support
     out = materialize(_edge_support(cur).filter(F.col("support") >= k - 2))
-    pinned.unpersist()
+    release(pinned)
     return out, rounds
 
 
@@ -115,7 +116,8 @@ def trussness_rounds(edges: DataFrame, rounds: int = 8,
 
     Returns (a, b, trussness) for every canonical edge in >= 1 triangle
     (triangle-free edges have trussness 0 and are omitted, matching
-    ``_edge_support``'s support relation).
+    ``_edge_support``'s support relation).  The result reads the last
+    pinned estimate vector; the edge and triangle pins are freed.
     """
     from pyspark.sql.window import Window
 
@@ -134,33 +136,31 @@ def trussness_rounds(edges: DataFrame, rounds: int = 8,
     )
     t = materialize(stacked.groupBy("a", "b")
                     .agg(F.count("*").cast("long").alias("t")))
+    release(cur)
     w = Window.partitionBy("a", "b").orderBy(F.desc("x"))
+
+    def step(t):
+        t1 = t.select("a", "b", F.col("t").alias("_t1"))
+        t2 = t.select(F.col("a").alias("b"), F.col("b").alias("c"),
+                      F.col("t").alias("_t2"))
+        t3 = t.select("a", F.col("b").alias("c"), F.col("t").alias("_t3"))
+        tt = tri.join(t1, ["a", "b"]).join(t2, ["b", "c"]).join(t3, ["a", "c"])
+        contribs = (
+            tt.select("a", "b", F.least("_t2", "_t3").alias("x"))
+            .unionAll(tt.select(F.col("b").alias("a"), F.col("c").alias("b"),
+                                F.least("_t1", "_t3").alias("x")))
+            .unionAll(tt.select("a", F.col("c").alias("b"),
+                                F.least("_t1", "_t2").alias("x")))
+        )
+        return (
+            contribs.select("a", "b", "x", F.row_number().over(w).alias("_rn"))
+            .select("a", "b",
+                    F.least(F.col("_rn").cast("long"), F.col("x")).alias("_h"))
+            .groupBy("a", "b")
+            .agg(F.max("_h").alias("t"))
+        )
+
     with loop_shuffle_width(edges.sparkSession, max(tri.count(), 1)):
-        for _ in range(rounds):
-            t1 = t.select("a", "b", F.col("t").alias("_t1"))
-            t2 = t.select(F.col("a").alias("b"), F.col("b").alias("c"),
-                          F.col("t").alias("_t2"))
-            t3 = t.select("a", F.col("b").alias("c"), F.col("t").alias("_t3"))
-            tt = tri.join(t1, ["a", "b"]).join(t2, ["b", "c"]).join(t3, ["a", "c"])
-            contribs = (
-                tt.select("a", "b", F.least("_t2", "_t3").alias("x"))
-                .unionAll(tt.select(F.col("b").alias("a"), F.col("c").alias("b"),
-                                    F.least("_t1", "_t3").alias("x")))
-                .unionAll(tt.select("a", F.col("c").alias("b"),
-                                    F.least("_t1", "_t2").alias("x")))
-            )
-            nxt = (
-                contribs.select("a", "b", "x", F.row_number().over(w).alias("_rn"))
-                .select("a", "b",
-                        F.least(F.col("_rn").cast("long"), F.col("x")).alias("_h"))
-                .groupBy("a", "b")
-                .agg(F.max("_h").alias("t"))
-            )
-            prev, t = t, materialize(nxt)
-            prev.unpersist()
-    out = t.select("a", "b", F.col("t").alias("trussness"))
-    out = out.localCheckpoint(eager=True)
-    t.unpersist()
-    tri.unpersist()
-    cur.unpersist()
-    return out
+        t, _ = fixpoint(t, step, rounds)
+    release(tri)
+    return t.select("a", "b", F.col("t").alias("trussness"))

@@ -20,7 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_python_spark.operators.blocks import mirror
-from graph_python_spark.plans.iterate import materialize, iterative
+from graph_python_spark.plans.iterate import (fixpoint, iterative, materialize,
+                                              release)
 
 
 @iterative
@@ -34,7 +35,10 @@ def label_propagation(
     """Returns (labels(id, label), sweeps).
 
     ``fixed_sweeps``: run exactly that many synchronous sweeps with no
-    convergence action (deterministic, used by the oracle-checked query).
+    convergence test (deterministic, used by the oracle-checked query).
+    Otherwise sweeps run until one changes no label, read from a flag in
+    the pinned sweep.  The adjacency and vertex caches are freed after
+    the loop; the result reads only the last pinned labels.
     """
     from graph_python_spark.operators.blocks import adjacency_table
 
@@ -45,43 +49,42 @@ def label_propagation(
         vertices = adj.select(F.col("s").alias("id")).distinct()  # s covers all; distinct: hub rows may be chunked
     vertices = vertices.select("id").cache()
 
-    labels = vertices.select(F.col("id").alias("i"), F.col("id").alias("lbl"))
-    labels = materialize(labels)
-    sweeps = 0
-    total = fixed_sweeps if fixed_sweeps is not None else max_sweeps
-    for k in range(total):
-        # count neighbor labels per vertex (adjacency form: O(V) join probe,
-        # O(E) explode inline with the partial agg; one shuffle)
-        counts = (
-            adj.join(labels.withColumnRenamed("i", "s"), "s")
-            .select(F.explode("ds").alias("i"), "lbl")
-            .groupBy("i", "lbl")
-            .agg(F.count("*").alias("n"))
-        )
-        # argmax with smallest-label tie-break: min over (-n, lbl) lexicographic
-        best = counts.groupBy("i").agg(
-            F.min_by(F.col("lbl"), F.struct((-F.col("n")).alias("negn"), F.col("lbl"))).alias("_best")
-        )
-        new_labels = (
+    def step(labels):
+        best = _best_labels(adj, labels)
+        # _chg rides along in the pinned sweep, so the driver reads
+        # convergence off the pin itself, in the same job
+        return (
             labels.join(best, "i", "left_outer")
-            .select("i", F.coalesce(F.col("_best"), F.col("lbl")).alias("lbl"))
+            .select("i", F.coalesce(F.col("_best"), F.col("lbl")).alias("lbl"),
+                    (F.col("_best").isNotNull()
+                     & (F.col("_best") != F.col("lbl"))).alias("_chg"))
         )
-        new_labels = materialize(new_labels)
-        sweeps = k + 1
-        if fixed_sweeps is None:
-            changed = (
-                labels.withColumnRenamed("lbl", "_old")
-                .join(new_labels, "i")
-                .filter(F.col("_old") != F.col("lbl"))
-                .limit(1)
-                .count()
-            )
-            labels = new_labels
-            if changed == 0:
-                break
-        else:
-            labels = new_labels
+
+    labels = materialize(
+        vertices.select(F.col("id").alias("i"), F.col("id").alias("lbl")))
+    if fixed_sweeps is None:
+        labels, sweeps = fixpoint(labels, step, max_sweeps,
+                                  changed=F.max("_chg"))
+    else:
+        labels, sweeps = fixpoint(labels, step, fixed_sweeps)
+    release(adj, vertices)
     return labels.select(F.col("i").alias("id"), F.col("lbl").alias("label")), sweeps
+
+
+def _best_labels(adj: DataFrame, labels: DataFrame) -> DataFrame:
+    """(i, _best): each vertex's most frequent neighbor label, smallest
+    label on ties.  Counts neighbor labels per vertex in the adjacency
+    form (O(V) join probe, O(E) explode inline with the partial agg; one
+    shuffle), then takes the argmax as the min over (-n, lbl)."""
+    counts = (
+        adj.join(labels.select(F.col("i").alias("s"), "lbl"), "s")
+        .select(F.explode("ds").alias("i"), "lbl")
+        .groupBy("i", "lbl")
+        .agg(F.count("*").alias("n"))
+    )
+    return counts.groupBy("i").agg(
+        F.min_by(F.col("lbl"),
+                 F.struct((-F.col("n")).alias("negn"), F.col("lbl"))).alias("_best"))
 
 
 def seeded_label_propagation(
@@ -110,26 +113,16 @@ def seeded_label_propagation(
                           "i", "j", partitions)
     seed_rel = materialize(
         seeds.select(F.col("id").alias("i"), F.col("label").alias("lbl")))
-    labels = seed_rel
-    for _ in range(rounds):
-        counts = (
-            adj.join(labels.withColumnRenamed("i", "s"), "s")
-            .select(F.explode("ds").alias("i"), "lbl")
-            .groupBy("i", "lbl")
-            .agg(F.count("*").alias("n"))
-        )
-        best = counts.groupBy("i").agg(
-            F.min_by(F.col("lbl"),
-                     F.struct((-F.col("n")).alias("negn"),
-                              F.col("lbl"))).alias("lbl"))
-        new_labels = seed_rel.unionByName(
+
+    def step(labels):
+        best = _best_labels(adj, labels).withColumnRenamed("_best", "lbl")
+        return seed_rel.unionByName(
             best.join(seed_rel.select("i"), "i", "left_anti"))
-        prev, labels = labels, materialize(new_labels)
-        if prev is not seed_rel:
-            prev.unpersist()
-    out = labels.select(F.col("i").alias("id"), "lbl")
-    out = out.localCheckpoint(eager=True)
-    labels.unpersist()
-    seed_rel.unpersist()
-    adj.unpersist()
-    return out.select("id", F.col("lbl").alias("label"))
+
+    # the driver releases the state it is given: start from a projection
+    # of seed_rel, which every round still reads
+    labels, _ = fixpoint(seed_rel.select("i", "lbl"), step, rounds)
+    release(adj)
+    if rounds:
+        release(seed_rel)
+    return labels.select(F.col("i").alias("id"), F.col("lbl").alias("label"))

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_python_spark.operators.blocks import undirected, vertex_ids
+from graph_python_spark.plans.iterate import release
 
 
 def maximal_matching(edges: DataFrame, rounds: int = 4) -> DataFrame:
@@ -76,9 +77,9 @@ def maximal_matching(edges: DataFrame, rounds: int = 4) -> DataFrame:
             .select("a", "b")
             .localCheckpoint(eager=True)
         )
-        alive.unpersist()
+        release(alive)
         alive = nxt
-    alive.unpersist()
+    release(alive)
     out = matched_parts[0]
     for p in matched_parts[1:]:
         out = out.unionByName(p)
@@ -160,9 +161,9 @@ def weighted_matching(edges: DataFrame, rounds: int = 6,
             .select("a", "b", "w")
             .localCheckpoint(eager=True)
         )
-        alive.unpersist()
+        release(alive)
         alive = nxt
-    alive.unpersist()
+    release(alive)
     out = matched_parts[0]
     for p in matched_parts[1:]:
         out = out.unionByName(p)

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from graph_python_spark.operators.blocks import (simple, symmetric, undirected,
                                                  vertex_ids)
+from graph_python_spark.plans.iterate import release
 
 
 def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
@@ -150,7 +151,7 @@ def transitivity(edges: DataFrame) -> DataFrame:
                        3.0 * F.col("triangles") / F.col("wedges"))
                 .otherwise(F.lit(0.0)), 6).alias("transitivity"),
     ).localCheckpoint(eager=True)
-    ue.unpersist()
+    release(ue)
     return out
 
 
@@ -206,7 +207,7 @@ def rich_club(edges: DataFrame, thresholds=(1, 2, 4, 8, 16, 32)) -> DataFrame:
                 .otherwise(F.lit(0.0)), 6).alias("rich_club"),
         )
     ).localCheckpoint(eager=True)
-    ue.unpersist()
+    release(ue)
     return out
 
 
@@ -291,7 +292,7 @@ def reciprocity(edges: DataFrame) -> DataFrame:
         .alias("reciprocity"),
     )
     out = out.localCheckpoint(eager=True)
-    e.unpersist()
+    release(e)
     return out
 
 
@@ -429,7 +430,7 @@ def graph_summary(edges: DataFrame) -> DataFrame:
                 / (F.col("n_vertices").cast("double")
                    * (F.col("n_vertices") - 1).cast("double")), 6).alias("density"),
     ).localCheckpoint(eager=True)
-    e.unpersist()
+    release(e)
     return out
 
 

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from graph_python_spark.operators.blocks import symmetric
 from graph_python_spark.plans.iterate import (iterative, loop_shuffle_width,
-                                              materialize)
+                                              materialize, release)
 
 PRIO_MULT = 2654435761
 PRIO_MOD = 1000000007
@@ -97,21 +97,16 @@ def maximal_independent_set(
             isolated = materialize(
                 survivors_before.join(still_connected, "s", "left_anti"))
             isolated_mis.append(isolated)
-            cur.unpersist()
+            release(cur, gone)
             cur = nxt
-            gone.unpersist()
 
     out = None
     for part in mis_parts + isolated_mis:
         out = part if out is None else out.unionByName(part)
     if out is None:
-        cur.unpersist()
+        release(cur)
         return spark.createDataFrame([], "id long"), rounds
     out = materialize(out.select(F.col("s").alias("id")).distinct())
     # the union is pinned; release the per-round winner/isolated blocks
-    for part in mis_parts + isolated_mis + [cur]:
-        try:
-            part.unpersist()
-        except Exception:
-            pass
+    release(*mis_parts, *isolated_mis, cur)
     return out, rounds

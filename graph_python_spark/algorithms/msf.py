@@ -40,8 +40,9 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graph_python_spark.plans.iterate import (iterative, loop_shuffle_width,
-                                              materialize)
+from graph_python_spark.plans.iterate import (fixpoint, iterative,
+                                              loop_shuffle_width, materialize,
+                                              release)
 
 PACK_V = 1 << 21   # vertex-id bound for the composite key
 PACK_W = 1 << 42
@@ -129,23 +130,12 @@ def boruvka_msf(
                                     F.least("c", "o"))
                         .otherwise(F.col("o")).alias("p"))
             )
-            # pointer jumping to roots (forest after 2-cycle break)
-            while True:
-                jumped = (
-                    parent.alias("x")
-                    .join(parent.select(F.col("c").alias("p"),
-                                        F.col("p").alias("gp")).alias("y"),
-                          "p", "left_outer")
-                    .select("c", F.coalesce("gp", "p").alias("p"))
-                )
-                jumped = jumped.localCheckpoint(eager=True)
-                changed = jumped.alias("n").join(
-                    parent.alias("o"), "c").filter(
-                    F.col("n.p") != F.col("o.p")).limit(1).count()
-                parent.unpersist()
-                parent = jumped
-                if changed == 0:
-                    break
+            # pointer jumping to roots (forest after 2-cycle break); the
+            # _chg flag rides in the pinned state, so convergence costs
+            # no probe job.  The round bound only has to pass log2 of the
+            # forest depth, which never exceeds the vertex count.
+            parent, _ = fixpoint(
+                parent, _jump, n_edges + 1, changed=F.max("_chg"))
             # contract: relabel the edge state through the parent map
             # (every label in est chose an edge, so parent covers them all),
             # drop intra-component edges, and coalesce parallel edges per
@@ -171,10 +161,8 @@ def boruvka_msf(
                         F.col("_e.w").alias("w"),
                         F.col("_e.wkey").alias("wkey"), "cu", "cv")
             )
-            est.unpersist()
+            release(est, me, parent)
             est = est_next
-            me.unpersist()
-            parent.unpersist()
 
     if forest_parts:
         allf = forest_parts[0]
@@ -183,9 +171,17 @@ def boruvka_msf(
         forest = materialize(allf.select("u", "v", "w").distinct())
     else:
         forest = spark.createDataFrame([], "u long, v long, w long")
-    for df in forest_parts + [est]:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+    release(*forest_parts, est)
     return forest, rounds
+
+
+def _jump(parent: DataFrame) -> DataFrame:
+    """One pointer-jumping step p(c) ← p(p(c)) over (c, p), with a
+    ``_chg`` flag for the rows whose pointer moved."""
+    gp = F.coalesce("gp", "p")
+    return (
+        parent.select("c", "p")
+        .join(parent.select(F.col("c").alias("p"), F.col("p").alias("gp")),
+              "p", "left_outer")
+        .select("c", gp.alias("p"), (gp != F.col("p")).alias("_chg"))
+    )

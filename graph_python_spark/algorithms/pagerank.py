@@ -34,13 +34,13 @@ table rather than the raw edge list:
     a shuffled hash join building on contrib — no exchange, no sort, no
     broadcast job, whatever contrib's size.  The one shuffle per step is
     the O(distinct-dst) partial-agg exchange;
-  * every iteration is pinned by localCheckpoint and the old state's
-    blocks are released after its last read (plans/iterate.release), so
-    each step runs the same plan shape over a pinned contrib; durable
-    IterationState saves every ``checkpoint_every`` iterations give the
-    north-rule resume guarantee.  Cold, 10 iterations on a 100k-vertex /
-    570k-edge Zipf graph (4 vCPU) take 6.9 s, against 10.5 s with a
-    broadcast step join and a pin every third iteration;
+  * every iteration is pinned by the loop driver (plans/iterate.fixpoint),
+    which releases the old state after its last read, so each step runs
+    the same plan shape over a pinned contrib; a durable IterationState
+    save every iteration gives the north-rule resume guarantee.  Cold,
+    10 iterations on a 100k-vertex / 570k-edge Zipf graph (4 vCPU) take
+    6.9 s, against 10.5 s with a broadcast step join and a pin every
+    third iteration;
   * rdiff = Σ|contrib' - contrib| exactly (the dense teleport terms cancel).
 
 At 1000-executor / 100 TB scale the plan holds: the adjacency table stays
@@ -60,8 +60,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_python_spark.operators.blocks import vertex_ids
-from graph_python_spark.plans.iterate import (IterationState, loop_conf,
-                                                loop_shuffle_width,
+from graph_python_spark.plans.iterate import (IterationState, fixpoint,
+                                                loop_conf, loop_shuffle_width,
                                                 materialize, release)
 
 
@@ -113,8 +113,8 @@ def prepare_graph(edges: DataFrame, vertices: Optional[DataFrame] = None,
     with _loop(edges.sparkSession, n, partitions) as width:
         table = adjacency_table(e, "i", "j", width)
         # cache the projection the loop reads instead of the table under
-        # it (nothing is computed yet), so adj.unpersist() frees the build
-        table.unpersist()
+        # it (nothing is computed yet), so release(adj) frees the build
+        release(table)
         # deg (not size(js)): hub rows may be segmented into several bounded
         # chunks, each carrying the vertex's TOTAL out-degree
         adj = table.select(
@@ -149,29 +149,6 @@ def _step(adj, teleport: float, r0: float, contrib: Optional[DataFrame]) -> Data
     )
 
 
-def _contrib_loop(adj, teleport, r0, iterations, contrib=None,
-                  rdiff_cb=None, tol=None, step_fn=None):
-    """Shared iteration body — the ONE place lineage truncation lives.
-    Every iteration is pinned, so every step runs the same plan shape over
-    a pinned contrib (compiled once); the old contrib is released once
-    rdiff_cb has read it.  contrib=None means start from dense
-    r0=1/n; ``step_fn`` overrides the default unweighted SpMV step (used by
-    the weighted variant) while keeping the identical loop mechanics."""
-    if step_fn is None:
-        def step_fn(c):
-            return _step(adj, teleport, r0, c)
-    iters_done = 0
-    for k in range(iterations):
-        new_contrib = materialize(step_fn(contrib))
-        rdiff = rdiff_cb(contrib, new_contrib, k) if rdiff_cb is not None else None
-        release(contrib)
-        contrib = new_contrib
-        iters_done = k + 1
-        if tol is not None and rdiff <= tol:
-            break
-    return contrib, iters_done
-
-
 def _finalize(vertices, contrib, teleport) -> DataFrame:
     return (
         vertices.select(F.col("id").alias("i"))
@@ -189,17 +166,17 @@ def pagerank(
     itermax: int = 100,
     partitions: Optional[int] = None,
     checkpoint: Optional[IterationState] = None,
-    checkpoint_every: int = 1,
     prepared: Optional[PreparedGraph] = None,
 ) -> tuple[DataFrame, int, list[float]]:
     """Run to L1 convergence. Returns (scores(id, score), iters, rdiff trace).
 
     ``edges``: DataFrame with long columns i (src), j (dst); duplicates OK
-    (binarized).  ``checkpoint``: optional durable IterationState — a killed
-    run resumes from the last saved iteration with identical results.
-    ``prepared``: pre-built loop-invariant state (its baked damping wins);
-    it stays the caller's to free.  Without it the adjacency built here is
-    freed once the loop is done.
+    (binarized).  ``checkpoint``: optional durable IterationState, saved
+    every iteration — a killed run resumes from the last saved iteration
+    with identical results.  ``prepared``: pre-built loop-invariant state
+    (its baked damping wins); it stays the caller's to free.  Without it
+    the adjacency built here is freed once the loop is done; the result
+    reads the vertex cache and the last pinned contrib.
     """
     own = prepared is None
     if own:
@@ -222,10 +199,10 @@ def pagerank(
             rdiffs = list(metrics.get("rdiffs", []))
             if rdiffs and rdiffs[-1] <= tol:
                 if own:
-                    adj.unpersist()
+                    release(adj)
                 return _finalize(vertices, contrib, teleport), start_iter, rdiffs
 
-    def rdiff_cb(old_contrib, new_contrib, k):
+    def after(old_contrib, new_contrib, k):
         # Σ|r_new - r_old|: teleport cancels; vertices never receiving
         # contributions never change. First iteration diffs against r0=1/n
         # on contribution-receiving vertices, plus the unchanged remainder:
@@ -248,19 +225,17 @@ def pagerank(
             rdiff = float(row["d"] or 0.0)
         rdiffs.append(rdiff)
         iters_now = start_iter + k + 1
-        if checkpoint is not None and iters_now % checkpoint_every == 0:
+        if checkpoint is not None:
             checkpoint.save(iters_now, {"contrib": new_contrib},
                             {"rdiffs": rdiffs, "n": n})
-        return rdiff
+        return rdiff <= tol
 
-    remaining = itermax - start_iter
     with _loop(adj.sparkSession, n, prepared.width):
-        contrib, done = _contrib_loop(
-            adj, teleport, 1.0 / n, remaining, contrib=contrib,
-            rdiff_cb=rdiff_cb, tol=tol,
-        )
+        contrib, done = fixpoint(
+            contrib, lambda c: _step(adj, teleport, 1.0 / n, c),
+            itermax - start_iter, after=after)
     if own:
-        adj.unpersist()
+        release(adj)
     return _finalize(vertices, contrib, teleport), start_iter + done, rdiffs
 
 
@@ -279,18 +254,14 @@ def iteration_times(prepared: PreparedGraph, iterations: int = 7,
 
     adj, n = prepared.adj, prepared.n
     teleport = (1.0 - prepared.damping) / n
-    contrib = None
-    times: list[float] = []
+    stamps = [time.time()]
     with _loop(adj.sparkSession, n, prepared.width):
-        for k in range(warmups + iterations):
-            t0 = time.time()
-            nc = materialize(_step(adj, teleport, 1.0 / n, contrib))
-            release(contrib)
-            contrib = nc
-            if k >= warmups:
-                times.append(time.time() - t0)
+        contrib, _ = fixpoint(
+            None, lambda c: _step(adj, teleport, 1.0 / n, c),
+            warmups + iterations,
+            after=lambda _old, _new, _k: stamps.append(time.time()))
     release(contrib)
-    return times
+    return [b - a for a, b in zip(stamps, stamps[1:])][warmups:]
 
 
 def pagerank_fixed(
@@ -314,9 +285,10 @@ def pagerank_fixed(
     teleport = (1.0 - damping) / n
 
     with _loop(adj.sparkSession, n, prepared.width):
-        contrib, _ = _contrib_loop(adj, teleport, 1.0 / n, iterations)
+        contrib, _ = fixpoint(
+            None, lambda c: _step(adj, teleport, 1.0 / n, c), iterations)
     if own:
-        adj.unpersist()
+        release(adj)
     return _finalize(vertices, contrib, teleport)
 
 
@@ -375,8 +347,7 @@ def pagerank_weighted_fixed(
         return src.groupBy(F.col("j").alias("i")).agg(F.sum("x").alias("c"))
 
     with _loop(spark, n):
-        contrib, _ = _contrib_loop(None, teleport, r0, iterations,
-                                   step_fn=step_fn)
+        contrib, _ = fixpoint(None, step_fn, iterations)
     # contrib is pinned, so the lazy result no longer reads trans
     release(trans)
     return _finalize(vertices, contrib, teleport)
@@ -421,7 +392,8 @@ def pagerank_incremental(
                       - F.lit(teleport)).alias("c"))
     )
     with _loop(adj.sparkSession, n, prepared.width):
-        contrib, _ = _contrib_loop(adj, teleport, 1.0 / n, iterations,
-                                   contrib=materialize(contrib0))
-    adj.unpersist()
+        contrib, _ = fixpoint(
+            materialize(contrib0),
+            lambda c: _step(adj, teleport, 1.0 / n, c), iterations)
+    release(adj)
     return _finalize(vertices, contrib, teleport)

@@ -49,8 +49,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from graph_python_spark.operators.blocks import symmetric, undirected
-from graph_python_spark.plans.iterate import (iterative, loop_shuffle_width,
-                                              materialize)
+from graph_python_spark.plans.iterate import (fixpoint, iterative,
+                                              loop_shuffle_width, materialize,
+                                              release)
 
 
 @iterative
@@ -62,7 +63,8 @@ def partition_assign(
 ) -> DataFrame:
     """k-way balanced LPA partitioning of the undirected graph under
     ``edges`` (i, j; direction/duplicates ignored, self-loops dropped).
-    Returns (id, part) for every vertex with at least one real edge.
+    Returns (id, part) for every vertex with at least one real edge: the
+    last pinned round itself.
     """
     if k <= 0:
         raise ValueError("k must be positive")
@@ -73,9 +75,8 @@ def partition_assign(
     cap = (21 * n_verts) // (20 * k) + 1
     with loop_shuffle_width(edges.sparkSession, max(n_verts, 1)) as width:
         e = materialize(both.repartition(partitions or width, "d"))
-        state = materialize(
-            verts.select("id", (F.col("id") % k).cast("long").alias("part")))
-        for _ in range(rounds):
+
+        def step(state):
             loads = state.groupBy("part").agg(
                 F.count(F.lit(1)).alias("_load"))
             # neighbor-part counts: edges keyed by d join the state of d,
@@ -106,16 +107,17 @@ def partition_assign(
             winners = (desired.withColumn("_qr", F.row_number().over(wq))
                        .filter(F.col("_qr") <= cap)
                        .select("id", F.col("part").alias("_np")))
-            new = (
+            return (
                 state.join(winners, "id", "left")
                 .select("id", F.coalesce("_np", F.col("part")).alias("part"))
             )
-            prev, state = state, materialize(new)
-            prev.unpersist()
-        out = state.localCheckpoint(eager=True)
-        state.unpersist()
-        e.unpersist()
-    return out
+
+        state, _ = fixpoint(
+            materialize(verts.select(
+                "id", (F.col("id") % k).cast("long").alias("part"))),
+            step, rounds)
+    release(e)
+    return state
 
 
 def partition_quality(edges: DataFrame, assign: DataFrame) -> DataFrame:

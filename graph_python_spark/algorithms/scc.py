@@ -40,14 +40,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_python_spark.operators.blocks import simple, vertex_ids
-from graph_python_spark.plans.iterate import (iterative, loop_shuffle_width,
-                                              materialize)
+from graph_python_spark.plans.iterate import (fixpoint, iterative,
+                                              loop_shuffle_width, materialize,
+                                              release)
 
 
 def _min_prop(edges: DataFrame, verts: DataFrame, max_rounds: int) -> DataFrame:
     """Directed min-label fixpoint: f(v) = min id u with u ->* v (u = v
     included) over ``edges`` (s, d), for every vertex of ``verts`` (id).
-    Returns (id, lbl).
+    Returns the pinned (id, lbl, _chg) state.
 
     DELTA propagation: round t joins the edge table only against the rows
     whose label IMPROVED in round t-1 (round 1: everything) — if none of
@@ -56,28 +57,24 @@ def _min_prop(edges: DataFrame, verts: DataFrame, max_rounds: int) -> DataFrame:
     edge-side join volume collapses after the first rounds while the
     round count is unchanged; only the O(V) state merge + checkpoint
     remains per round (the delta relation is a filter on the pinned
-    state, no extra checkpoint)."""
-    f = materialize(verts.select("id", F.col("id").alias("lbl")))
-    delta = f
-    for _ in range(max_rounds):
+    state, no extra checkpoint; convergence is read from the same pin)."""
+    def step(f):
+        delta = f.filter(F.col("_chg"))
         nbrmin = (
-            edges.join(delta.withColumnRenamed("id", "s"), "s")
+            edges.join(delta.select(F.col("id").alias("s"), "lbl"), "s")
             .groupBy(F.col("d").alias("id"))
             .agg(F.min("lbl").alias("_nm"))
         )
         nv = F.least(F.col("lbl"), F.coalesce(F.col("_nm"), F.col("lbl")))
-        new_f = materialize(
-            f.join(nbrmin, "id", "left_outer")
-            .select("id", nv.alias("_nv"), (nv != F.col("lbl")).alias("_chg"))
-            .select("id", F.col("_nv").alias("lbl"), "_chg")
+        return (
+            f.select("id", "lbl").join(nbrmin, "id", "left_outer")
+            .select("id", nv.alias("lbl"), (nv != F.col("lbl")).alias("_chg"))
         )
-        changed = int(new_f.agg(
-            F.coalesce(F.max(F.col("_chg").cast("int")), F.lit(0))).first()[0])
-        f.unpersist()
-        delta = new_f.filter(F.col("_chg")).select("id", "lbl")
-        f = new_f.drop("_chg")
-        if changed == 0:
-            break
+
+    f, _ = fixpoint(
+        materialize(verts.select("id", F.col("id").alias("lbl"),
+                                 F.lit(True).alias("_chg"))),
+        step, max_rounds, changed=F.max("_chg"))
     return f
 
 
@@ -91,7 +88,8 @@ def strongly_connected_components(
     """SCC labels over the directed graph under ``edges`` (long columns
     i -> j; self-loops/duplicates ignored).  Returns ``(labels(id,
     component), outer_rounds)`` with component = the smallest vertex id in
-    the SCC (exact, permutation-invariant).
+    the SCC (exact, permutation-invariant).  The result reads the pinned
+    per-round SCC parts; the loop state is freed.
     """
     eb = simple(edges).toDF("s", "d")
     # pin the edge state s-hash-partitioned so every min-prop round's
@@ -131,8 +129,7 @@ def strongly_connected_components(
             )
             triv = materialize(verts.join(both, "id", "left_anti"))
             if triv.isEmpty():
-                triv.unpersist()
-                both.unpersist()
+                release(triv, both)
                 break
             done_parts.append(
                 triv.select("id", F.col("id").alias("component")))
@@ -142,8 +139,7 @@ def strongly_connected_components(
                 .join(triv.select(F.col("id").alias("d")), "d", "left_anti")
                 .repartition("s")
             )
-            verts.unpersist()
-            cur.unpersist()
+            release(verts, cur)
             verts, cur = new_verts, new_cur
         return verts, cur
 
@@ -167,12 +163,13 @@ def strongly_connected_components(
             rev = materialize(rev)
             bwd = _min_prop(rev, verts, max_label_rounds)  # (id, g)
             scc = materialize(
-                fwd.join(bwd.withColumnRenamed("lbl", "g"), "id")
+                fwd.select("id", "lbl")
+                .join(bwd.select("id", F.col("lbl").alias("g")), "id")
                 .filter(F.col("lbl") == F.col("g"))
                 .select("id", F.col("lbl").alias("component"))
             )
             done_parts.append(scc)
-            rev.unpersist()
+            release(rev)
             # remove finalized vertices from the moving state
             gone = scc.select("id")
             new_verts = materialize(verts.join(gone, "id", "left_anti"))
@@ -181,10 +178,7 @@ def strongly_connected_components(
                 .join(gone.withColumnRenamed("id", "d"), "d", "left_anti")
                 .repartition("s")
             )
-            fwd.unpersist()
-            bwd.unpersist()
-            verts.unpersist()
-            cur.unpersist()
+            release(fwd, bwd, verts, cur)
             verts, cur = new_verts, new_cur
 
     out = None
@@ -199,11 +193,7 @@ def strongly_connected_components(
     # "key not found: id#N" once the union has >= 2 checkpointed children;
     # reproduced at 300k+ vertices).  The parts stay persisted because
     # they back the returned relation; only the loop state is dropped.
-    for part in [verts, cur]:
-        try:
-            part.unpersist()
-        except Exception:
-            pass
+    release(verts, cur)
     return out, rounds
 
 

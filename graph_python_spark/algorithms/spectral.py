@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from graph_python_spark.operators.blocks import symmetric
 from graph_python_spark.plans.iterate import (iterative, loop_shuffle_width,
-                                              materialize)
+                                              materialize, release)
 
 
 def _q9(col):
@@ -110,16 +110,14 @@ def spectral_gap(
             z = materialize(z)
             nrm2 = float(z.agg(_q9(F.col("_z") * F.col("_z"))).first()[0])
             lam = math.sqrt(nrm2) if nrm2 > 0 else 0.0
-            y.unpersist()
+            release(y)
             if lam == 0.0:
+                release(z)
                 break
             prev, x = x, materialize(
                 z.select("id", (F.col("_z") / F.lit(lam)).alias("_x")))
-            z.unpersist()
-            prev.unpersist()
-        x.unpersist()
-        base.unpersist()
-        e.unpersist()
+            release(z, prev)
+        release(x, base, e)
     return spark.createDataFrame(
         [(n_verts, iterations, round(lam, 6),
           round(1.0 - lam, 6))],

@@ -19,7 +19,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_python_spark.operators.blocks import symmetric, vertex_ids
-from graph_python_spark.plans.iterate import materialize, iterative, loop_shuffle_width
+from graph_python_spark.plans.iterate import (fixpoint, iterative,
+                                              loop_shuffle_width, materialize,
+                                              release)
 
 
 @iterative
@@ -90,19 +92,22 @@ def minplus_fixed_rounds(edges: DataFrame, source: int, rounds: int,
         .groupBy("s", "d").agg(F.min("w").alias("w"))
         .cache()
     )
-    spark = edges.sparkSession
-    dist = spark.createDataFrame([(source, 0)], "id long, v long")
-    for _ in range(rounds):
+
+    def step(dist):
         cand = (
             e.join(dist.withColumnRenamed("id", "s"), "s")
             .groupBy(F.col("d").alias("id"))
             .agg(F.min(F.col("v") + F.col("w")).alias("_nd"))
         )
-        dist = (
+        return (
             dist.join(cand, "id", "full_outer")
             .select("id", F.least(F.col("v"), F.col("_nd")).alias("v"))
         )
-        dist = materialize(dist)
+
+    dist, _ = fixpoint(
+        edges.sparkSession.createDataFrame([(source, 0)], "id long, v long"),
+        step, rounds)
+    release(e)
     return dist
 
 
@@ -147,20 +152,17 @@ def sssp(edges: DataFrame, source: int, weight: str = "v",
         .groupBy("s", "d").agg(F.min("w").alias("w"))
         .cache()
     )
-    spark = edges.sparkSession
-    dist = spark.createDataFrame([(source, 0.0)], "id long, distance double")
-    dist = materialize(dist)
-    frontier = dist  # vertices whose distance improved last round
-    rounds = 0
-    while rounds < max_rounds:
-        rounds += 1
+
+    def step(state):
+        # the frontier is the vertices whose distance improved last round
+        frontier = state.filter(F.col("_improved"))
         cand = (
-            e.join(frontier.withColumnRenamed("id", "s"), "s")
+            e.join(frontier.select(F.col("id").alias("s"), "distance"), "s")
             .groupBy(F.col("d").alias("id"))
             .agg(F.min(F.col("distance") + F.col("w")).alias("_nd"))  # min_plus
         )
-        merged = (
-            dist.join(cand, "id", "full_outer")
+        return (
+            state.select("id", "distance").join(cand, "id", "full_outer")
             .select(
                 "id",
                 F.least(F.coalesce(F.col("distance"), F.lit(float("inf"))),
@@ -169,14 +171,13 @@ def sssp(edges: DataFrame, source: int, weight: str = "v",
                  & (F.col("distance").isNull() | (F.col("_nd") < F.col("distance")))).alias("_improved"),
             )
         )
-        merged = materialize(merged)
-        frontier = merged.filter(F.col("_improved")).select("id", "distance")
-        new_dist = merged.select("id", "distance")
-        if frontier.limit(1).count() == 0:
-            dist = new_dist
-            break
-        dist = new_dist
-    return dist
+
+    dist, _ = fixpoint(
+        edges.sparkSession.createDataFrame(
+            [(source, 0.0, True)], "id long, distance double, _improved boolean"),
+        step, max_rounds, changed=F.max("_improved"))
+    release(e)
+    return dist.select("id", "distance")
 
 
 @iterative
@@ -232,24 +233,24 @@ def dag_longest_path_levels(edges: DataFrame, rounds: int = 16) -> DataFrame:
     spark = edges.sparkSession
     with loop_shuffle_width(spark, verts.count()) as width:
         e = materialize(e.repartition(width, "s"))
-        lvl = materialize(verts.select("id", F.lit(0).cast("long").alias("level")))
-        for _ in range(rounds):
+
+        def step(lvl):
             cand = (
                 e.join(lvl.select(F.col("id").alias("s"), "level"), "s")
                 .groupBy(F.col("d").alias("id"))
                 .agg((F.max("level") + 1).alias("_nl"))  # max_plus
             )
-            new = (
+            return (
                 lvl.join(cand, "id", "left")
                 .select("id", F.greatest(
                     F.col("level"), F.coalesce(F.col("_nl"), F.lit(0))).alias("level"))
             )
-            prev, lvl = lvl, materialize(new)
-            prev.unpersist()
-    out = lvl.localCheckpoint(eager=True)
-    lvl.unpersist()
-    e.unpersist()
-    return out
+
+        lvl, _ = fixpoint(
+            materialize(verts.select("id", F.lit(0).cast("long").alias("level"))),
+            step, rounds)
+    release(e)
+    return lvl
 
 
 @iterative
@@ -280,19 +281,21 @@ def landmark_distances(edges: DataFrame, landmarks: list[int],
         .distinct()
         .cache()
     )
-    spark = edges.sparkSession
-    dist = spark.createDataFrame(
-        [(int(lm), int(lm), 0) for lm in landmarks], "lm long, id long, v long")
-    for _ in range(rounds):
+
+    def step(dist):
         cand = (
             e.join(dist.withColumnRenamed("id", "s"), "s")
             .groupBy("lm", F.col("d").alias("id"))
             .agg(F.min(F.col("v") + 1).alias("_nd"))
         )
-        dist = (
+        return (
             dist.join(cand, ["lm", "id"], "full_outer")
             .select("lm", "id", F.least(F.col("v"), F.col("_nd")).alias("v"))
         )
-        dist = materialize(dist)
-    e.unpersist()
+
+    dist, _ = fixpoint(
+        edges.sparkSession.createDataFrame(
+            [(int(lm), int(lm), 0) for lm in landmarks], "lm long, id long, v long"),
+        step, rounds)
+    release(e)
     return dist.select("lm", "id", F.col("v").alias("dist"))

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from graph_python_spark.operators.blocks import (mirror, simple, symmetric,
                                                  undirected)
+from graph_python_spark.plans.iterate import materialize, release
 
 
 def triangle_count(edges: DataFrame) -> int:
@@ -202,8 +203,9 @@ def triangles_incremental(edges_old: DataFrame,
         F.greatest("x", "y", "z").alias("tc"),
     ).distinct()
     n_added = added.count()
-    out = tri.agg(
+    # pinned so the cached delta can be freed: the result no longer reads it
+    out = materialize(tri.agg(
         F.lit(n_added).cast("long").alias("n_added_edges"),
-        F.count(F.lit(1)).cast("long").alias("n_new_triangles"))
-    added.unpersist()
+        F.count(F.lit(1)).cast("long").alias("n_new_triangles")))
+    release(added)
     return out

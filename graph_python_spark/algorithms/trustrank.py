@@ -21,11 +21,11 @@ teleport fold (graphblas.algorithms pagerank / ``core/matrix.py`` mxv);
 TrustRank only swaps the uniform teleport vector for a sparse one, i.e. the
 ewise_add of the SpMV result with a masked constant vector.
 
-Spark shape: identical to ``centrality.ppr_fixed`` — the out-degree
-normalization and damping fold into the transition relation ONCE
-((i, j, t = d/deg) built by one groupBy + one src-key join, then pinned);
-each iteration is one src-key join + one dst-key partial aggregation, both
-sparse over the reachable support.  pagerank_3f dangling convention
+Spark shape: ``centrality._seeded_pagerank``, the loop ``ppr_fixed`` runs
+too — the out-degree normalization and damping fold into the transition
+relation ONCE ((i, j, t = d/deg) built by one groupBy + one src-key join,
+then pinned); each iteration is one src-key join + one dst-key partial
+aggregation, both sparse over the reachable support.  pagerank_3f dangling convention
 throughout (dangling mass drops; no redistribution), so DuckDB unrolls the
 recursion exactly.  At 100 TB the trusted core is tiny (human-audited), so
 the TrustRank support grows one hop per iteration from the seeds — the
@@ -40,51 +40,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.blocks import vertex_ids
-from ..plans.iterate import loop_shuffle_width, materialize, release
+from .centrality import _seeded_pagerank
 from .pagerank import pagerank_fixed
-
-
-def _seeded_fixed(
-    edges: DataFrame,
-    seeds: DataFrame,
-    seed_weight: float,
-    iterations: int,
-    damping: float,
-    partitions: Optional[int],
-) -> DataFrame:
-    """Exactly ``iterations`` steps of r_{t+1} = (1-d)·p + d·A_row^T r_t
-    with p = seed_weight on ``seeds`` (column id), 0 elsewhere, and
-    r_0 = seed_weight·seeds indicator — sparse support, pagerank_3f
-    dangling convention (mirrors centrality.ppr_fixed with a general
-    per-seed teleport weight)."""
-    eb = edges.select("i", "j").distinct()
-    if partitions is not None:
-        eb = eb.repartition(partitions, "i")
-    et = materialize(
-        eb.join(eb.groupBy("i").agg(F.count("*").alias("_deg")), "i")
-        .select("i", "j", (F.lit(damping) / F.col("_deg")).alias("t"))
-    )
-    tel = materialize(
-        seeds.select(F.col("id").alias("i"),
-                     F.lit((1.0 - damping) * seed_weight).alias("p"))
-    )
-    r = tel.select("i", F.lit(seed_weight).alias("v"))
-    with loop_shuffle_width(edges.sparkSession, max(et.count(), 1)):
-        for _ in range(iterations):
-            contrib = (
-                et.join(r, "i")
-                .select(F.col("j").alias("i"), (F.col("t") * F.col("v")).alias("w"))
-                .groupBy("i")
-                .agg(F.sum("w").alias("c"))
-            )
-            prev, r = r, materialize(
-                tel.join(contrib, "i", "full_outer")
-                .select("i", (F.coalesce(F.col("p"), F.lit(0.0))
-                              + F.coalesce(F.col("c"), F.lit(0.0))).alias("v"))
-            )
-            release(prev)
-    release(et)
-    return r.select(F.col("i").alias("id"), F.col("v").alias("score"))
 
 
 def trustrank_fixed(
@@ -102,8 +59,8 @@ def trustrank_fixed(
     n_seeds = trusted.count()
     if n_seeds == 0:
         return edges.sparkSession.createDataFrame([], "id long, score double")
-    return _seeded_fixed(edges, trusted, 1.0 / n_seeds, iterations,
-                         damping, partitions)
+    return _seeded_pagerank(edges, trusted, n_seeds, iterations, damping,
+                           partitions)
 
 
 def spam_mass(
@@ -128,8 +85,8 @@ def spam_mass(
             [], "id long, pr double, core_pr double, spam_mass double")
     pr = pagerank_fixed(edges, damping=damping, iterations=iterations,
                         partitions=partitions)
-    core = _seeded_fixed(edges, trusted, 1.0 / n, iterations, damping,
-                         partitions)
+    core = _seeded_pagerank(edges, trusted, n, iterations, damping,
+                           partitions)
     return (
         pr.withColumnRenamed("score", "pr")
         .join(core.withColumnRenamed("score", "core_pr"), "id", "left_outer")

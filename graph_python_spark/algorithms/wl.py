@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_python_spark.operators.blocks import symmetric
+from graph_python_spark.plans.iterate import fixpoint, materialize, release
 
 
 def wl_fingerprints(edges: DataFrame, rounds: int = 2) -> DataFrame:
@@ -31,32 +32,31 @@ def wl_fingerprints(edges: DataFrame, rounds: int = 2) -> DataFrame:
     Isolated-by-filtering vertices never appear (the vertex set is the
     edge support, as everywhere in this package).
     """
-    sym = symmetric(edges).localCheckpoint(eager=True)
-    labels = (
-        sym.groupBy(F.col("s").alias("id"))
-        .agg(F.count("*").alias("_deg"))
-        .select("id", F.md5(F.col("_deg").cast("string")).alias("label"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(rounds):
+    sym = materialize(symmetric(edges))
+
+    def step(labels):
         nbr = (
             sym.join(labels.select(F.col("id").alias("d"),
                                    F.col("label").alias("_nl")), "d")
             .groupBy(F.col("s").alias("id"))
             .agg(F.array_sort(F.collect_list("_nl")).alias("_nls"))
         )
-        new_labels = (
+        return (
             labels.join(nbr, "id")
             .select(
                 "id",
                 F.md5(F.concat(F.col("label"), F.lit("|"),
                                F.concat_ws(",", F.col("_nls")))).alias("label"),
             )
-            .localCheckpoint(eager=True)
         )
-        labels.unpersist()
-        labels = new_labels
-    sym.unpersist()
+
+    labels, _ = fixpoint(
+        materialize(
+            sym.groupBy(F.col("s").alias("id"))
+            .agg(F.count("*").alias("_deg"))
+            .select("id", F.md5(F.col("_deg").cast("string")).alias("label"))),
+        step, rounds)
+    release(sym)
     return labels
 
 

@@ -483,11 +483,11 @@ class MatrixFrame:
         nc = None if self._ncols is None else self._ncols * bm
         return MatrixFrame(out, nr, nc)
 
-    def power(self, n: int, op: Semiring, checkpoint_every: int = 2) -> "MatrixFrame":
+    def power(self, n: int, op: Semiring) -> "MatrixFrame":
         """A^n by repeated squaring (reference recipe matrix.py:95-154).
 
-        localCheckpoint truncates lineage between squarings so the plan
-        doesn't grow exponentially across iterations.
+        localCheckpoint truncates lineage every second squaring so the
+        plan doesn't grow exponentially across iterations.
         """
         if n < 1:
             raise ValueError("power requires n >= 1")
@@ -501,7 +501,7 @@ class MatrixFrame:
             if n:
                 base = base.mxm(base, op)
                 steps += 1
-                if steps % checkpoint_every == 0:
+                if steps % 2 == 0:
                     base = MatrixFrame(base.df.localCheckpoint(eager=False),
                                        base._nrows, base._ncols)
         return result

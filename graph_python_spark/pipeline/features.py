@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graph_python_spark.plans.iterate import release
+
 
 def neighbor_mean_embeddings(
     edges: DataFrame,
@@ -265,7 +267,7 @@ def logreg_classifier(
         grad = {int(r["j"]): int(r["_gq"]) for r in gq}
         w = [w[j] - lr * (grad.get(j, 0) / 1e6) / n_docs
              for j in range(dim + 1)]
-    xy.unpersist()
+    release(xy)
     return w
 
 

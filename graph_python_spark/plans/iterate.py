@@ -11,6 +11,13 @@ iteration therefore ends in either:
     metrics, per-partition lineage), the durable checkpoint the north rule
     requires: a killed run resumes mid-iteration from the last manifest.
 
+:func:`fixpoint` is the one place a loop pins and frees: it pins each
+round's state, reads the round's convergence aggregate from that same pin
+(``DataFrame.observe``, no second job), hands old and new state to the
+loop's own hook, and then releases the replaced state.  Loops write only
+their step.  :func:`release` is the one free call for anything a loop
+built, pinned or cached.
+
 The reference's only analogue is nonblocking-mode ``wait()``
 (``graphblas/core/matrix.py:778-803``); resumability is new engineering for
 the 100 TB setting.
@@ -21,9 +28,10 @@ from __future__ import annotations
 import json
 import os
 import time
-from typing import Any, Optional
+from contextlib import contextmanager
+from typing import Any, Callable, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 
 def materialize(df: DataFrame) -> DataFrame:
@@ -32,25 +40,63 @@ def materialize(df: DataFrame) -> DataFrame:
 
 
 def release(*dfs: Optional[DataFrame]) -> None:
-    """Free the blocks of frames pinned by :func:`materialize`.
+    """Free the blocks of frames pinned by :func:`materialize` or cached.
 
     ``DataFrame.unpersist()`` does nothing to a localCheckpoint: its RDD
     is not in the cache manager, so the blocks stay until the session
     ends.  This unpersists the checkpoint RDD under a pinned frame's
-    ``LogicalRDD`` plan directly and leaves any other frame alone (a
-    cached or lazy frame, a state read back from parquet, or None for a
-    loop's not-yet-existing previous state).  Call it only after the
-    frame's last read: a later read fails with
-    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND."""
+    ``LogicalRDD`` plan directly, unpersists a cached frame, and leaves
+    any other frame alone (a lazy frame, a projection of a pinned one, a
+    state read back from parquet, or None for a loop's not-yet-existing
+    previous state).  Call it only after the frame's last read: a later
+    read of a pinned frame fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND,
+    and one of a cached frame recomputes it."""
     for df in dfs:
         if df is None:
             continue
         plan = df._jdf.logicalPlan()
         if plan.getClass().getSimpleName() == "LogicalRDD":
             plan.rdd().unpersist(False)
+        elif df.storageLevel.useMemory or df.storageLevel.useDisk:
+            df.unpersist()
 
 
-from contextlib import contextmanager  # noqa: E402
+def fixpoint(state: Optional[DataFrame], step: Callable[..., DataFrame],
+             rounds: int, *, changed: Optional[Column] = None,
+             after: Optional[Callable[..., Any]] = None,
+             ) -> tuple[Optional[DataFrame], int]:
+    """Run at most ``rounds`` rounds of ``state = step(state)``; returns
+    ``(state, rounds_run)``.
+
+    Each round: ``new = step(state)``; ``changed`` (a Column aggregate),
+    when given, is attached to ``new`` with a fresh ``Observation``; ``new``
+    is pinned by :func:`materialize`, which also computes the observed
+    value — no second job; ``after(old, new, k)`` (k = 0-based round)
+    runs while both are readable, and a true return stops the loop; the
+    old state is released; a ``changed`` value of 0, False or null stops
+    the loop after this round.
+
+    The returned state is the pinned frame itself (a bare ``LogicalRDD``
+    plan), so the caller's later :func:`release` frees it; with
+    ``rounds`` = 0 it is the given state.  The given state is released
+    after the first round, so pass a projection (which release leaves
+    alone) of any pinned frame the caller still reads, and do renames
+    and projections inside ``step`` or after the loop, never on the
+    state in between."""
+    done = 0
+    while done < rounds:
+        new = step(state)
+        obs = None
+        if changed is not None:
+            obs = Observation()
+            new = new.observe(obs, changed.alias("changed"))
+        new = materialize(new)
+        stop = after(state, new, done) if after is not None else False
+        release(state)
+        state, done = new, done + 1
+        if stop or (obs is not None and not obs.get["changed"]):
+            break
+    return state, done
 
 
 @contextmanager

@@ -213,14 +213,91 @@ def test_pagerank_step_one_exchange(spark):
     prepared.vertices.unpersist()
 
 
-# persistent RDDs a call may leave: the frames its lazy result reads
-# (pagerank: the vertex cache and the last contrib; hits: the pinned
-# vertices, hub and authority vectors)
-RESULT_FRAMES = {"pagerank.pagerank_fixed": 2, "centrality.hits_fixed": 3}
+def _pinned_rdd(df) -> int:
+    """The checkpoint RDD id under a pinned frame's bare LogicalRDD plan."""
+    plan = df._jdf.logicalPlan()
+    assert plan.getClass().getSimpleName() == "LogicalRDD", plan
+    return plan.rdd().id()
 
 
-@pytest.mark.parametrize("algo", ["pagerank.pagerank_fixed",
-                                  "centrality.hits_fixed"])
+def _jobs(sc, group: str, fn):
+    """(fn(), number of Spark jobs fn ran), from the status tracker."""
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_fixpoint(spark):
+    """The loop driver releases every replaced pin (the given one too),
+    returns the last pin itself, lets ``after`` read old and new before
+    the release, and stops after the first round whose ``changed``
+    aggregate is false — read from the pin, with no job of its own."""
+    from pyspark.sql import functions as F
+
+    from graph_python_spark.plans.iterate import fixpoint, materialize
+
+    sc = spark.sparkContext
+
+    def step(s):
+        nx = F.greatest(F.col("x") - 1, F.lit(0))
+        return s.select("i", nx.alias("x"), (nx != F.col("x")).alias("_chg"))
+
+    def start():
+        return materialize(
+            spark.createDataFrame([(0, 3), (1, 1)], "i long, x long"))
+
+    seen = []
+
+    def after(old, new, k):
+        seen.append((k, sorted(r["x"] for r in old.collect()),
+                     sorted(r["x"] for r in new.collect()), _pinned_rdd(new)))
+
+    s0 = start()
+    first = _pinned_rdd(s0)
+    out, rounds = fixpoint(s0, step, 10, changed=F.max("_chg"), after=after)
+    # three rounds change x, the fourth is the first unchanged one
+    assert rounds == 4
+    assert [t[:3] for t in seen] == [(0, [1, 3], [0, 2]), (1, [0, 2], [0, 1]),
+                                     (2, [0, 1], [0, 0]), (3, [0, 0], [0, 0])]
+    assert _pinned_rdd(out) == seen[-1][3]
+    persistent = set(sc._jsc.getPersistentRDDs().keys())
+    assert not persistent & ({first} | {t[3] for t in seen[:-1]}), persistent
+    assert seen[-1][3] in persistent
+    assert sorted(r["x"] for r in out.collect()) == [0, 0]
+
+    # reading `changed` costs no job: the same 4 rounds without it run
+    # exactly as many
+    (_, n), observed = _jobs(sc, "fixpoint-changed", lambda: fixpoint(
+        start(), step, 10, changed=F.max("_chg")))
+    _, fixed = _jobs(sc, "fixpoint-fixed", lambda: fixpoint(start(), step, 4))
+    assert n == 4 and observed == fixed, (observed, fixed)
+
+    # no round: the given state comes back as it is
+    s0 = start()
+    same, n = fixpoint(s0, step, 0)
+    assert same is s0 and n == 0
+
+
+# algorithm -> (round keyword, persistent RDDs a call may leave: the
+# frames its lazy result reads)
+LOOPS = {
+    # the vertex cache and the last contrib
+    "pagerank.pagerank_fixed": ("iterations", 2),
+    # the pinned vertices, hub and authority vectors
+    "centrality.hits_fixed": ("iterations", 3),
+    # the last pinned round, nothing else
+    "centrality.katz_fixed": ("iterations", 1),
+    "components.connected_components": ("max_rounds", 1),
+    "labelprop.label_propagation": ("max_sweeps", 1),
+    "traversal.dag_longest_path_levels": ("rounds", 1),
+    "anf.anf_sketches": ("radius", 1),
+}
+
+
+@pytest.mark.parametrize("algo", sorted(LOOPS))
 def test_loops_release_pinned_state(spark, algo):
     """Each loop frees an iteration's pinned state after its last read,
     and whatever else it built for itself once the loop is done, so a
@@ -232,21 +309,63 @@ def test_loops_release_pinned_state(spark, algo):
     module, name = algo.split(".")
     run = getattr(importlib.import_module(
         f"graph_python_spark.algorithms.{module}"), name)
+    keyword, result_frames = LOOPS[algo]
     sc = spark.sparkContext
     left = {}
-    for iterations in (2, 8):
+    for rounds in (2, 8):
         # a fresh frame per run: a cached plan shared with the other run
-        # would hide its cache() from the count
-        e = spark.createDataFrame([(0, 1), (0, 2), (1, 2), (2, 0), (3, 2)],
+        # would hide its cache() from the count.  Acyclic, as
+        # dag_longest_path_levels requires.
+        e = spark.createDataFrame([(0, 1), (0, 2), (1, 2), (1, 3), (3, 2)],
                                   "i long, j long")
         # RDD ids only grow: count the call's own RDDs, whatever the
         # context cleaner frees of earlier tests' meanwhile
         first = sc.parallelize([0]).id()
-        out = run(e, iterations=iterations)
-        left[iterations] = sum(
+        out = run(e, **{keyword: rounds})
+        if isinstance(out, tuple):
+            out = out[0]
+        left[rounds] = sum(
             1 for k in sc._jsc.getPersistentRDDs().keys() if k > first)
         assert out.collect()
-    assert left[2] == left[8] == RESULT_FRAMES[algo], left
+    assert left[2] == left[8] == result_frames, left
+
+
+@pytest.mark.parametrize("algo", ["components.connected_components",
+                                  "labelprop.label_propagation"])
+def test_converged_loops_one_job_per_round(spark, algo):
+    """A converging CC or label-propagation round is one job: the pin.
+    Its change flag rides in the pinned state and is read off that pin,
+    so no second aggregate or old ⋈ new probe job runs per round.  Jobs
+    come from the status tracker, 1 round against 3 on a path that needs
+    more than 3 to converge, with broadcast joins and runtime bloom
+    filters off: either adds a job of its own to a round over a tiny
+    label vector (CC's grandparent self-join gets a bloom-filter
+    subquery), whatever the convergence test costs."""
+    import importlib
+
+    module, name = algo.split(".")
+    run = getattr(importlib.import_module(
+        f"graph_python_spark.algorithms.{module}"), name)
+    keyword = LOOPS[algo][0]
+    sc = spark.sparkContext
+    off = {"spark.sql.autoBroadcastJoinThreshold": "-1",
+           "spark.sql.optimizer.runtime.bloomFilter.enabled": "false"}
+    before = {k: spark.conf.get(k) for k in off}
+    for k, v in off.items():
+        spark.conf.set(k, v)
+    jobs = {}
+    try:
+        for rounds in (1, 3):
+            e = spark.createDataFrame([(v, v + 1) for v in range(40)],
+                                      "i long, j long")
+            (_, ran), jobs[rounds] = _jobs(
+                sc, f"{name}-rounds-{rounds}",
+                lambda: run(e, **{keyword: rounds}))
+            assert ran == rounds
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+    assert (jobs[3] - jobs[1]) / 2 == 1, jobs
 
 
 @pytest.mark.parametrize("algo", ["hits_fixed", "salsa_fixed"])
