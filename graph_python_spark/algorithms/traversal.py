@@ -44,11 +44,14 @@ def bfs_levels(edges: DataFrame, source: int, max_depth: int = 10**9) -> DataFra
         )
         nxt = materialize(nxt)
         if nxt.limit(1).count() == 0:
+            release(nxt)
             break
-        visited = materialize(
+        grown = materialize(
             visited.unionByName(nxt.select("id", F.lit(depth).cast("int").alias("level")))
         )
-        frontier = nxt
+        release(visited, frontier)
+        visited, frontier = grown, nxt
+    release(e, frontier)
     return visited
 
 
@@ -63,16 +66,19 @@ def bfs_parents(edges: DataFrame, source: int) -> DataFrame:
     frontier = materialize(frontier)
     while True:
         cand = (
-            e.join(frontier.withColumnRenamed("id", "s"), "s")
+            e.join(frontier.select(F.col("id").alias("s")), "s")
             .groupBy(F.col("d").alias("id"))
             .agg(F.min("s").alias("parent"))  # min_first semiring
             .join(parents.select("id"), "id", "left_anti")
         )
         cand = materialize(cand)
         if cand.limit(1).count() == 0:
+            release(cand)
             break
-        parents = materialize(parents.unionByName(cand))
-        frontier = cand.select("id")
+        grown = materialize(parents.unionByName(cand))
+        release(parents, frontier)
+        parents, frontier = grown, cand
+    release(e, frontier)
     return parents
 
 

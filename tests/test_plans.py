@@ -213,6 +213,31 @@ def test_pagerank_step_one_exchange(spark):
     prepared.vertices.unpersist()
 
 
+def test_simrank_sweep_one_exchange(spark):
+    """A SimRank sweep plans one exchange, the hash(x) repartition of the
+    half-expanded pairs: with the adjacency broadcast into the join on j,
+    the rows reach the (x, y) aggregate still hash(x)-partitioned, so no
+    exchange sits between the out(j) explode and the aggregate, and no
+    join sorts."""
+    from graph_python_spark.algorithms.simrank import simrank
+
+    e = spark.createDataFrame([(a, (a * 7 + 3) % 30) for a in range(30)]
+                              + [(a, (a + 1) % 30) for a in range(30)],
+                              "src long, dst long")
+    s = simrank(e, iters=1)
+    # the first action fills the adjacency and in-degree caches; s's own
+    # plan, made after it, sizes its joins by their real sizes, as AQE
+    # does at run time
+    assert s.count() > 0
+    nodes = _plan_nodes(s._jdf.queryExecution().executedPlan())
+    assert nodes.count("Exchange") == 1, nodes
+    assert "SortMergeJoin" not in nodes, nodes
+    agg = nodes.index("HashAggregate")
+    gen = nodes.index("Generate", agg)
+    assert "Exchange" not in nodes[agg:gen], nodes
+    assert nodes.index("Exchange") > gen, nodes
+
+
 def _pinned_rdd(df) -> int:
     """The checkpoint RDD id under a pinned frame's bare LogicalRDD plan."""
     plan = df._jdf.logicalPlan()
@@ -294,7 +319,12 @@ LOOPS = {
     "labelprop.label_propagation": ("max_sweeps", 1),
     "traversal.dag_longest_path_levels": ("rounds", 1),
     "anf.anf_sketches": ("radius", 1),
+    # the pinned visited levels
+    "traversal.bfs_levels": ("max_depth", 1),
 }
+
+# algorithm -> the arguments it needs besides the edges and the rounds
+LOOP_ARGS = {"traversal.bfs_levels": {"source": 0}}
 
 
 @pytest.mark.parametrize("algo", sorted(LOOPS))
@@ -321,7 +351,7 @@ def test_loops_release_pinned_state(spark, algo):
         # RDD ids only grow: count the call's own RDDs, whatever the
         # context cleaner frees of earlier tests' meanwhile
         first = sc.parallelize([0]).id()
-        out = run(e, **{keyword: rounds})
+        out = run(e, **{keyword: rounds}, **LOOP_ARGS.get(algo, {}))
         if isinstance(out, tuple):
             out = out[0]
         left[rounds] = sum(

@@ -44,17 +44,50 @@ def simrank_dense(pairs, n, iters, c):
     return S
 
 
+def assert_simrank_dense(spark, pairs, iters, dense_pairs=None, **kw):
+    """simrank on ``pairs`` equals simrank_dense on ``dense_pairs``
+    (default: the same graph)."""
+    n = max(max(p) for p in pairs) + 1
+    got = {(r["u"], r["v"]): r["score"]
+           for r in simrank(edge_df(spark, pairs), iters=iters, c=0.8, **kw).collect()}
+    S = simrank_dense(dense_pairs or pairs, n, iters, 0.8)
+    for u in range(n):
+        for v in range(u + 1, n):
+            assert np.isclose(got.get((u, v), 0.0), S[u, v], atol=1e-9), \
+                (iters, u, v)
+
+
 def test_simrank_random(spark):
     pairs = rand_graph()
-    n = max(max(p) for p in pairs) + 1
-    for iters in (1, 2, 3):
-        got = {(r["u"], r["v"]): r["score"]
-               for r in simrank(edge_df(spark, pairs), iters=iters, c=0.8).collect()}
-        S = simrank_dense(pairs, n, iters, 0.8)
-        for u in range(n):
-            for v in range(u + 1, n):
-                assert np.isclose(got.get((u, v), 0.0), S[u, v], atol=1e-9), \
-                    (iters, u, v)
+    for iters in (0, 1, 2, 3):
+        assert_simrank_dense(spark, pairs, iters)
+
+
+def test_simrank_max_indegree(spark):
+    """The in-degree cap drops every edge into a vertex above it, so the
+    capped scores are the dense scores of the graph without those edges
+    (a capped vertex has no in-neighbors left: it pairs with nothing)."""
+    pairs = rand_graph(n=20, m=150, seed=13)
+    ind = {}
+    for _, b in pairs:
+        ind[b] = ind.get(b, 0) + 1
+    cap = sorted(ind.values())[len(ind) // 2]
+    kept = [(a, b) for a, b in pairs if ind[b] <= cap]
+    assert len(kept) < len(pairs)
+    assert_simrank_dense(spark, pairs, 2, dense_pairs=kept, max_indegree=cap)
+
+
+def test_simrank_without_broadcast(spark):
+    """Same scores when no join broadcasts: the adjacency joins on i and
+    on j and the in-degree joins all shuffle."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        for iters in (1, 2):
+            assert_simrank_dense(spark, rand_graph(), iters)
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_simrank_eps_prunes_only_small(spark):
