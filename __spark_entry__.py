@@ -577,11 +577,12 @@ PPR_ITERS = 6
 PPR_SEEDS = 5
 BC_SOURCES = 4
 BC_LEVELS = 8         # SQL unroll; empty frontiers past the fixpoint are identity
-MIS_ROUNDS = 10       # SQL unroll; converges in 7 at sf0.01, 6 at sf0.1
+MIS_ROUNDS = 10       # SQL unroll; 6 Luby rounds at sf0.01, 5 at sf0.1 (the
+                      # Spark loop reports 13 and 11: its retires lag a round)
 KATZ_ITERS = 6
 KATZ_ALPHA = 0.05
 EIGEN_ITERS = 6       # power iteration on exact longs — bit-identical engines
-COLOR_ROUNDS = 40     # SQL unroll; JP converges in 34 at sf0.01, 29 at sf0.001
+COLOR_ROUNDS = 40     # SQL unroll; JP converges in 33 at sf0.01, 28 at sf0.001
 MSF_ROUNDS = 5        # SQL unroll; Boruvka converges in 3 at sf0.01
 MSF_JUMPS = 10        # inner pointer-jump unroll (idempotent past the roots)
 KMEANS_K = 8
@@ -3586,12 +3587,14 @@ FROM deg GROUP BY 1"""
 
 
 def _mis_sql(rounds: int) -> str:
-    """Unrolled deterministic-Luby MIS — mirrors
-    algorithms/mis.maximal_independent_set: priority (v*2654435761) mod
-    1000000007 (a bijection on Z_p, so unique), winners beat every active
-    neighbor, winners + neighborhoods retire, isolated actives
-    auto-join.  An empty active set makes later rounds identity, so the
-    fixed unroll is exact once the Spark loop converges within it."""
+    """Unrolled deterministic-Luby MIS — the same set as
+    algorithms/mis.maximal_independent_set (the lexicographically-first
+    MIS in priority order, whatever the round schedule): priority
+    (v*2654435761) mod 1000000007 (a bijection on Z_p, so unique),
+    winners beat every active neighbor, winners + neighborhoods retire in
+    the same round, isolated actives auto-join.  An empty active set
+    makes later rounds identity, so the fixed unroll is exact once its
+    Luby rounds cover the graph."""
     pr = "(({v}) * 2654435761) % 1000000007"
     head = f"""WITH {customer_graph_sql().strip()},
 e0 AS MATERIALIZED (

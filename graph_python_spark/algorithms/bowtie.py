@@ -21,28 +21,29 @@ engine's tier.
 
 Plan shape: ONE SCC run (forward-backward coloring,
 ``algorithms/scc.py``) + TWO tagged multi-source reachability loops —
-the forward-from-CORE / backward-from-CORE sweeps advance together in
-one (tag, id)-keyed frontier over a (tag, s, d)-keyed union of the edge
-table and its reverse, and likewise forward-from-IN / backward-from-OUT,
-so the driver pays max(diameters) rounds per loop instead of the sum.
-Each round's exchange is frontier-sized (``tagged edges ⋈ frontier``
-then anti-join against the reached set, held as a lazy union of pinned
-per-round parts — never re-checkpointed, which also sidesteps the
-Spark 4 union-constraint-rewrite bug documented in plans/iterate.py).
-The final labeling is five hash left-joins on the vertex key + one CASE
-— no closure is ever materialized (the DuckDB oracle builds the
-recursive closure instead; fine at sf0.01, impossible at 100 TB).
+the forward-from-CORE / backward-from-CORE sweeps advance together over
+a (tag, s, d)-keyed union of the simple edge table and its reverse,
+pinned once and hash-partitioned on (tag, s), and likewise
+forward-from-IN / backward-from-OUT, so each loop pays max(diameters)
+rounds instead of the sum.  Each loop is one
+``frontier_fixpoint`` over one vertex state (tag, id, _new): a round
+joins the ``_new`` frontier to the edges, dedupes the reached pairs and
+merges the ones the state lacks, so its exchange is frontier-sized; the
+loop stops on the round that adds none, read off the pin.  The final
+labeling is five hash left-joins on the vertex key + one CASE — no
+closure is ever materialized (the DuckDB oracle builds the recursive
+closure instead; fine at sf0.01, impossible at 100 TB).  Once the labels
+are pinned, every frame the call pinned is freed, the SCC parts too.
 
 Scale notes (100 TB): frontier rounds are bounded by the directed
 diameter of each region; on real web graphs the giant CORE makes the
 sweeps converge in tens of rounds.  All sweeps and the label joins
-shuffle on the vertex key only; the reached set grows monotonically and
-its pinned parts total O(V) ids, no payload.
+shuffle on the vertex key only; the reach state grows monotonically to
+O(V) (tag, id) rows, no payload.
 """
 
 from __future__ import annotations
 
-from functools import reduce
 from typing import Optional
 
 from pyspark.sql import DataFrame
@@ -50,8 +51,9 @@ from pyspark.sql import functions as F
 
 from graph_python_spark.algorithms.scc import strongly_connected_components
 from graph_python_spark.operators.blocks import simple, vertex_ids
-from graph_python_spark.plans.iterate import (iterative, loop_shuffle_width,
-                                              materialize, release)
+from graph_python_spark.plans.iterate import (frontier_fixpoint, iterative,
+                                              loop_shuffle_width, materialize,
+                                              release, release_parts)
 
 
 def _reach_tagged(tagged_edges: DataFrame, tagged_seeds: DataFrame,
@@ -59,39 +61,30 @@ def _reach_tagged(tagged_edges: DataFrame, tagged_seeds: DataFrame,
     """Per-tag reachability: vertices reachable from that tag's seeds
     along that tag's edges, seeds included.  ``tagged_edges``:
     (tag, s, d); ``tagged_seeds``: (tag, id).  All tags advance in ONE
-    frontier relation, so k sweeps cost max (not sum) of their round
-    counts.  Returns (tag, id) as a lazy union of pinned per-round
-    parts."""
-    parts = [materialize(tagged_seeds.select("tag", "id").distinct())]
-    frontier = parts[0]
-    for _ in range(max_rounds):
-        reached = reduce(lambda a, b: a.unionByName(b), parts)
-        nxt = materialize(
-            tagged_edges.join(frontier.withColumnRenamed("id", "s"),
-                              ["tag", "s"])
-            .select("tag", F.col("d").alias("id"))
-            .distinct()
-            .join(reached, ["tag", "id"], "left_anti")
-        )
-        if nxt.isEmpty():
-            release(nxt)
-            break
-        parts.append(nxt)
-        frontier = nxt
-    return reduce(lambda a, b: a.unionByName(b), parts)
+    frontier state keyed (tag, id), so k sweeps cost max (not sum) of
+    their round counts.  Returns the pinned state; the caller releases
+    it."""
+    return frontier_fixpoint(
+        tagged_seeds.select("tag", "id").distinct(),
+        lambda f: (tagged_edges.join(f.select("tag", F.col("id").alias("s")),
+                                     ["tag", "s"])
+                   .select("tag", F.col("d").alias("id")).distinct()),
+        ["tag", "id"], max_rounds)
 
 
 def reach_from(edges: DataFrame, seeds: DataFrame,
                max_rounds: int = 100) -> DataFrame:
     """Vertices reachable from ``seeds`` (id) along ``edges`` (s, d),
-    seeds included.  Frontier BFS: each round ships only the frontier
-    through the edge join; the exchange is O(frontier-adjacent), not
-    O(V).  Returns (id)."""
-    out = _reach_tagged(
-        edges.select(F.lit("f").alias("tag"), "s", "d"),
-        seeds.select(F.lit("f").alias("tag"), "id"),
-        max_rounds,
-    )
+    seeds included.  Frontier BFS over the simple graph, pinned once:
+    each round ships only the frontier through the edge join; the
+    exchange is O(frontier-adjacent), not O(V).  Returns (id), a
+    projection of the last pinned round."""
+    tagged = materialize(simple(edges, "s", "d")
+                         .select(F.lit("f").alias("tag"), "s", "d")
+                         .repartition("tag", "s"))
+    out = _reach_tagged(tagged, seeds.select(F.lit("f").alias("tag"), "id"),
+                        max_rounds)
+    release(tagged)
     return out.select("id")
 
 
@@ -148,6 +141,7 @@ def bowtie_decomposition(
         bwd = r1.filter(F.col("tag") == "b").select("id")
         in_ = materialize(bwd.join(core, "id", "left_anti"))
         out = materialize(fwd.join(core, "id", "left_anti"))
+        release(r1)
         # sweep pair 2: forward from IN + backward from OUT, one loop
         r2 = _reach_tagged(
             tagged,
@@ -180,5 +174,6 @@ def bowtie_decomposition(
         .select("id", region.alias("region"))
     )
     res = materialize(res)
-    release(eb, tagged, verts, core, in_, out)
+    release(eb, tagged, verts, core, in_, out, r2)
+    release_parts(labels)
     return res

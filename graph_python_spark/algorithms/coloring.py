@@ -2,7 +2,7 @@
 
 GraphBLAS formulation (same select/mask family as LAGraph MIS, SURVEY
 §2.8): each round the vertices whose priority beats every UNCOLORED
-neighbor's (mxv min over the residual graph + ewise compare) color
+neighbor's (mxv min over the uncolored mask + ewise compare) color
 themselves with the smallest color absent from their already-colored
 neighborhoods (the mex).  Winners of one round form an independent set,
 so their mex computations never conflict; two adjacent vertices can
@@ -14,43 +14,49 @@ universe below p, so rounds are tie-free and the whole run is a pure
 function of the graph (fixed-unroll SQL replay: rounds past the fixpoint
 see an empty uncolored set and are identity).
 
-Spark shape: the residual edge state (edges between uncolored vertices)
-only ever shrinks and is the per-round aggregate input, partitioned once
-on s; the FULL symmetric adjacency is pinned separately for the
-mex neighbor-color lookup (join winners -> neighbors -> colors,
-collect_set, then array_except(sequence(0, |set|), set) — all JVM-side).
-Winner edges are removed with the small-delta plumbing from k-core/MIS
-(InSet filter for small winner sets, anti-join otherwise).  Expected
-rounds: O(log n) for hash priorities (Jones & Plassmann 1993).
+Spark shape: the matrix is fixed — the symmetric adjacency, pinned once
+— and the state is one vertex frame ``(id, color, _t)``: color is null
+while the vertex is uncolored, and ``_t`` is the round number, so the
+round's priority salt is computed from a column and the round plan is
+the same every round.  A round is one ``fixpoint`` step: the state
+joins the adjacency once on its source column, keeping the adjacency's
+partitioning, one ``groupBy`` on the other end yields each vertex's
+minimum uncolored-neighbor priority and its neighbors' color set, and
+that aggregate joins back to the state, where winners take the mex
+(``array_except(sequence(0, |set|), set)``, all JVM-side).  The loop
+stops on the round that leaves no vertex uncolored, read off the pin.
+Every round reads all of the adjacency, not a shrinking residual graph.
+Expected rounds: O(log n) for hash priorities (Jones & Plassmann 1993).
 """
 
 from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from graph_python_spark.algorithms.mis import PRIO_MOD, PRIO_MULT
 from graph_python_spark.operators.blocks import symmetric
-from graph_python_spark.plans.iterate import (iterative, loop_shuffle_width,
-                                              materialize, release)
+from graph_python_spark.plans.iterate import (fixpoint, iterative,
+                                              loop_shuffle_width, materialize,
+                                              release)
 
 ROUND_SALT = 777767777
 
 
-def round_prio(col, t: int):
+def round_prio(col: Column, t: Column) -> Column:
     """Fresh priority each round: ((v + t*SALT) * MULT) mod P — a bijection
     on Z_p in v for every round t (unique priorities, no ties), but
     uncorrelated across rounds, which breaks the long monotone-priority
     chains that make fixed-priority Jones–Plassmann need O(chain) rounds:
     with per-round re-salting the expected round count is O(log n)
     (Luby-style analysis), measured 47 -> ~12 on the sf0.01 fixture.
-    The round salt is reduced mod P driver-side and the pre-multiply
-    ``mod P`` keeps every engine-side intermediate below 2^62 (int64
-    bounds hold identically in Spark and DuckDB)."""
-    salt = (t * ROUND_SALT) % PRIO_MOD
-    return (((col + F.lit(salt)) % F.lit(PRIO_MOD))
+    The round salt is reduced mod P first and the pre-multiply ``mod P``
+    keeps every engine-side intermediate below 2^62 (int64 bounds hold
+    identically in Spark and DuckDB)."""
+    salt = (t * F.lit(ROUND_SALT)) % F.lit(PRIO_MOD)
+    return (((col + salt) % F.lit(PRIO_MOD))
             * F.lit(PRIO_MULT)) % F.lit(PRIO_MOD)
 
 
@@ -66,81 +72,48 @@ def greedy_coloring(
 
     Returns ``(colors(id, color), rounds)``: a proper coloring (adjacent
     vertices never share a color; colors are dense small ints starting at
-    0) and the number of rounds executed (including the final round that
-    empties the uncolored set).  The colors are the last pinned round
-    itself; every other round's state is freed.
+    0) and the number of rounds run, the last being the one that colored
+    the last vertices (no extra round checks that none is left).  The
+    colors are a projection of the last pinned round; every other round's
+    state is freed.
     """
     spark = edges.sparkSession
-    full = materialize(symmetric(edges, partitions=partitions))
-    n_edges = full.count()
-    cur = full  # residual: edges whose BOTH endpoints are uncolored
-    unc = materialize(full.select(F.col("s").alias("id")).distinct())
-    colors: Optional[DataFrame] = None
-    inset_cap = 50_000
+    adj = materialize(symmetric(edges, partitions=partitions))
+    n_edges = adj.count()
 
-    rounds = 0
-    with loop_shuffle_width(spark, max(n_edges, 1)):
-        for _ in range(max_rounds):
-            rounds += 1
-            if unc.isEmpty():
-                break
-            # winners: priority below every uncolored neighbor's; vertices
-            # with NO uncolored neighbor (residual-isolated) win by default
-            nbr_min = cur.groupBy("s").agg(
-                F.min(round_prio(F.col("d"), rounds)).alias("_m"))
-            cand = materialize(
-                unc.join(nbr_min.withColumnRenamed("s", "id"), "id",
-                         "left_outer")
-                .filter(F.col("_m").isNull()
-                        | (round_prio(F.col("id"), rounds) < F.col("_m")))
-                .select("id")
+    def step(state: DataFrame) -> DataFrame:
+        # the adjacency is symmetric: join the state on s, which keeps
+        # the adjacency's hash(s) partitioning, and reduce per d
+        nbr = (
+            adj.join(state.select(F.col("id").alias("s"), "color", "_t"), "s")
+            .groupBy(F.col("d").alias("id"))
+            .agg(
+                # min over uncolored neighbors; none left -> null -> a win
+                F.min(F.when(F.col("color").isNull(),
+                             round_prio(F.col("s"), F.col("_t")))).alias("_m"),
+                F.collect_set("color").alias("_cs"),
             )
-            # mex over already-colored neighbors in the FULL graph
-            if colors is not None:
-                nc = (
-                    cand.join(full.withColumnRenamed("s", "id"), "id")
-                    .join(colors.select(F.col("id").alias("d"),
-                                        F.col("color").alias("_nc")), "d")
-                    .groupBy("id")
-                    .agg(F.collect_set("_nc").alias("_cs"))
-                )
-                newc = (
-                    cand.join(nc, "id", "left_outer")
-                    .select(
-                        "id",
-                        F.when(F.col("_cs").isNull(), F.lit(0)).otherwise(
-                            F.array_min(F.array_except(
-                                F.sequence(F.lit(0), F.size("_cs")),
-                                F.col("_cs")))
-                        ).cast("long").alias("color"),
-                    )
-                )
-                prev, colors = colors, materialize(colors.unionByName(newc))
-                release(prev)
-            else:
-                colors = materialize(
-                    cand.select("id", F.lit(0).cast("long").alias("color")))
-            # retire the winners from the uncolored set + residual edges
-            unc_next = materialize(unc.join(cand, "id", "left_anti"))
-            release(unc)
-            unc = unc_next
-            probe = cand.limit(inset_cap + 1).collect()
-            if len(probe) <= inset_cap:
-                ids = [r[0] for r in probe]
-                nxt = cur.filter(~F.col("s").isin(ids)
-                                 & ~F.col("d").isin(ids))
-            else:
-                rm_s = cand.withColumnRenamed("id", "s")
-                rm_d = cand.withColumnRenamed("id", "d")
-                nxt = (cur.join(rm_s, "s", "left_anti")
-                       .join(rm_d, "d", "left_anti"))
-            nxt = materialize(nxt)
-            if cur is not full:
-                release(cur)
-            cur = nxt
-            release(cand)
+        )
+        wins = (F.col("color").isNull()
+                & (F.col("_m").isNull()
+                   | (round_prio(F.col("id"), F.col("_t")) < F.col("_m"))))
+        mex = F.array_min(F.array_except(
+            F.sequence(F.lit(0).cast("long"), F.size("_cs").cast("long")),
+            F.col("_cs")))
+        # every vertex of the state has a neighbor, so an inner join
+        # keeps them all
+        return (
+            state.join(nbr, "id")
+            .select("id",
+                    F.when(wins, mex).otherwise(F.col("color")).alias("color"),
+                    (F.col("_t") + 1).alias("_t"))
+        )
 
-    release(full, cur, unc)
-    if colors is None:
-        colors = spark.createDataFrame([], "id long, color long")
-    return colors, rounds
+    start = adj.select(F.col("s").alias("id")).distinct().select(
+        "id", F.lit(None).cast("long").alias("color"),
+        F.lit(1).cast("long").alias("_t"))
+    with loop_shuffle_width(spark, max(n_edges, 1)):
+        state, rounds = fixpoint(start, step, max_rounds,
+                                 changed=F.max(F.col("color").isNull()))
+    release(adj)
+    return state.filter(F.col("color").isNotNull()).select("id", "color"), rounds

@@ -19,13 +19,17 @@ Spark shape — TWO batching decisions that matter at 100 TB:
     of each frontier expansion (same two-round affine-mod-prime contract
     as pipeline/sampling._unit_hash — exact BIGINT math in any engine, so
     the DuckDB oracle replays every coin bit-for-bit).  The edge relation
-    is read once per round, not once per sample.
-  * All s BFS runs advance in ONE frontier relation keyed (sample, id) —
-    the landmark_distances / ppr_batch multi-source batching — so s
-    samples cost one BFS's shuffle count.
+    is pinned once and read once per round, not once per sample.
+  * All s BFS runs advance in ONE vertex state keyed (sample, id) — the
+    landmark_distances / ppr_batch multi-source batching — so s samples
+    cost one BFS's shuffle count.
 
-State is O(s x reached); each round is one src-keyed join + anti-join +
-dedup, all partial-aggregated before the exchange.
+The state is ``(sample, id, _new)``, O(s x reached) rows, and a round is
+one ``frontier_fixpoint`` step: the ``_new`` frontier joins the edges
+once (coin filter, dedup, partial-aggregated before the exchange) and
+the reached pairs the state lacks merge in by one full outer join.  The
+loop stops after ``rounds`` rounds or on the first round that reaches no
+new pair, read off the pin.
 """
 
 from __future__ import annotations
@@ -35,7 +39,8 @@ from pyspark.sql import functions as F
 
 from ..pipeline.sampling import _MOD, _P1
 from ..operators.blocks import simple
-from ..plans.iterate import loop_shuffle_width, materialize
+from ..plans.iterate import (frontier_fixpoint, loop_shuffle_width,
+                             materialize, release)
 
 
 def _edge_coin(i, j, t, salt: int):
@@ -72,29 +77,25 @@ def influence_spread(
     e = materialize(e.repartition(
         int(spark.conf.get("spark.sql.shuffle.partitions")), "i"))
 
+    def expand(frontier: DataFrame) -> DataFrame:
+        return (
+            frontier.join(e, frontier["id"] == e["i"])
+            .filter(_edge_coin(F.col("i"), F.col("j"), F.col("sample"),
+                               salt) <= F.lit(p))
+            .select("sample", F.col("j").alias("id"))
+            .distinct()
+        )
+
     t = (spark.range(samples)
          .select(F.col("id").cast("long").alias("sample")))
-    reached = materialize(
+    start = (
         seeds.select(F.col("id").cast("long").alias("id")).distinct()
         .crossJoin(F.broadcast(t))
         .select("sample", "id")
     )
-    frontier = reached
     with loop_shuffle_width(spark, max(e.count(), 1)):
-        for _ in range(rounds):
-            nxt = (
-                frontier.join(e, frontier["id"] == e["i"])
-                .filter(_edge_coin(F.col("i"), F.col("j"), F.col("sample"),
-                                   salt) <= F.lit(p))
-                .select("sample", F.col("j").alias("id"))
-                .distinct()
-                .join(reached, ["sample", "id"], "left_anti")
-            )
-            nxt = materialize(nxt)
-            if nxt.isEmpty():
-                break
-            reached = materialize(reached.unionByName(nxt))
-            frontier = nxt
+        reached = frontier_fixpoint(start, expand, ["sample", "id"], rounds)
+    release(e)
     return (
         reached.groupBy("sample")
         .agg(F.count("*").cast("long").alias("reached"))

@@ -2,21 +2,29 @@
 
 GraphBLAS formulation (LAGraph MIS; SURVEY §2.8's select/mask family):
 each round a vertex joins the set iff its priority beats every active
-neighbor's (mxv with the min_second semiring + ewise compare), then the
-winners and their neighborhoods leave the active set.  Deterministic
-variant: priority(v) = (v * 2654435761) mod 1000000007 — multiplication
-by a unit is a bijection on Z_p, so priorities are UNIQUE for any vertex
-universe below p and no tie-break is needed; the result is a pure
-function of the graph (which is what lets a fixed-unroll SQL oracle
-replay it exactly — rounds past the fixpoint see an empty active set and
-are identity).
+neighbor's (mxv with the min_second semiring + ewise compare), and the
+neighbors of the set leave the active set.  Deterministic variant:
+priority(v) = (v * 2654435761) mod 1000000007 — multiplication by a
+unit is a bijection on Z_p, so priorities are UNIQUE for any vertex
+universe below p and no tie-break is needed.  The result is the
+lexicographically-first MIS in priority order (a vertex joins iff no
+lower-priority neighbor does), a pure function of the graph whatever the
+round schedule — which is what lets a fixed-unroll SQL oracle replay it
+exactly (rounds past the fixpoint see an empty active set and are
+identity).
 
-Spark shape: the iterated state is (active vertices, surviving edges
-among them), both only ever SHRINKING.  The per-round neighbor-minimum is
-one exchange-free aggregate over the edge state (partitioned once on s);
-winners + their neighborhoods are removed with the same small-delta
-plumbing as k-core (InSet filter for small deltas, broadcast anti-join
-otherwise).  Expected rounds: O(log n) (Luby).
+Spark shape: the matrix is fixed — the symmetric adjacency, pinned once
+— and the state is one vertex frame ``(id, st)`` with st = 0 active,
+1 in the set, 2 removed.  A round is one ``fixpoint`` step: the state
+joins the adjacency once on its source column, keeping the adjacency's
+partitioning, one ``groupBy`` on the other end yields each vertex's
+minimum active-neighbor priority and whether a neighbor is in the set,
+and that aggregate joins back to the state.  An active vertex with a
+neighbor in the set is removed; otherwise it joins the set
+if it beats every active neighbor (none left counts as a win).  A
+winner's neighbors therefore retire one round after it wins, while the
+next winners are picked.  The loop stops on the round that leaves no
+vertex active, read off the pin.  Expected rounds: O(log n) (Luby).
 """
 
 from __future__ import annotations
@@ -27,8 +35,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_python_spark.operators.blocks import symmetric
-from graph_python_spark.plans.iterate import (iterative, loop_shuffle_width,
-                                              materialize, release)
+from graph_python_spark.plans.iterate import (fixpoint, iterative,
+                                              loop_shuffle_width, materialize,
+                                              release)
 
 PRIO_MULT = 2654435761
 PRIO_MOD = 1000000007
@@ -49,64 +58,46 @@ def maximal_independent_set(
 
     Returns ``(mis(id), rounds)``: the selected vertices (every vertex of
     the graph is either selected or adjacent to a selected one, no two
-    selected vertices are adjacent) and the number of rounds executed
-    (including the final round that empties the active set).
+    selected vertices are adjacent) and the number of rounds run, the
+    last being the one that left no vertex active (no extra round checks
+    that none is left).  A round both picks winners and retires the
+    previous round's winners' neighbors, so the winners of Luby rounds
+    1..L are all in the set after 2L rounds, and a run takes up to 2L + 1
+    rounds.  ``max_rounds`` bounds the Luby rounds: the loop runs at most
+    ``2 * max_rounds`` rounds, and a graph that needs more Luby rounds
+    gets an independent set that need not be maximal.
     """
-    cur = materialize(symmetric(edges, partitions=partitions))
-    n_edges = cur.count()
     spark = edges.sparkSession
-    # vertices with no surviving neighbor are auto-selected, so the active
-    # vertex set is implicit in the edge state plus this isolated pool
-    isolated_mis: list[DataFrame] = []
-    mis_parts: list[DataFrame] = []
-    inset_cap = 50_000
+    adj = materialize(symmetric(edges, partitions=partitions))
+    n_edges = adj.count()
 
-    rounds = 0
+    def step(state: DataFrame) -> DataFrame:
+        # the adjacency is symmetric: join the state on s, which keeps
+        # the adjacency's hash(s) partitioning, and reduce per d
+        nbr = (
+            adj.join(state.select(F.col("id").alias("s"),
+                                  F.col("st").alias("_ss")), "s")
+            .groupBy(F.col("d").alias("id"))
+            .agg(F.min(F.when(F.col("_ss") == 0,
+                              prio(F.col("s")))).alias("_m"),
+                 F.max(F.col("_ss") == 1).alias("_in"))
+        )
+        st = (
+            F.when(F.col("st") != 0, F.col("st"))
+            .when(F.col("_in"), F.lit(2))
+            .when(F.col("_m").isNull() | (prio(F.col("id")) < F.col("_m")),
+                  F.lit(1))
+            .otherwise(F.lit(0))
+        )
+        # every vertex of the state has a neighbor, so an inner join
+        # keeps them all
+        return (state.join(nbr, "id")
+                .select("id", st.cast("int").alias("st")))
+
+    start = adj.select(F.col("s").alias("id")).distinct().select(
+        "id", F.lit(0).alias("st"))
     with loop_shuffle_width(spark, max(n_edges, 1)):
-        for _ in range(max_rounds):
-            rounds += 1
-            if cur.isEmpty():
-                break
-            # winners: prio(s) below the minimum neighbor priority
-            nbr_min = cur.groupBy("s").agg(F.min(prio(F.col("d"))).alias("_m"))
-            winners = materialize(
-                nbr_min.filter(prio(F.col("s")) < F.col("_m")).select("s")
-            )
-            mis_parts.append(winners)
-            # remove winners + their whole neighborhoods from the edge state
-            nbrs = (
-                cur.join(winners, "s").select(F.col("d").alias("s")).distinct()
-            )
-            gone = materialize(winners.unionByName(nbrs).distinct())
-            probe = gone.limit(inset_cap + 1).collect()
-            if len(probe) <= inset_cap:
-                ids = [r[0] for r in probe]
-                nxt = cur.filter(~F.col("s").isin(ids)
-                                 & ~F.col("d").isin(ids))
-            else:
-                rm_s, rm_d = gone, gone.withColumnRenamed("s", "d")
-                nxt = (cur.join(rm_s, "s", "left_anti")
-                       .join(rm_d, "d", "left_anti"))
-            # vertices whose every neighbor vanished without being removed
-            # themselves become isolated -> auto-selected next round; fold
-            # that into THIS state by keeping them as the remaining actives
-            survivors_before = cur.select("s").distinct() \
-                .join(gone, "s", "left_anti")
-            nxt = materialize(nxt)
-            still_connected = nxt.select("s").distinct()
-            isolated = materialize(
-                survivors_before.join(still_connected, "s", "left_anti"))
-            isolated_mis.append(isolated)
-            release(cur, gone)
-            cur = nxt
-
-    out = None
-    for part in mis_parts + isolated_mis:
-        out = part if out is None else out.unionByName(part)
-    if out is None:
-        release(cur)
-        return spark.createDataFrame([], "id long"), rounds
-    out = materialize(out.select(F.col("s").alias("id")).distinct())
-    # the union is pinned; release the per-round winner/isolated blocks
-    release(*mis_parts, *isolated_mis, cur)
-    return out, rounds
+        state, rounds = fixpoint(start, step, 2 * max_rounds,
+                                 changed=F.max(F.col("st") == 0))
+    release(adj)
+    return state.filter(F.col("st") == 1).select("id"), rounds

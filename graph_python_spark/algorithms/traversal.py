@@ -3,83 +3,67 @@
 Reference recipes:
   * level BFS  ``notebooks/Example B.1 -- Level BFS.ipynb``:
       q(~v.S, replace) << q.vxm(A, lor_land)      — frontier expansion is a
-      vxm masked by "not yet visited" == left_anti join here.
+      vxm masked by "not yet visited": the candidates the state lacks.
   * parent BFS ``notebooks/Example B.3 -- Parent BFS.ipynb``: min_first
       semiring — smallest-id parent wins == groupBy(dst).min(src).
   * SSSP       ``notebooks/Intro to GraphBLAS + SSSP example.ipynb``:
       w(binary.min) << w.vxm(m, min_plus) to fixpoint.
 
-The frontier is always the small side; edges stay cached and partitioned by
-src across the loop.
+The matrix is fixed and pinned once before the loop; the state is one
+vertex frame, and a round is one ``fixpoint`` step: the adjacency joins
+the state's frontier rows once, a ``groupBy`` reduces the candidates per
+vertex, and they merge back into the state.  Level and parent BFS carry
+``(id, level | parent, _new)`` on ``plans/iterate.frontier_fixpoint`` and
+stop on the round that adds no vertex, read off the pin; the frontier
+(``_new``) is always the small side.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import sys
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from graph_python_spark.operators.blocks import symmetric, vertex_ids
-from graph_python_spark.plans.iterate import (fixpoint, iterative,
-                                              loop_shuffle_width, materialize,
-                                              release)
+from graph_python_spark.operators.blocks import simple, symmetric, vertex_ids
+from graph_python_spark.plans.iterate import (fixpoint, frontier_fixpoint,
+                                              iterative, loop_shuffle_width,
+                                              materialize, release)
+
+
+def _frontier_bfs(edges: DataFrame, start: DataFrame, reach: Column,
+                  max_rounds: int) -> DataFrame:
+    """Frontier-push BFS from the one-row ``start`` ``(id, <value>)``
+    over the pinned simple adjacency: a round joins the frontier rows to
+    the adjacency once and reduces each reached vertex with ``reach``
+    (an aggregate over the frontier's ``s`` and value columns)."""
+    value = start.columns[1]
+    adj = materialize(simple(edges).toDF("s", "d"))
+    state = frontier_fixpoint(
+        start,
+        lambda f: (adj.join(f.select(F.col("id").alias("s"), value), "s")
+                   .groupBy(F.col("d").alias("id")).agg(reach.alias(value))),
+        ["id"], max_rounds)
+    release(adj)
+    return state.select("id", value)
 
 
 @iterative
 def bfs_levels(edges: DataFrame, source: int, max_depth: int = 10**9) -> DataFrame:
-    """Returns levels(id, level) for reachable vertices; level[source]=0."""
-    e = edges.select(F.col("i").alias("s"), F.col("j").alias("d")).distinct().cache()
-    spark = edges.sparkSession
-    visited = spark.createDataFrame([(source, 0)], "id long, level int")
-    frontier = visited.select("id")
-    visited = materialize(visited)
-    frontier = materialize(frontier)
-    depth = 0
-    while depth < max_depth:
-        depth += 1
-        nxt = (
-            e.join(frontier.withColumnRenamed("id", "s"), "s")
-            .select(F.col("d").alias("id"))
-            .distinct()
-            .join(visited.select("id"), "id", "left_anti")  # q(~v.S, replace)
-        )
-        nxt = materialize(nxt)
-        if nxt.limit(1).count() == 0:
-            release(nxt)
-            break
-        grown = materialize(
-            visited.unionByName(nxt.select("id", F.lit(depth).cast("int").alias("level")))
-        )
-        release(visited, frontier)
-        visited, frontier = grown, nxt
-    release(e, frontier)
-    return visited
+    """Returns levels(id, level) for reachable vertices; level[source]=0.
+    The levels are a projection of the last pinned round."""
+    start = edges.sparkSession.createDataFrame(
+        [(source, 0)], "id long, level int")
+    return _frontier_bfs(edges, start, F.min("level") + 1, max_depth)
 
 
 @iterative
 def bfs_parents(edges: DataFrame, source: int) -> DataFrame:
-    """Returns parents(id, parent); parent[source]=source; min-id parent wins."""
-    e = edges.select(F.col("i").alias("s"), F.col("j").alias("d")).distinct().cache()
-    spark = edges.sparkSession
-    parents = spark.createDataFrame([(source, source)], "id long, parent long")
-    frontier = parents.select("id")
-    parents = materialize(parents)
-    frontier = materialize(frontier)
-    while True:
-        cand = (
-            e.join(frontier.select(F.col("id").alias("s")), "s")
-            .groupBy(F.col("d").alias("id"))
-            .agg(F.min("s").alias("parent"))  # min_first semiring
-            .join(parents.select("id"), "id", "left_anti")
-        )
-        cand = materialize(cand)
-        if cand.limit(1).count() == 0:
-            release(cand)
-            break
-        grown = materialize(parents.unionByName(cand))
-        release(parents, frontier)
-        parents, frontier = grown, cand
-    release(e, frontier)
-    return parents
+    """Returns parents(id, parent); parent[source]=source; min-id parent
+    wins (the min_first semiring)."""
+    start = edges.sparkSession.createDataFrame(
+        [(source, source)], "id long, parent long")
+    return _frontier_bfs(edges, start, F.min("s"), sys.maxsize)
 
 
 @iterative

@@ -15,8 +15,10 @@ iteration therefore ends in either:
 round's state, reads the round's convergence aggregate from that same pin
 (``DataFrame.observe``, no second job), hands old and new state to the
 loop's own hook, and then releases the replaced state.  Loops write only
-their step.  :func:`release` is the one free call for anything a loop
-built, pinned or cached.
+their step; :func:`frontier_fixpoint` writes the step of a frontier
+push.  :func:`release` is the one free call for anything a loop built,
+pinned or cached, and :func:`release_parts` frees a result made of
+pinned parts.
 
 The reference's only analogue is nonblocking-mode ``wait()``
 (``graphblas/core/matrix.py:778-803``); resumability is new engineering for
@@ -32,6 +34,7 @@ from contextlib import contextmanager
 from typing import Any, Callable, Optional
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 def materialize(df: DataFrame) -> DataFrame:
@@ -59,6 +62,27 @@ def release(*dfs: Optional[DataFrame]) -> None:
             plan.rdd().unpersist(False)
         elif df.storageLevel.useMemory or df.storageLevel.useDisk:
             df.unpersist()
+
+
+def release_parts(*dfs: Optional[DataFrame]) -> None:
+    """Free every pinned frame under a lazy result built from pinned
+    parts by projections and unions only — the labels
+    ``scc.strongly_connected_components`` returns: one part, or a union of
+    them, each a pin or a rename of one.  Unlike :func:`release` it looks
+    through projections, so call it only on a frame that owns its parts:
+    none of them may be read after it."""
+    def free(plan) -> None:
+        kind = plan.getClass().getSimpleName()
+        if kind == "LogicalRDD":
+            plan.rdd().unpersist(False)
+        elif kind in ("Project", "Union"):
+            children = plan.children()
+            for k in range(children.size()):
+                free(children.apply(k))
+
+    for df in dfs:
+        if df is not None:
+            free(df._jdf.logicalPlan())
 
 
 def fixpoint(state: Optional[DataFrame], step: Callable[..., DataFrame],
@@ -99,6 +123,34 @@ def fixpoint(state: Optional[DataFrame], step: Callable[..., DataFrame],
     return state, done
 
 
+
+def frontier_fixpoint(start: DataFrame,
+                      expand: Callable[[DataFrame], DataFrame],
+                      keys: list[str], rounds: int) -> DataFrame:
+    """Grow a keyed reached set by frontier pushes, on :func:`fixpoint`.
+
+    ``start`` holds the key columns, then any value columns, one row per
+    key.  The state is those rows plus a ``_new`` flag that marks the
+    frontier.  A round maps the frontier rows through ``expand`` to
+    candidates (the same columns, one row per key) and merges in the
+    ones the state lacks as the next frontier: ``q(~v.S) << q.vxm(A)``
+    as one full outer join.  The loop stops after ``rounds`` rounds or on
+    the round that adds no row, read off the pin.  Returns the pinned
+    state, ``_new`` included; the caller releases it."""
+    values = [c for c in start.columns if c not in keys]
+
+    def step(state: DataFrame) -> DataFrame:
+        cand = expand(state.filter(F.col("_new"))).select(
+            *keys, *(F.col(v).alias(f"_c{v}") for v in values))
+        return (state.join(cand, keys, "full_outer")
+                .select(*keys,
+                        *(F.coalesce(v, f"_c{v}").alias(v) for v in values),
+                        F.col("_new").isNull().alias("_new")))
+
+    state, _ = fixpoint(start.select("*", F.lit(True).alias("_new")), step,
+                        rounds, changed=F.max("_new"))
+    return state
+
 @contextmanager
 def loop_conf(spark: SparkSession):
     """Disable AQE and constraint propagation for the duration of a fixed
@@ -115,9 +167,9 @@ def loop_conf(spark: SparkSession):
     per-round plans, and its union rewrite is buggy in Spark 4: checkpoint
     of a union with >= 2 LogicalRDD children throws "key not found: id#N"
     in UnionBase.rewriteConstraints (reproduced on the 300k+-vertex SCC
-    accumulator before scc.py stopped re-checkpointing its union; loops
-    that grow a reached-set by union, e.g. bowtie's reach_from, would hit
-    it too).  Runtime-settable confs: results are identical either way.
+    accumulator before scc.py stopped re-checkpointing its union; any
+    loop that pins a union of pinned frames each round would hit it
+    too).  Runtime-settable confs: results are identical either way.
     """
     keys = ("spark.sql.adaptive.enabled",
             "spark.sql.constraintPropagation.enabled")

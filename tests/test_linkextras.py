@@ -216,6 +216,24 @@ def test_mis_random(spark):
             assert any((min(v, u), max(v, u)) in und for u in got)
 
 
+def test_mis_falling_priority_path(spark):
+    """A path whose priorities fall along it settles one Luby round per
+    pair of vertices from the far end: 12 vertices need 6 Luby rounds,
+    and ``max_rounds=6`` still returns the whole maximal set although a
+    winner's neighbors retire one state round after it wins."""
+    from graph_python_spark.algorithms.mis import (PRIO_MOD, PRIO_MULT,
+                                                   maximal_independent_set)
+
+    path = sorted(range(100), key=lambda v: -(v * PRIO_MULT % PRIO_MOD))[:12]
+    pairs = list(zip(path, path[1:]))
+    got, rounds = maximal_independent_set(edge_df(spark, pairs),
+                                          max_rounds=6)
+    assert {r["id"] for r in got.collect()} == set(path[1::2])
+    want, _ = O.luby_mis(pairs, 100)
+    assert want == set(path[1::2])
+    assert rounds == 12
+
+
 def test_katz_random(spark):
     from graph_python_spark.algorithms.centrality import katz_fixed
 

@@ -306,6 +306,59 @@ def test_fixpoint(spark):
     assert same is s0 and n == 0
 
 
+def test_release_parts(spark):
+    """``release_parts`` frees the pinned frame under each part of a
+    lazy result made of pinned parts by projections and unions (the
+    shape of the SCC labels: a union, or a single renamed part), and
+    leaves what is under neither alone; ``release`` frees neither shape,
+    as it leaves every projection of a pin alone."""
+    from pyspark.sql import functions as F
+
+    from graph_python_spark.plans.iterate import (materialize, release,
+                                                  release_parts)
+
+    sc = spark.sparkContext
+
+    def persistent():
+        return set(sc._jsc.getPersistentRDDs().keys())
+
+    a, b, c, d, e = (materialize(spark.range(lo, lo + 3).select(
+        "id", F.col("id").alias("component"))) for lo in (0, 3, 6, 9, 12))
+    lazy = spark.range(15, 17).select("id", F.col("id").alias("component"))
+    u = (a.unionByName(b)
+         .unionByName(c.select("id", (F.col("id") + 1).alias("component")))
+         .unionByName(lazy))
+    one = e.select("id", F.col("id").alias("component"))
+    assert u._jdf.logicalPlan().getClass().getSimpleName() == "Union"
+    ids = [_pinned_rdd(x) for x in (a, b, c, d, e)]
+    release(u, one, d.select("id"))
+    assert set(ids) <= persistent()
+    release_parts(u, one)
+    left = persistent()
+    assert not left & ({ids[0], ids[1], ids[2], ids[4]}), left
+    assert ids[3] in left
+    assert sorted(r["id"] for r in d.collect()) == [9, 10, 11]
+    release(d)
+
+
+def test_bowtie_frees_single_part_scc(spark):
+    """A graph that SCC's trim resolves in one pass (every vertex is a
+    source or a sink) gives labels that are one renamed pin, not a
+    union; ``bowtie_decomposition`` frees that part too and leaves only
+    its pinned regions."""
+    from graph_python_spark.algorithms.bowtie import bowtie_decomposition
+
+    sc = spark.sparkContext
+    e = spark.createDataFrame([(0, 1), (0, 2), (3, 1)], "i long, j long")
+    first = sc.parallelize([0]).id()
+    out = bowtie_decomposition(e)
+    left = sum(1 for k in sc._jsc.getPersistentRDDs().keys() if k > first)
+    assert left == 1, left
+    # all SCCs are singletons: CORE is the smallest id
+    assert sorted((r["id"], r["region"]) for r in out.collect()) == [
+        (0, "CORE"), (1, "OUT"), (2, "OUT"), (3, "TENDRIL")]
+
+
 # algorithm -> (round keyword, persistent RDDs a call may leave: the
 # frames its lazy result reads)
 LOOPS = {
@@ -319,12 +372,58 @@ LOOPS = {
     "labelprop.label_propagation": ("max_sweeps", 1),
     "traversal.dag_longest_path_levels": ("rounds", 1),
     "anf.anf_sketches": ("radius", 1),
-    # the pinned visited levels
+    # the last pinned vertex state (levels, colors, set flags, reached
+    # (tag, id) or (sample, id) pairs)
     "traversal.bfs_levels": ("max_depth", 1),
+    "coloring.greedy_coloring": ("max_rounds", 1),
+    "mis.maximal_independent_set": ("max_rounds", 1),
+    "bowtie.reach_from": ("max_rounds", 1),
+    "influence.influence_spread": ("rounds", 1),
+    # the pinned regions: the SCC parts and both sweeps are freed
+    "bowtie.bowtie_decomposition": ("max_rounds", 1),
 }
 
-# algorithm -> the arguments it needs besides the edges and the rounds
-LOOP_ARGS = {"traversal.bfs_levels": {"source": 0}}
+
+def _seed0(e):
+    return e.sparkSession.createDataFrame([(0,)], "id long")
+
+
+def _falling_prio(e):
+    """``e`` relabeled so that vertex v becomes the v-th id of 0..63 by
+    falling MIS priority: a path (v, v + 1) then settles about one
+    vertex per MIS round instead of resolving in two."""
+    from pyspark.sql import functions as F
+
+    from graph_python_spark.algorithms.mis import PRIO_MOD, PRIO_MULT
+
+    order = F.array(*(F.lit(v) for v in sorted(
+        range(64), key=lambda v: -(v * PRIO_MULT % PRIO_MOD))))
+    return {"edges": e.select(*(
+        F.element_at(order, (F.col(c) + 1).cast("int")).cast("long").alias(c)
+        for c in ("i", "j")))}
+
+
+# algorithm -> e -> the arguments it needs besides the rounds; an
+# "edges" entry replaces the (i, j) edge frame
+LOOP_ARGS = {
+    "traversal.bfs_levels": lambda e: {"source": 0},
+    "bowtie.reach_from": lambda e: {"edges": e.toDF("s", "d"),
+                                    "seeds": _seed0(e)},
+    "influence.influence_spread": lambda e: {"seeds": _seed0(e), "p": 1.0},
+    "mis.maximal_independent_set": _falling_prio,
+}
+
+
+def _run_loop(algo, e, rounds):
+    """Call ``algo`` on the edges ``e`` for ``rounds`` rounds, with the
+    arguments LOOP_ARGS gives it."""
+    import importlib
+
+    module, name = algo.split(".")
+    run = getattr(importlib.import_module(
+        f"graph_python_spark.algorithms.{module}"), name)
+    args = LOOP_ARGS.get(algo, lambda e: {})(e)
+    return run(args.pop("edges", e), **{LOOPS[algo][0]: rounds}, **args)
 
 
 @pytest.mark.parametrize("algo", sorted(LOOPS))
@@ -334,12 +433,7 @@ def test_loops_release_pinned_state(spark, algo):
     call leaves only the frames its result reads, whatever the iteration
     count (``DataFrame.unpersist`` never frees a localCheckpoint).
     Collecting the result proves nothing it still reads was freed."""
-    import importlib
-
-    module, name = algo.split(".")
-    run = getattr(importlib.import_module(
-        f"graph_python_spark.algorithms.{module}"), name)
-    keyword, result_frames = LOOPS[algo]
+    result_frames = LOOPS[algo][1]
     sc = spark.sparkContext
     left = {}
     for rounds in (2, 8):
@@ -351,7 +445,7 @@ def test_loops_release_pinned_state(spark, algo):
         # RDD ids only grow: count the call's own RDDs, whatever the
         # context cleaner frees of earlier tests' meanwhile
         first = sc.parallelize([0]).id()
-        out = run(e, **{keyword: rounds}, **LOOP_ARGS.get(algo, {}))
+        out = _run_loop(algo, e, rounds)
         if isinstance(out, tuple):
             out = out[0]
         left[rounds] = sum(
@@ -361,23 +455,24 @@ def test_loops_release_pinned_state(spark, algo):
 
 
 @pytest.mark.parametrize("algo", ["components.connected_components",
-                                  "labelprop.label_propagation"])
+                                  "labelprop.label_propagation",
+                                  "coloring.greedy_coloring",
+                                  "mis.maximal_independent_set",
+                                  "traversal.bfs_levels",
+                                  "bowtie.reach_from"])
 def test_converged_loops_one_job_per_round(spark, algo):
-    """A converging CC or label-propagation round is one job: the pin.
-    Its change flag rides in the pinned state and is read off that pin,
-    so no second aggregate or old ⋈ new probe job runs per round.  Jobs
-    come from the status tracker, 1 round against 3 on a path that needs
-    more than 3 to converge, with broadcast joins and runtime bloom
-    filters off: either adds a job of its own to a round over a tiny
-    label vector (CC's grandparent self-join gets a bloom-filter
-    subquery), whatever the convergence test costs."""
-    import importlib
-
-    module, name = algo.split(".")
-    run = getattr(importlib.import_module(
-        f"graph_python_spark.algorithms.{module}"), name)
-    keyword = LOOPS[algo][0]
+    """A converging CC, label-propagation, coloring, MIS or frontier-BFS
+    round is one job: the pin.  Its change flag rides in the pinned state
+    and is read off that pin, so no second aggregate, emptiness probe or
+    old ⋈ new probe job runs per round.  Jobs come from the status
+    tracker, 1 round against 3 on a path that needs more than 3 to
+    converge, with broadcast joins and runtime bloom filters off: either
+    adds a job of its own to a round over a tiny vertex state (CC's
+    grandparent self-join gets a bloom-filter subquery), whatever the
+    convergence test costs."""
     sc = spark.sparkContext
+    # MIS runs two state rounds per Luby round its max_rounds counts
+    per = 2 if algo == "mis.maximal_independent_set" else 1
     off = {"spark.sql.autoBroadcastJoinThreshold": "-1",
            "spark.sql.optimizer.runtime.bloomFilter.enabled": "false"}
     before = {k: spark.conf.get(k) for k in off}
@@ -388,14 +483,15 @@ def test_converged_loops_one_job_per_round(spark, algo):
         for rounds in (1, 3):
             e = spark.createDataFrame([(v, v + 1) for v in range(40)],
                                       "i long, j long")
-            (_, ran), jobs[rounds] = _jobs(
-                sc, f"{name}-rounds-{rounds}",
-                lambda: run(e, **{keyword: rounds}))
-            assert ran == rounds
+            out, jobs[rounds] = _jobs(
+                sc, f"{algo}-rounds-{rounds}",
+                lambda: _run_loop(algo, e, rounds))
+            if isinstance(out, tuple):
+                assert out[1] == per * rounds
     finally:
         for k, v in before.items():
             spark.conf.set(k, v)
-    assert (jobs[3] - jobs[1]) / 2 == 1, jobs
+    assert (jobs[3] - jobs[1]) / (2 * per) == 1, jobs
 
 
 @pytest.mark.parametrize("algo", ["hits_fixed", "salsa_fixed"])
