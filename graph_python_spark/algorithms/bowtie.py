@@ -19,11 +19,11 @@ compose exactly this from BFS levels + SCC (reference
 is the standard structure report for web-scale link graphs, which is this
 engine's tier.
 
-Plan shape: ONE SCC run (forward-backward coloring,
-``algorithms/scc.py``) + TWO tagged multi-source reachability loops —
-the forward-from-CORE / backward-from-CORE sweeps advance together over
-a (tag, s, d)-keyed union of the simple edge table and its reverse,
-pinned once and hash-partitioned on (tag, s), and likewise
+Plan shape: ONE (tag, s, d)-keyed union of the simple edge table and
+its reverse (``scc.tagged_edges``), pinned once and hash-partitioned on
+(tag, s), under ONE SCC run (FB-Trim, ``algorithms/scc.py``) and TWO
+tagged multi-source reachability loops — the forward-from-CORE /
+backward-from-CORE sweeps advance together over it, and likewise
 forward-from-IN / backward-from-OUT, so each loop pays max(diameters)
 rounds instead of the sum.  Each loop is one
 ``frontier_fixpoint`` over one vertex state (tag, id, _new): a round
@@ -32,8 +32,8 @@ merges the ones the state lacks, so its exchange is frontier-sized; the
 loop stops on the round that adds none, read off the pin.  The final
 labeling is five hash left-joins on the vertex key + one CASE — no
 closure is ever materialized (the DuckDB oracle builds the recursive
-closure instead; fine at sf0.01, impossible at 100 TB).  Once the labels
-are pinned, every frame the call pinned is freed, the SCC parts too.
+closure instead; fine at sf0.01, impossible at 100 TB).  Once the regions
+are pinned, every frame the call pinned is freed, the SCC labels too.
 
 Scale notes (100 TB): frontier rounds are bounded by the directed
 diameter of each region; on real web graphs the giant CORE makes the
@@ -49,11 +49,11 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graph_python_spark.algorithms.scc import strongly_connected_components
-from graph_python_spark.operators.blocks import simple, vertex_ids
+from graph_python_spark.algorithms.scc import _scc, tagged_edges
+from graph_python_spark.operators.blocks import simple
 from graph_python_spark.plans.iterate import (frontier_fixpoint, iterative,
                                               loop_shuffle_width, materialize,
-                                              release, release_parts)
+                                              release)
 
 
 def _reach_tagged(tagged_edges: DataFrame, tagged_seeds: DataFrame,
@@ -100,30 +100,17 @@ def bowtie_decomposition(
     TENDRIL, DISCONNECTED}; deterministic (largest SCC, ties by min id).
     """
     spark = edges.sparkSession
-    eb = simple(edges).toDF("s", "d")
-    if partitions is not None:
-        eb = eb.repartition(partitions, "s")
-    eb = materialize(eb)
-    # one (tag, s, d) relation: 'f' = forward edges, 'b' = reversed —
-    # pinned (tag, s)-hash-partitioned so every sweep round's
+    # one (tag, s, d) relation for the SCC run and both sweep pairs,
+    # pinned (tag, s)-hash-partitioned so every round's
     # tagged ⋈ frontier join reuses the partitioning (only the
     # frontier-sized side exchanges per round)
-    tagged = materialize(
-        eb.select(F.lit("f").alias("tag"), "s", "d")
-        .unionByName(eb.select(F.lit("b").alias("tag"),
-                               F.col("d").alias("s"), F.col("s").alias("d")))
-        .repartition("tag", "s")
-    )
-    verts = materialize(vertex_ids(eb, "s", "d"))
-    n_verts = verts.count()
-
-    labels, _rounds = strongly_connected_components(
-        eb.select(F.col("s").alias("i"), F.col("d").alias("j")),
-        max_label_rounds=max_rounds,
-    )
+    tagged = materialize(tagged_edges(edges, partitions))
+    labels, _rounds = _scc(tagged, max_label_rounds=max_rounds)
+    n_verts = labels.count()
     # largest SCC, ties by smallest component id (= smallest member id,
     # since the SCC label is its minimum vertex)
-    top = (labels.groupBy("component").count()
+    top = (labels.filter(F.col("component").isNotNull())
+           .groupBy("component").count()
            .orderBy(F.desc("count"), F.asc("component"))
            .select("component").first())
     core = materialize(
@@ -164,7 +151,7 @@ def bowtie_decomposition(
         .otherwise("DISCONNECTED")
     )
     res = (
-        verts
+        labels.select("id")
         .join(flag(core, "_core"), "id", "left_outer")
         .join(flag(in_, "_in"), "id", "left_outer")
         .join(flag(out, "_out"), "id", "left_outer")
@@ -174,6 +161,5 @@ def bowtie_decomposition(
         .select("id", region.alias("region"))
     )
     res = materialize(res)
-    release(eb, tagged, verts, core, in_, out, r2)
-    release_parts(labels)
+    release(tagged, labels, core, in_, out, r2)
     return res

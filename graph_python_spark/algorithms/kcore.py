@@ -9,40 +9,84 @@ deletion order (peeling is monotone, so the fixpoint is unique and any
 extra rounds past convergence are identity — which is what lets a
 fixed-unroll SQL oracle check a run-to-convergence Spark loop).
 
-Spark shape: the iterated state is the SURVIVING EDGE relation itself,
-hash-partitioned ONCE on the source endpoint.  Each round computes degrees
-with an exchange-free groupBy (the state's partitioning satisfies the agg's
-required distribution), derives the PEELED DELTA (vertices whose degree
-just dropped below k — after round 1 this is a small frontier, not the
-survivor set), and removes the delta's edges without shuffling: a tiny
-delta becomes a literal InSet filter (one job, no join — no more driver
-memory than the broadcast join it replaces), a medium one two broadcast
-anti-joins, a huge one (typically only round 1) shuffled anti-joins.
-Neither the filter nor a broadcast join disturbs the state's
-partitioning, so after the initial repartition every subsequent round is
-exchange-free end to end.
-Convergence = empty delta (no vertex peeled ⇔ degrees stable).
+Spark shape (LAGraph's k-core, as ``algorithms/mis.py`` runs MIS): the
+matrix is fixed — the symmetric adjacency, pinned once, hash(s)-
+partitioned — and the state is one vertex frame ``(id, deg, _live)``
+with ``deg`` the vertex's degree among the live vertices.  A round is
+one ``plans/iterate.fixpoint`` step: the vertices that stay live (live,
+degree >= k) join the adjacency once on ``s``, keeping its
+partitioning, one ``groupBy`` on ``d`` counts each vertex's live
+neighbors (``s_core`` sums their edge weights instead), and that
+aggregate joins back to the state.  A vertex dies when its degree falls
+below k or its last live neighbor dies; it keeps its last degree for
+that one round and loses it the round after, so the loop stops on the
+first round that kills no vertex, read off the pin — no count,
+emptiness probe or driver-side delta.
 
-At 100 TB the plan holds: no per-vertex arrays are built, the moving state
-is monotonically SHRINKING (round t only ever touches the subgraph that
-survived round t-1 — never the original O(E) relation again), the per-round
-delta is the natural broadcast side (peeling fronts are tiny compared to
-the graph; rounds whose delta exceeds the broadcast budget — typically only
-round 1 — fall back to a shuffled anti-join), and power-law hubs are just
-heavy groupBy keys handled by partial aggregation.  Rounds are O(peeling
-depth); for web-scale graphs this is typically < 100.
+The trade: every round reads all of the adjacency, not the shrinking
+residual edge relation, but the state is O(V), the plan is the same
+every round, and the only per-round exchange is the degree aggregate.
+Rounds are O(peeling depth); for web-scale graphs this is typically
+< 100.
 """
 
 from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from graph_python_spark.operators.blocks import mirror, symmetric
-from graph_python_spark.plans.iterate import (iterative, loop_shuffle_width,
-                                              materialize, release)
+from graph_python_spark.plans.iterate import (fixpoint, iterative,
+                                              loop_shuffle_width, materialize,
+                                              release)
+
+
+def _peel(adj: DataFrame, degree: Column, floor: int, rounds: int,
+          start: Optional[DataFrame] = None,
+          after=None) -> tuple[DataFrame, int]:
+    """Peel the vertex state ``(id, deg, _live)`` over the pinned
+    hash(s)-partitioned adjacency ``adj`` ``(s, d, ...)`` for at most
+    ``rounds`` rounds, from ``start`` (default: every vertex live, with
+    ``deg`` the ``degree`` aggregate over its adjacency rows).  Each
+    round drops the live vertices whose ``deg`` is below ``floor`` and
+    recomputes ``deg`` of the rest over their live neighbors' rows; a
+    vertex left with no live neighbor drops in the same round, as it
+    leaves a peeled edge relation.  Returns ``(core(id, deg), rounds
+    run)``: the live vertices at or above ``floor``, a projection of the
+    last pinned state; the caller releases ``adj``."""
+    if start is None:
+        start = (adj.groupBy(F.col("s").alias("id"))
+                 .agg(degree.alias("deg"))
+                 .select("id", "deg", F.lit(True).alias("_live")))
+
+    def step(state: DataFrame) -> DataFrame:
+        keep = F.col("_live") & (F.col("deg") >= floor)
+        # the pinned state's size estimate grows every round, so the
+        # planner would broadcast the adjacency instead: a job and a
+        # driver round trip of all of E per round.  Hash the kept side.
+        kept = state.filter(keep).select(F.col("id").alias("s"))
+        nbr = (
+            adj.join(kept.hint("shuffle_hash"), "s")
+            .groupBy(F.col("d").alias("id"))
+            .agg(degree.alias("_nd"))
+        )
+        live = keep & F.col("_nd").isNotNull()
+        return (
+            state.join(nbr, "id", "left")
+            .select("id",
+                    F.when(live, F.col("_nd"))
+                    .when(F.col("_live"), F.col("deg")).alias("deg"),
+                    live.alias("_live"))
+        )
+
+    with loop_shuffle_width(adj.sparkSession, max(adj.count(), 1)):
+        state, done = fixpoint(start, step, rounds, after=after,
+                               changed=F.max(~F.col("_live")
+                                             & F.col("deg").isNotNull()))
+    core = state.filter(F.col("_live") & (F.col("deg") >= floor))
+    return core.select("id", "deg"), done
 
 
 @iterative
@@ -62,72 +106,28 @@ def kcore(
     proves the fixpoint).
 
     ``checkpoint``: optional durable ``plans.iterate.IterationState`` — the
-    surviving-edge state is saved every round (metrics: round #,
-    surviving edges), and a killed run resumes peeling from the last saved
-    round with identical results (the state is the whole fixpoint input;
-    peeling is deterministic).  The result reads only its own pinned
-    degrees; every round's edge state is freed.
+    vertex state is saved every round (metrics: round #), and a killed
+    run resumes peeling from the last saved round with identical results
+    (the state is the whole fixpoint input; peeling is deterministic).
+    The result is a projection of the last pinned state; the adjacency
+    and every other round's state are freed.
     """
-    rounds = 0
-    cur = None
+    adj = materialize(symmetric(edges, partitions=partitions))
+    done, start, save = 0, None, None
     if checkpoint is not None:
         restored = checkpoint.restore()
         if restored is not None:
-            rounds, states, _metrics = restored
-            cur = states["edges"]
-            if partitions is not None:
-                cur = cur.repartition(partitions, "s")
-            else:
-                cur = cur.repartition("s")
-            cur = materialize(cur)
-    if cur is None:
-        cur = materialize(symmetric(edges, partitions=partitions))
-    n_edges = cur.count()
-    # peeled deltas up to this size become a literal InSet filter — one
-    # job, no join, no exchange (a broadcast join collects to the driver
-    # anyway, so this costs no more driver memory than the alternative)
-    inset_cap = 50_000
-    # a delta bigger than this is shuffled, not broadcast (first-round
-    # peels of a sparse graph can be a large fraction of all vertices)
-    broadcast_cap = 4_000_000
+            done, states, _metrics = restored
+            start = states["state"]
 
-    with loop_shuffle_width(edges.sparkSession, max(n_edges, 1)):
-        while rounds < max_rounds:
-            deg = cur.groupBy("s").agg(F.count("*").alias("kdeg"))
-            dead_df = deg.filter(F.col("kdeg") < k).select("s")
-            probe = dead_df.limit(inset_cap + 1).collect()
-            rounds += 1
-            if not probe:
-                # fixpoint: nothing peeled, so current degrees are final
-                out = materialize(deg.filter(F.col("kdeg") >= k))
-                release(cur)
-                return out.select(F.col("s").alias("id"), "kdeg"), rounds
-            if len(probe) <= inset_cap:
-                ids = [r[0] for r in probe]
-                nxt = materialize(cur.filter(~F.col("s").isin(ids)
-                                             & ~F.col("d").isin(ids)))
-                release(cur)
-                cur = nxt
-            else:
-                dead = materialize(dead_df)
-                rm_s, rm_d = dead, dead.withColumnRenamed("s", "d")
-                if dead.count() <= broadcast_cap:
-                    rm_s, rm_d = F.broadcast(rm_s), F.broadcast(rm_d)
-                nxt = materialize(
-                    cur.join(rm_s, "s", "left_anti")
-                    .join(rm_d, "d", "left_anti")
-                )
-                release(cur, dead)
-                cur = nxt
-            if checkpoint is not None:
-                checkpoint.save(rounds, {"edges": cur},
-                                {"round": rounds, "peeled": len(probe)})
-    # max_rounds exhausted without a proven fixpoint: report current degrees
-    out = materialize(
-        cur.groupBy("s").agg(F.count("*").alias("kdeg")).filter(F.col("kdeg") >= k)
-    )
-    release(cur)
-    return out.select(F.col("s").alias("id"), "kdeg"), rounds
+        def save(_old, new, r):
+            checkpoint.save(done + r + 1, {"state": new},
+                            {"round": done + r + 1})
+
+    core, rounds = _peel(adj, F.count("*"), k, max_rounds - done,
+                         start=start, after=save)
+    release(adj)
+    return core.select("id", F.col("deg").alias("kdeg")), done + rounds
 
 
 def coreness_rounds(edges: DataFrame, rounds: int = 8,
@@ -224,11 +224,9 @@ def s_core(
     across engines.  Returns surviving vertices (id, wdeg) with wdeg the
     fixpoint weighted degree (micro-units / 1e6, exact).
 
-    Scale shape: the :func:`kcore` story — the iterated state is the
-    shrinking edge relation, pinned hash-partitioned on ``s`` so each
-    round's degree groupBy is exchange-free; removal is two semi-joins
-    against the surviving-vertex relation; convergence = stable edge
-    count (one bounded driver scalar per round).
+    Scale shape: the :func:`kcore` peel, with ``deg`` the sum of the
+    live neighbors' micro-unit weights; the loop stops on the first
+    round that kills no vertex, read off the pin.
     """
     s_micro = int(round(s * 1e6))
     fwd = edges.select(F.least("i", "j").alias("a"),
@@ -238,32 +236,14 @@ def s_core(
            .groupBy("a", "b").agg(F.max("_w").alias("_w")))
     sym = mirror(und.select(F.col("a").alias("s"), F.col("b").alias("d"), "_w"),
                  "s", "d")
-    spark = edges.sparkSession
-    with loop_shuffle_width(spark, max(sym.count(), 1)) as width:
-        cur = materialize(sym.repartition(partitions or width, "s"))
-        n_prev = cur.count()
-        for _ in range(max_rounds):
-            wdeg = cur.groupBy("s").agg(F.sum("_w").alias("_wd"))
-            keep = wdeg.filter(F.col("_wd") >= s_micro).select("s")
-            new = materialize(
-                cur.join(keep, "s", "left_semi")
-                .join(keep.withColumnRenamed("s", "d"), "d", "left_semi")
-                .repartition(partitions or width, "s"))
-            n_new = new.count()
-            release(cur)
-            cur = new
-            if n_new == n_prev or n_new == 0:
-                break
-            n_prev = n_new
-        # keep-filter on the exact BIGINT micro-sum (the peel predicate's
-        # own arithmetic) — dividing first and comparing wdeg*1e6 >= s
-        # in floating point can round one ulp below the integer sum for
-        # ~2^50-micro-unit degrees and wrongly drop a boundary vertex
-        out = (cur.groupBy(F.col("s").alias("id"))
-               .agg(F.sum("_w").alias("_wm"))
-               .filter(F.col("_wm") >= s_micro)
-               .select("id", F.round(F.col("_wm").cast("double") / 1e6,
+    width = partitions or int(
+        edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    adj = materialize(sym.repartition(width, "s"))
+    # the peel compares the exact BIGINT micro-sum (the peel predicate's
+    # own arithmetic) — dividing first and comparing wdeg*1e6 >= s in
+    # floating point can round one ulp below the integer sum for
+    # ~2^50-micro-unit degrees and wrongly drop a boundary vertex
+    core, _ = _peel(adj, F.sum("_w"), s_micro, max_rounds)
+    release(adj)
+    return core.select("id", F.round(F.col("deg").cast("double") / 1e6,
                                      6).alias("wdeg"))
-               .localCheckpoint(eager=True))
-        release(cur)
-    return out

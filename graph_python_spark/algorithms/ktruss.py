@@ -6,18 +6,21 @@ C = A·A ⊙ A (plus_pair, mask = A), select entries >= k-2, until nnz is
 stable.  The edge-support relation IS the masked SpGEMM output, so the
 Spark plan reuses the triangle machinery (algorithms/triangles.py).
 
-Spark shape: the iterated state is the surviving canonical (a < b) edge
-relation.  Each round closes wedges with the same 3-way self-join as
-``triangles_df`` (the a < b < c orientation bounds hub skew: a hub only
-expands on its higher-id side), stacks each triangle's three edges, and
-counts support with one map-side-combining groupBy; edges at support
->= k-2 become the next state.  The state only ever SHRINKS — round t
-joins the round-(t-1) survivors, never the original O(E) relation — and
-truss peeling is monotone, so the fixpoint is unique and rounds past it
-are identity (which is what lets a fixed-unroll SQL oracle check a
-run-to-convergence loop).  Convergence = edge count unchanged; the
-support column computed in the converged round is already the final
-truss support, so it ships with the result for free.
+Spark shape: the state is the canonical (a < b) edge relation
+``(a, b, support, _ok)``, marked then swept.  A round is one
+``plans/iterate.fixpoint`` step: it sweeps the edges the last round
+marked (``_ok`` false), closes wedges over the rest with the same 3-way
+self-join as ``triangles_df`` (the a < b < c orientation bounds hub
+skew: a hub only expands on its higher-id side), stacks each
+triangle's three edges, counts support with one map-side-combining
+groupBy that also takes one row per swept edge, so the triangle-free
+ones stay at support 0, and marks the edges below k-2 support.  The
+edge state only ever shrinks, and truss peeling is monotone, so the
+fixpoint is unique and rounds past it are identity (which is what lets
+a fixed-unroll SQL oracle check a run-to-convergence loop).  The loop
+stops on the first round that marks no edge, read off the pin — no
+per-round count; the support computed in that round is the final truss
+support, so it ships with the result for free.
 """
 
 from __future__ import annotations
@@ -34,17 +37,24 @@ from graph_python_spark.plans.iterate import (fixpoint, iterative,
 
 
 def _edge_support(cur: DataFrame) -> DataFrame:
-    """(a, b, support) for every edge of ``cur`` that closes >= 1 triangle."""
+    """(a, b, support) for every edge of ``cur`` (a, b): the number of
+    triangles of ``cur`` it closes, 0 included.  Each triangle stacks a
+    row per edge carrying its third vertex; each edge adds one row
+    without, so the count of third vertices is the support and the
+    triangle-free edges stay in the one aggregate, with no join back."""
     e1 = cur.select("a", "b")
     e2 = cur.select(F.col("a").alias("b"), F.col("b").alias("c"))
     e3 = cur.select("a", F.col("b").alias("c"))
     tri = e1.join(e2, "b").join(e3, ["a", "c"]).select("a", "b", "c")
     stacked = (
-        tri.select("a", "b")
-        .unionAll(tri.select(F.col("b").alias("a"), F.col("c").alias("b")))
-        .unionAll(tri.select("a", F.col("c").alias("b")))
+        tri.select("a", "b", F.col("c").alias("x"))
+        .unionAll(tri.select(F.col("b").alias("a"), F.col("c").alias("b"),
+                             F.col("a").alias("x")))
+        .unionAll(tri.select("a", F.col("c").alias("b"),
+                             F.col("b").alias("x")))
+        .unionAll(e1.select("a", "b", F.lit(None).cast("long").alias("x")))
     )
-    return stacked.groupBy("a", "b").agg(F.count("*").alias("support"))
+    return stacked.groupBy("a", "b").agg(F.count("x").alias("support"))
 
 
 @iterative
@@ -67,29 +77,25 @@ def ktruss(
     sym = undirected(edges)
     if partitions is not None:
         sym = sym.repartition(partitions, "a")
-    pinned = materialize(sym)  # the round's checkpointed frame (cur's blocks)
-    cur = pinned
-    prev_edges = cur.count()
+    start = materialize(sym.select("a", "b",
+                                   F.lit(None).cast("long").alias("support"),
+                                   F.lit(True).alias("_ok")))
 
-    rounds = 0
-    with loop_shuffle_width(edges.sparkSession, max(prev_edges, 1)):
-        for _ in range(max_rounds):
-            kept = materialize(
-                _edge_support(cur).filter(F.col("support") >= k - 2)
-            )
-            n_edges = kept.count()
-            rounds += 1
-            if n_edges == prev_edges:
-                # fixpoint: no edge dropped, so `support` is final
-                release(pinned)
-                return kept, rounds
-            release(pinned)
-            pinned = kept
-            cur = kept.select("a", "b")
-            prev_edges = n_edges
-    # max_rounds exhausted: report the current state's support
-    out = materialize(_edge_support(cur).filter(F.col("support") >= k - 2))
-    release(pinned)
+    def step(state: DataFrame) -> DataFrame:
+        sup = _edge_support(state.filter(F.col("_ok")).select("a", "b"))
+        return sup.select("a", "b", "support",
+                          (F.col("support") >= k - 2).alias("_ok"))
+
+    with loop_shuffle_width(edges.sparkSession, max(start.count(), 1)):
+        state, rounds = fixpoint(start, step, max_rounds,
+                                 changed=F.max(~F.col("_ok")))
+        if rounds < max_rounds:
+            # the last round marked nothing: its support is final
+            return state.select("a", "b", "support"), rounds
+        # max_rounds exhausted: report the swept state's support
+        cur = state.filter(F.col("_ok")).select("a", "b")
+        out = materialize(_edge_support(cur).filter(F.col("support") >= k - 2))
+    release(state)
     return out, rounds
 
 
@@ -115,8 +121,8 @@ def trussness_rounds(edges: DataFrame, rounds: int = 8,
     aggregate).  One decomposition run replaces a k-sweep of peels.
 
     Returns (a, b, trussness) for every canonical edge in >= 1 triangle
-    (triangle-free edges have trussness 0 and are omitted, matching
-    ``_edge_support``'s support relation).  The result reads the last
+    (triangle-free edges have trussness 0 and are omitted, as no k-truss
+    holds them).  The result reads the last
     pinned estimate vector; the edge and triangle pins are freed.
     """
     from pyspark.sql.window import Window

@@ -29,6 +29,7 @@ vertex active, read off the pin.  Expected rounds: O(log n) (Luby).
 
 from __future__ import annotations
 
+import warnings
 from typing import Optional
 
 from pyspark.sql import DataFrame
@@ -65,7 +66,8 @@ def maximal_independent_set(
     1..L are all in the set after 2L rounds, and a run takes up to 2L + 1
     rounds.  ``max_rounds`` bounds the Luby rounds: the loop runs at most
     ``2 * max_rounds`` rounds, and a graph that needs more Luby rounds
-    gets an independent set that need not be maximal.
+    gets an independent set that need not be maximal, with a
+    ``RuntimeWarning``.
     """
     spark = edges.sparkSession
     adj = materialize(symmetric(edges, partitions=partitions))
@@ -100,4 +102,13 @@ def maximal_independent_set(
         state, rounds = fixpoint(start, step, 2 * max_rounds,
                                  changed=F.max(F.col("st") == 0))
     release(adj)
+    # a run cut at the cap may have left vertices active; only then is
+    # the state probed
+    if (rounds == 2 * max_rounds
+            and not state.filter(F.col("st") == 0).isEmpty()):
+        warnings.warn(
+            f"maximal_independent_set stopped after max_rounds={max_rounds} "
+            "Luby rounds with vertices still active; the returned set is "
+            "independent but need not be maximal — raise max_rounds",
+            RuntimeWarning, stacklevel=3)
     return state.filter(F.col("st") == 1).select("id"), rounds

@@ -1,13 +1,18 @@
-"""Strongly connected components — forward-backward min-label coloring.
+"""Strongly connected components — FB-Trim over one labels state.
 
 The FastSV-style min-label sweep (algorithms/components.py) gives WEAKLY
 connected components; SCC needs mutual reachability.  This is the
 distributed coloring algorithm (Orzan FB-coloring, the standard
-vertex-centric SCC): repeat until every vertex is assigned —
+vertex-centric SCC) with a trim phase in front (Slota/Hong-style
+FB-Trim): repeat until every vertex is assigned —
 
+  0. TRIM: a vertex with no live in-neighbor or no live out-neighbor is
+     its own SCC; peel such vertices to fixpoint before paying a
+     coloring round (tendril and chain mass — most of a web graph
+     outside the giant SCC — resolves here).
   1. FORWARD color: c(v) = min id that reaches v along directed paths
-     within the remaining graph (min-label propagation to fixpoint; v is
-     its own ancestor, so the color-r partition contains r and only ids
+     through live vertices (min-label propagation to fixpoint; v is its
+     own ancestor, so the color-r partition contains r and only ids
      >= r, i.e. r is both that partition's root and its minimum).
   2. BACKWARD sweep WITHIN each color: g(v) = min id reachable FROM v
      inside v's color partition.  v reaches its root r iff g(v) = r, and
@@ -15,16 +20,25 @@ vertex-centric SCC): repeat until every vertex is assigned —
      with the root, all colors resolved simultaneously in ONE sweep
      (state keyed by vertex, colors just partition the join).
   3. Finalize those SCCs (component id = root id = the SCC's minimum
-     vertex, matching the min-label convention of the weak-CC oracle),
-     delete them, repeat on the remainder.
+     vertex, matching the min-label convention of the weak-CC oracle)
+     and repeat on the vertices left.
 
 Every outer round removes at least each color's root SCC, so rounds are
 bounded by the longest chain of SCCs; web graphs resolve in a handful
-(the giant SCC goes in round 1).  All state is edge/vertex relations
-with the same pinned-loop plumbing as the other sweeps: min-label
-fixpoints are join + partial-agg rounds with a rides-along change flag
-(one action per round), finalized vertices leave the edge state, and
-the moving state only ever shrinks.
+(the giant SCC goes in round 1).
+
+Spark shape: the matrix is fixed — one tagged edge relation
+``(tag, s, d)`` ('f' rows are the simple edges, 'b' rows the same edges
+reversed), pinned once, hash(tag, s)-partitioned, and shared with the
+bow-tie sweeps — and the state is one labels frame ``(id, component)``
+with ``component`` null while the vertex is live.  Trim and both
+min-label sweeps are ``plans/iterate.fixpoint`` loops whose rounds join
+the live rows to the relation once on (tag, s), keeping its
+partitioning (hashing the live side: the state's growing size estimate
+would otherwise get the relation broadcast every round), reduce per
+``d`` with one ``groupBy`` and join back; each stops on the round that
+changes nothing, read off the pin.  Finished
+SCCs merge into the labels, so the result is that one pinned frame.
 
 Oracle note: SCC labels are a pure graph property (min mutually-reachable
 vertex), so the DuckDB oracle checks the ANSWER via a recursive
@@ -36,19 +50,68 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from graph_python_spark.operators.blocks import simple, vertex_ids
+from graph_python_spark.operators.blocks import simple
 from graph_python_spark.plans.iterate import (fixpoint, iterative,
                                               loop_shuffle_width, materialize,
                                               release)
 
 
-def _min_prop(edges: DataFrame, verts: DataFrame, max_rounds: int) -> DataFrame:
-    """Directed min-label fixpoint: f(v) = min id u with u ->* v (u = v
-    included) over ``edges`` (s, d), for every vertex of ``verts`` (id).
-    Returns the pinned (id, lbl, _chg) state.
+def tagged_edges(edges: DataFrame, partitions: Optional[int] = None
+                 ) -> DataFrame:
+    """The directed simple graph under ``edges`` (long columns i -> j)
+    as one ``(tag, s, d)`` relation: 'f' rows are the arcs s -> d, 'b'
+    rows the same arcs reversed, hash(tag, s)-partitioned so a join on
+    (tag, s) against a frontier keeps the partitioning."""
+    eb = simple(edges).toDF("s", "d")
+    tagged = (eb.select(F.lit("f").alias("tag"), "s", "d")
+              .unionByName(eb.select(F.lit("b").alias("tag"),
+                                     F.col("d").alias("s"),
+                                     F.col("s").alias("d"))))
+    if partitions is not None:
+        return tagged.repartition(partitions, "tag", "s")
+    return tagged.repartition("tag", "s")
+
+
+def _trim(tagged: DataFrame, labels: DataFrame,
+          rounds: int) -> tuple[DataFrame, int]:
+    """TRIM phase on :func:`fixpoint`: a round gives every live vertex
+    of ``labels`` (id, component) without a live in-neighbor or without
+    a live out-neighbor ``component = id``, and flags it ``_new``.  The
+    live rows join ``tagged`` once on both tags; per neighbor, the max
+    over the tags says whether it has a live in-neighbor ('f' rows) and
+    a live out-neighbor ('b' rows).  Stops on the round that trims no
+    vertex; returns fixpoint's ``(state, rounds_run)``."""
+    def step(state: DataFrame) -> DataFrame:
+        live = state.filter(F.col("component").isNull()).select(
+            F.explode(F.array(F.lit("f"), F.lit("b"))).alias("tag"),
+            F.col("id").alias("s"))
+        ends = (
+            tagged.join(live.hint("shuffle_hash"), ["tag", "s"])
+            .groupBy(F.col("d").alias("id"))
+            .agg(F.max(F.col("tag") == "f").alias("_hi"),
+                 F.max(F.col("tag") == "b").alias("_ho"))
+        )
+        trims = (F.col("component").isNull()
+                 & ~F.coalesce(F.col("_hi") & F.col("_ho"), F.lit(False)))
+        return (
+            state.join(ends, "id", "left")
+            .select("id", F.when(trims, F.col("id"))
+                    .otherwise(F.col("component")).alias("component"),
+                    trims.alias("_new"))
+        )
+
+    return fixpoint(labels, step, rounds, changed=F.max("_new"))
+
+
+def _min_prop(tagged: DataFrame, tag: str, verts: DataFrame,
+              max_rounds: int) -> DataFrame:
+    """Directed min-label fixpoint along ``tag``'s rows of ``tagged``:
+    f(v) = min id u with u ->* v (u = v included) for every vertex of
+    ``verts`` (id, _c), through vertices of ``verts`` with the same
+    ``_c`` only.  Returns the pinned (id, _c, lbl, _chg) state.
 
     DELTA propagation: round t joins the edge table only against the rows
     whose label IMPROVED in round t-1 (round 1: everything) — if none of
@@ -59,23 +122,70 @@ def _min_prop(edges: DataFrame, verts: DataFrame, max_rounds: int) -> DataFrame:
     remains per round (the delta relation is a filter on the pinned
     state, no extra checkpoint; convergence is read from the same pin)."""
     def step(f):
-        delta = f.filter(F.col("_chg"))
+        delta = f.filter(F.col("_chg")).select(
+            F.lit(tag).alias("tag"), F.col("id").alias("s"), "_c", "lbl")
         nbrmin = (
-            edges.join(delta.select(F.col("id").alias("s"), "lbl"), "s")
-            .groupBy(F.col("d").alias("id"))
+            tagged.join(delta.hint("shuffle_hash"), ["tag", "s"])
+            .groupBy(F.col("d").alias("id"), "_c")
             .agg(F.min("lbl").alias("_nm"))
         )
         nv = F.least(F.col("lbl"), F.coalesce(F.col("_nm"), F.col("lbl")))
         return (
-            f.select("id", "lbl").join(nbrmin, "id", "left_outer")
-            .select("id", nv.alias("lbl"), (nv != F.col("lbl")).alias("_chg"))
+            f.select("id", "_c", "lbl").join(nbrmin, ["id", "_c"], "left")
+            .select("id", "_c", nv.alias("lbl"),
+                    (nv != F.col("lbl")).alias("_chg"))
         )
 
     f, _ = fixpoint(
-        materialize(verts.select("id", F.col("id").alias("lbl"),
-                                 F.lit(True).alias("_chg"))),
+        verts.select("id", "_c", F.col("id").alias("lbl"),
+                     F.lit(True).alias("_chg")),
         step, max_rounds, changed=F.max("_chg"))
     return f
+
+
+def _scc(tagged: DataFrame, max_outer: int = 20,
+         max_label_rounds: int = 40) -> tuple[DataFrame, int]:
+    """FB-Trim SCC over the pinned :func:`tagged_edges` relation.
+    Returns ``(labels(id, component), outer_rounds)``: the labels are
+    one pinned frame, which the caller releases after its last read.
+    Every vertex has a row; ``component`` is null on the vertices still
+    live when ``max_outer`` rounds run out."""
+    labels = (tagged.select(F.col("s").alias("id")).distinct()
+              .select("id", F.lit(None).cast("long").alias("component")))
+    rounds = 0
+    with loop_shuffle_width(tagged.sparkSession, max(tagged.count(), 1)):
+        while rounds < max_outer:
+            trimmed, _ = _trim(tagged, labels, max_label_rounds)
+            # drop the trim flag; the same pin says whether any vertex
+            # is still live
+            live = Observation()
+            labels = materialize(
+                trimmed.select("id", "component")
+                .observe(live, F.max(F.col("component").isNull())
+                         .alias("live")))
+            release(trimmed)
+            rounds += 1
+            if not live.get["live"]:
+                break
+            fwd = _min_prop(tagged, "f",
+                            labels.filter(F.col("component").isNull())
+                            .select("id", F.lit(0).cast("long").alias("_c")),
+                            max_label_rounds)
+            # backward sweep inside each forward color: reversed arcs
+            # between same-colored vertices only
+            bwd = _min_prop(tagged, "b",
+                            fwd.select("id", F.col("lbl").alias("_c")),
+                            max_label_rounds)
+            release(fwd)
+            scc = bwd.filter(F.col("lbl") == F.col("_c")).select(
+                "id", F.col("lbl").alias("_k"))
+            merged = materialize(
+                labels.join(scc, "id", "left")
+                .select("id", F.coalesce("component", "_k")
+                        .alias("component")))
+            release(labels, bwd)
+            labels = merged
+    return labels, rounds
 
 
 @iterative
@@ -88,113 +198,19 @@ def strongly_connected_components(
     """SCC labels over the directed graph under ``edges`` (long columns
     i -> j; self-loops/duplicates ignored).  Returns ``(labels(id,
     component), outer_rounds)`` with component = the smallest vertex id in
-    the SCC (exact, permutation-invariant).  The result reads the pinned
-    per-round SCC parts; the loop state is freed.
+    the SCC (exact, permutation-invariant).  The labels are one pinned
+    frame (``plans/iterate.release`` frees it); everything else the call
+    pinned is freed.
     """
-    eb = simple(edges).toDF("s", "d")
-    # pin the edge state s-hash-partitioned so every min-prop round's
-    # edges ⋈ delta join reuses the partitioning (the frontier side is
-    # the only per-round exchange — the pagerank adjacency pattern)
-    if partitions is not None:
-        eb = eb.repartition(partitions, "s")
-    else:
-        eb = eb.repartition("s")
-    cur = materialize(eb)
-    verts = materialize(vertex_ids(cur, "s", "d"))
-    n_edges = cur.count()
-    done_parts: list[DataFrame] = []
-    rounds = 0
-
-    def trim(verts: DataFrame, cur: DataFrame,
-             max_trim: int) -> tuple[DataFrame, DataFrame]:
-        """TRIM phase (Slota/Hong-style FB-Trim hybrid): a vertex with no
-        in-edge or no out-edge in the remaining graph is its own SCC —
-        peel such vertices to fixpoint before paying a coloring round.
-        Tendril/chain mass (most of a web graph outside the giant SCC)
-        resolves here at ~4 cheap jobs per peeled layer instead of a full
-        pair of min-label fixpoints per layer of the FB loop."""
-        for _ in range(max_trim):
-            ends = (
-                cur.select(F.col("s").alias("id"), F.lit(1).alias("o"),
-                           F.lit(0).alias("i"))
-                .unionByName(cur.select(F.col("d").alias("id"),
-                                        F.lit(0).alias("o"),
-                                        F.lit(1).alias("i")))
-            )
-            both = materialize(
-                ends.groupBy("id")
-                .agg(F.max("o").alias("_ho"), F.max("i").alias("_hi"))
-                .filter((F.col("_ho") == 1) & (F.col("_hi") == 1))
-                .select("id")
-            )
-            triv = materialize(verts.join(both, "id", "left_anti"))
-            if triv.isEmpty():
-                release(triv, both)
-                break
-            done_parts.append(
-                triv.select("id", F.col("id").alias("component")))
-            new_verts = both
-            new_cur = materialize(
-                cur.join(triv.withColumnRenamed("id", "s"), "s", "left_anti")
-                .join(triv.select(F.col("id").alias("d")), "d", "left_anti")
-                .repartition("s")
-            )
-            release(verts, cur)
-            verts, cur = new_verts, new_cur
-        return verts, cur
-
-    with loop_shuffle_width(edges.sparkSession, max(n_edges, 1)):
-        while rounds < max_outer:
-            verts, cur = trim(verts, cur, max_label_rounds)
-            rounds += 1
-            if verts.isEmpty():
-                break
-            fwd = _min_prop(cur, verts, max_label_rounds)  # (id, lbl)
-            # backward sweep inside each color: restrict edges to
-            # same-color endpoints and reverse them, then min-propagate
-            fs = fwd.select(F.col("id").alias("s"), F.col("lbl").alias("_cs"))
-            fd = fwd.select(F.col("id").alias("d"), F.col("lbl").alias("_cd"))
-            rev = (
-                cur.join(fs, "s").join(fd, "d")
-                .filter(F.col("_cs") == F.col("_cd"))
-                .select(F.col("d").alias("s"), F.col("s").alias("d"))
-                .repartition("s")
-            )
-            rev = materialize(rev)
-            bwd = _min_prop(rev, verts, max_label_rounds)  # (id, g)
-            scc = materialize(
-                fwd.select("id", "lbl")
-                .join(bwd.select("id", F.col("lbl").alias("g")), "id")
-                .filter(F.col("lbl") == F.col("g"))
-                .select("id", F.col("lbl").alias("component"))
-            )
-            done_parts.append(scc)
-            release(rev)
-            # remove finalized vertices from the moving state
-            gone = scc.select("id")
-            new_verts = materialize(verts.join(gone, "id", "left_anti"))
-            new_cur = materialize(
-                cur.join(gone.withColumnRenamed("id", "s"), "s", "left_anti")
-                .join(gone.withColumnRenamed("id", "d"), "d", "left_anti")
-                .repartition("s")
-            )
-            release(fwd, bwd, verts, cur)
-            verts, cur = new_verts, new_cur
-
-    out = None
-    for part in done_parts:
-        out = part if out is None else out.unionByName(part)
-    if out is None:
-        out = edges.sparkSession.createDataFrame([], "id long, component long")
-    # The parts are already-pinned LogicalRDDs, so the union is
-    # lineage-shallow and needs no checkpoint of its own — and
-    # re-checkpointing it trips a Spark 4 constraint-rewrite bug
-    # (UnionBase.rewriteConstraints inside LogicalRDD.fromDataset throws
-    # "key not found: id#N" once the union has >= 2 checkpointed children;
-    # reproduced at 300k+ vertices).  The parts stay persisted because
-    # they back the returned relation; only the loop state is dropped.
-    release(verts, cur)
-    return out, rounds
+    tagged = materialize(tagged_edges(edges, partitions))
+    labels, rounds = _scc(tagged, max_outer, max_label_rounds)
+    release(tagged)
+    if rounds == max_outer:
+        # max_outer ran out: vertices still live get no row
+        done = materialize(labels.filter(F.col("component").isNotNull()))
+        release(labels)
+        labels = done
+    return labels, rounds
 
 
 def condensation(

@@ -31,6 +31,12 @@ from graph_python_spark.plans.iterate import (fixpoint, frontier_fixpoint,
                                               materialize, release)
 
 
+def _improved() -> Column:
+    """A full-merge min-plus round's change flag: the vertex is new (no
+    old distance ``v``) or its candidate ``_nd`` beats the old one."""
+    return F.coalesce(F.col("_nd") < F.col("v"), F.col("v").isNull())
+
+
 def _frontier_bfs(edges: DataFrame, start: DataFrame, reach: Column,
                   max_rounds: int) -> DataFrame:
     """Frontier-push BFS from the one-row ``start`` ``(id, <value>)``
@@ -70,9 +76,11 @@ def bfs_parents(edges: DataFrame, source: int) -> DataFrame:
 def minplus_fixed_rounds(edges: DataFrame, source: int, rounds: int,
                          weight: str | None = None) -> DataFrame:
     """Exactly ``rounds`` synchronous min-plus relaxations from ``source``
-    (full-merge each round, no frontier/convergence action) — deterministic
-    output for the DuckDB-checked queries.  weight=None means unit weights
-    (result = BFS levels for vertices within ``rounds`` hops).
+    (full-merge each round) — deterministic output for the DuckDB-checked
+    queries.  weight=None means unit weights (result = BFS levels for
+    vertices within ``rounds`` hops).  Min-plus past the fixpoint is the
+    identity, so the loop stops early on the round that improves no
+    distance, read off the pin: the output is the same.
 
     Returns dist(id, v) with integer distances when weights are integral.
     """
@@ -85,20 +93,21 @@ def minplus_fixed_rounds(edges: DataFrame, source: int, rounds: int,
 
     def step(dist):
         cand = (
-            e.join(dist.withColumnRenamed("id", "s"), "s")
+            e.join(dist.select(F.col("id").alias("s"), "v"), "s")
             .groupBy(F.col("d").alias("id"))
             .agg(F.min(F.col("v") + F.col("w")).alias("_nd"))
         )
         return (
-            dist.join(cand, "id", "full_outer")
-            .select("id", F.least(F.col("v"), F.col("_nd")).alias("v"))
+            dist.select("id", "v").join(cand, "id", "full_outer")
+            .select("id", F.least(F.col("v"), F.col("_nd")).alias("v"),
+                    _improved().alias("_chg"))
         )
 
     dist, _ = fixpoint(
         edges.sparkSession.createDataFrame([(source, 0)], "id long, v long"),
-        step, rounds)
+        step, rounds, changed=F.max("_chg"))
     release(e)
-    return dist
+    return dist.select("id", "v")
 
 
 @iterative
@@ -211,7 +220,9 @@ def dag_longest_path_levels(edges: DataFrame, rounds: int = 16) -> DataFrame:
     restriction of a general edge table); with exactly ``rounds``
     synchronous max-plus relaxations the result is a deterministic
     function of the input even if ``rounds`` undershoots the true depth,
-    so the query is SQL-unrollable.  Converged when ``rounds`` ≥ depth.
+    so the query is SQL-unrollable.  Converged when ``rounds`` ≥ depth;
+    max-plus past the fixpoint is the identity, so the loop stops on the
+    round that raises no level, read off the pin.
 
     Scale shape: identical to ``minplus_fixed_rounds`` — the edge table is
     partitioned by source once and every round's join reuses that
@@ -230,17 +241,18 @@ def dag_longest_path_levels(edges: DataFrame, rounds: int = 16) -> DataFrame:
                 .groupBy(F.col("d").alias("id"))
                 .agg((F.max("level") + 1).alias("_nl"))  # max_plus
             )
+            nl = F.greatest(F.col("level"), F.coalesce(F.col("_nl"), F.lit(0)))
             return (
-                lvl.join(cand, "id", "left")
-                .select("id", F.greatest(
-                    F.col("level"), F.coalesce(F.col("_nl"), F.lit(0))).alias("level"))
+                lvl.select("id", "level").join(cand, "id", "left")
+                .select("id", nl.alias("level"),
+                        (nl != F.col("level")).alias("_chg"))
             )
 
         lvl, _ = fixpoint(
             materialize(verts.select("id", F.lit(0).cast("long").alias("level"))),
-            step, rounds)
+            step, rounds, changed=F.max("_chg"))
     release(e)
-    return lvl
+    return lvl.select("id", "level")
 
 
 @iterative
@@ -257,7 +269,8 @@ def landmark_distances(edges: DataFrame, landmarks: list[int],
     |L|·V, an explicit, bounded replication — at 10^9 vertices and 16
     landmarks the state is ~16 GB of longs spread over the cluster, not a
     per-source job storm).  Deterministic fixed unroll (min-plus past the
-    fixpoint is the identity), so the result is DuckDB-oracle-checkable.
+    fixpoint is the identity, so the loop stops early on the round that
+    improves no distance), so the result is DuckDB-oracle-checkable.
 
     Reference semantics: the same lor_land/min_plus frontier expansion as
     ``bfs_levels`` (notebooks/Example B.1), vectorized over sources the way
@@ -274,18 +287,19 @@ def landmark_distances(edges: DataFrame, landmarks: list[int],
 
     def step(dist):
         cand = (
-            e.join(dist.withColumnRenamed("id", "s"), "s")
+            e.join(dist.select("lm", F.col("id").alias("s"), "v"), "s")
             .groupBy("lm", F.col("d").alias("id"))
             .agg(F.min(F.col("v") + 1).alias("_nd"))
         )
         return (
-            dist.join(cand, ["lm", "id"], "full_outer")
-            .select("lm", "id", F.least(F.col("v"), F.col("_nd")).alias("v"))
+            dist.select("lm", "id", "v").join(cand, ["lm", "id"], "full_outer")
+            .select("lm", "id", F.least(F.col("v"), F.col("_nd")).alias("v"),
+                    _improved().alias("_chg"))
         )
 
     dist, _ = fixpoint(
         edges.sparkSession.createDataFrame(
             [(int(lm), int(lm), 0) for lm in landmarks], "lm long, id long, v long"),
-        step, rounds)
+        step, rounds, changed=F.max("_chg"))
     release(e)
     return dist.select("lm", "id", F.col("v").alias("dist"))

@@ -17,8 +17,7 @@ round's state, reads the round's convergence aggregate from that same pin
 loop's own hook, and then releases the replaced state.  Loops write only
 their step; :func:`frontier_fixpoint` writes the step of a frontier
 push.  :func:`release` is the one free call for anything a loop built,
-pinned or cached, and :func:`release_parts` frees a result made of
-pinned parts.
+pinned or cached.
 
 The reference's only analogue is nonblocking-mode ``wait()``
 (``graphblas/core/matrix.py:778-803``); resumability is new engineering for
@@ -62,27 +61,6 @@ def release(*dfs: Optional[DataFrame]) -> None:
             plan.rdd().unpersist(False)
         elif df.storageLevel.useMemory or df.storageLevel.useDisk:
             df.unpersist()
-
-
-def release_parts(*dfs: Optional[DataFrame]) -> None:
-    """Free every pinned frame under a lazy result built from pinned
-    parts by projections and unions only — the labels
-    ``scc.strongly_connected_components`` returns: one part, or a union of
-    them, each a pin or a rename of one.  Unlike :func:`release` it looks
-    through projections, so call it only on a frame that owns its parts:
-    none of them may be read after it."""
-    def free(plan) -> None:
-        kind = plan.getClass().getSimpleName()
-        if kind == "LogicalRDD":
-            plan.rdd().unpersist(False)
-        elif kind in ("Project", "Union"):
-            children = plan.children()
-            for k in range(children.size()):
-                free(children.apply(k))
-
-    for df in dfs:
-        if df is not None:
-            free(df._jdf.logicalPlan())
 
 
 def fixpoint(state: Optional[DataFrame], step: Callable[..., DataFrame],
@@ -166,10 +144,10 @@ def loop_conf(spark: SparkSession):
     Constraint propagation is likewise planning-only overhead on pinned
     per-round plans, and its union rewrite is buggy in Spark 4: checkpoint
     of a union with >= 2 LogicalRDD children throws "key not found: id#N"
-    in UnionBase.rewriteConstraints (reproduced on the 300k+-vertex SCC
-    accumulator before scc.py stopped re-checkpointing its union; any
-    loop that pins a union of pinned frames each round would hit it
-    too).  Runtime-settable confs: results are identical either way.
+    in UnionBase.rewriteConstraints (reproduced on a 300k+-vertex union
+    of pinned SCC parts; any loop that pins a union of pinned frames
+    each round would hit it).  Runtime-settable confs: results are
+    identical either way.
     """
     keys = ("spark.sql.adaptive.enabled",
             "spark.sql.constraintPropagation.enabled")

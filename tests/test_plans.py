@@ -306,46 +306,10 @@ def test_fixpoint(spark):
     assert same is s0 and n == 0
 
 
-def test_release_parts(spark):
-    """``release_parts`` frees the pinned frame under each part of a
-    lazy result made of pinned parts by projections and unions (the
-    shape of the SCC labels: a union, or a single renamed part), and
-    leaves what is under neither alone; ``release`` frees neither shape,
-    as it leaves every projection of a pin alone."""
-    from pyspark.sql import functions as F
-
-    from graph_python_spark.plans.iterate import (materialize, release,
-                                                  release_parts)
-
-    sc = spark.sparkContext
-
-    def persistent():
-        return set(sc._jsc.getPersistentRDDs().keys())
-
-    a, b, c, d, e = (materialize(spark.range(lo, lo + 3).select(
-        "id", F.col("id").alias("component"))) for lo in (0, 3, 6, 9, 12))
-    lazy = spark.range(15, 17).select("id", F.col("id").alias("component"))
-    u = (a.unionByName(b)
-         .unionByName(c.select("id", (F.col("id") + 1).alias("component")))
-         .unionByName(lazy))
-    one = e.select("id", F.col("id").alias("component"))
-    assert u._jdf.logicalPlan().getClass().getSimpleName() == "Union"
-    ids = [_pinned_rdd(x) for x in (a, b, c, d, e)]
-    release(u, one, d.select("id"))
-    assert set(ids) <= persistent()
-    release_parts(u, one)
-    left = persistent()
-    assert not left & ({ids[0], ids[1], ids[2], ids[4]}), left
-    assert ids[3] in left
-    assert sorted(r["id"] for r in d.collect()) == [9, 10, 11]
-    release(d)
-
-
 def test_bowtie_frees_single_part_scc(spark):
     """A graph that SCC's trim resolves in one pass (every vertex is a
-    source or a sink) gives labels that are one renamed pin, not a
-    union; ``bowtie_decomposition`` frees that part too and leaves only
-    its pinned regions."""
+    source or a sink): ``bowtie_decomposition`` frees the SCC labels
+    too and leaves only its pinned regions."""
     from graph_python_spark.algorithms.bowtie import bowtie_decomposition
 
     sc = spark.sparkContext
@@ -379,8 +343,18 @@ LOOPS = {
     "mis.maximal_independent_set": ("max_rounds", 1),
     "bowtie.reach_from": ("max_rounds", 1),
     "influence.influence_spread": ("rounds", 1),
-    # the pinned regions: the SCC parts and both sweeps are freed
+    # the pinned regions: the SCC labels and both sweeps are freed
     "bowtie.bowtie_decomposition": ("max_rounds", 1),
+    # the last pinned vertex or edge state (or, for a k-truss cut at
+    # max_rounds, the pinned support it reports)
+    "kcore.kcore": ("max_rounds", 1),
+    "kcore.s_core": ("max_rounds", 1),
+    "ktruss.ktruss": ("max_rounds", 1),
+    # the pinned labels (the fixture is a DAG: trim resolves it in one
+    # outer round); condensation's result also reads the pinned levels
+    "scc.strongly_connected_components": ("max_label_rounds", 1),
+    "scc._trim": ("rounds", 1),
+    "scc.condensation": ("max_label_rounds", 2),
 }
 
 
@@ -403,9 +377,34 @@ def _falling_prio(e):
         for c in ("i", "j")))}
 
 
+def _with_chords(e):
+    """``e`` plus the edge (i, j + 1) for every edge (i, j): on a path,
+    the triangle strip whose k-core and k-truss peel from the ends."""
+    from pyspark.sql import functions as F
+
+    return e.unionByName(e.select("i", (F.col("j") + 1).alias("j")))
+
+
+def _trim_args(e):
+    """SCC's trim over ``e`` with every vertex live."""
+    from pyspark.sql import functions as F
+
+    from graph_python_spark.algorithms.scc import tagged_edges
+
+    ids = e.select(F.col("i").alias("id")).union(e.select("j")).distinct()
+    return {"edges": tagged_edges(e),
+            "labels": ids.select("id", F.lit(None).cast("long")
+                                 .alias("component"))}
+
+
 # algorithm -> e -> the arguments it needs besides the rounds; an
 # "edges" entry replaces the (i, j) edge frame
 LOOP_ARGS = {
+    "kcore.kcore": lambda e: {"edges": _with_chords(e), "k": 3},
+    "kcore.s_core": lambda e: {"edges": _with_chords(e).selectExpr(
+        "i", "j", "1.0 AS v"), "s": 3.0},
+    "ktruss.ktruss": lambda e: {"edges": _with_chords(e), "k": 4},
+    "scc._trim": _trim_args,
     "traversal.bfs_levels": lambda e: {"source": 0},
     "bowtie.reach_from": lambda e: {"edges": e.toDF("s", "d"),
                                     "seeds": _seed0(e)},
@@ -459,17 +458,20 @@ def test_loops_release_pinned_state(spark, algo):
                                   "coloring.greedy_coloring",
                                   "mis.maximal_independent_set",
                                   "traversal.bfs_levels",
-                                  "bowtie.reach_from"])
+                                  "bowtie.reach_from",
+                                  "kcore.kcore",
+                                  "ktruss.ktruss",
+                                  "scc._trim"])
 def test_converged_loops_one_job_per_round(spark, algo):
-    """A converging CC, label-propagation, coloring, MIS or frontier-BFS
-    round is one job: the pin.  Its change flag rides in the pinned state
-    and is read off that pin, so no second aggregate, emptiness probe or
-    old ⋈ new probe job runs per round.  Jobs come from the status
-    tracker, 1 round against 3 on a path that needs more than 3 to
-    converge, with broadcast joins and runtime bloom filters off: either
-    adds a job of its own to a round over a tiny vertex state (CC's
-    grandparent self-join gets a bloom-filter subquery), whatever the
-    convergence test costs."""
+    """A converging CC, label-propagation, coloring, MIS, frontier-BFS,
+    k-core, k-truss or SCC-trim round is one job: the pin.  Its change
+    flag rides in the pinned state and is read off that pin, so no
+    second aggregate, count, emptiness probe or old ⋈ new probe job runs
+    per round.  Jobs come from the status tracker, 1 round against 3 on a
+    path that needs more than 3 to converge, with broadcast joins and
+    runtime bloom filters off: either adds a job of its own to a round
+    over a tiny vertex state (CC's grandparent self-join gets a
+    bloom-filter subquery), whatever the convergence test costs."""
     sc = spark.sparkContext
     # MIS runs two state rounds per Luby round its max_rounds counts
     per = 2 if algo == "mis.maximal_independent_set" else 1
@@ -492,6 +494,46 @@ def test_converged_loops_one_job_per_round(spark, algo):
         for k, v in before.items():
             spark.conf.set(k, v)
     assert (jobs[3] - jobs[1]) / (2 * per) == 1, jobs
+
+
+@pytest.mark.parametrize("algo", ["minplus_fixed_rounds",
+                                  "landmark_distances",
+                                  "dag_longest_path_levels"])
+def test_fixed_unrolls_stop_at_fixpoint(spark, algo):
+    """Min-plus and max-plus rounds past the fixpoint are the identity,
+    so a fixed-unroll relaxation stops on the round that changes no
+    value, read off the pin: on a depth-2 DAG, 40 rounds run as many
+    jobs as 3 and give the same rows."""
+    from graph_python_spark.algorithms import traversal
+
+    args = {"minplus_fixed_rounds": {"source": 0},
+            "landmark_distances": {"landmarks": [0]}}.get(algo, {})
+    sc = spark.sparkContext
+    jobs, rows = {}, {}
+    for rounds in (3, 40):
+        e = spark.createDataFrame([(0, 1), (1, 2), (0, 3)], "i long, j long")
+        out, jobs[rounds] = _jobs(
+            sc, f"{algo}-unroll-{rounds}",
+            lambda: getattr(traversal, algo)(e, rounds=rounds, **args))
+        rows[rounds] = sorted(tuple(r) for r in out.collect())
+    assert jobs[40] == jobs[3], jobs
+    assert rows[40] == rows[3]
+
+
+def test_mis_warns_at_cap(spark):
+    """An MIS run cut at ``2 * max_rounds`` rounds with vertices still
+    active warns; a run that finishes first does not."""
+    import warnings
+
+    from graph_python_spark.algorithms.mis import maximal_independent_set
+
+    e = _falling_prio(spark.createDataFrame(
+        [(v, v + 1) for v in range(12)], "i long, j long"))["edges"]
+    with pytest.warns(RuntimeWarning, match="max_rounds=2"):
+        maximal_independent_set(e, max_rounds=2)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        maximal_independent_set(e, max_rounds=30)
 
 
 @pytest.mark.parametrize("algo", ["hits_fixed", "salsa_fixed"])
