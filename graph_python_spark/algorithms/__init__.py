@@ -8,11 +8,7 @@ from graph_python_spark.algorithms.triangles import (
     triangles_per_vertex,
 )
 from graph_python_spark.algorithms.traversal import bfs_levels, bfs_parents, sssp
-from graph_python_spark.algorithms.louvain import (
-    louvain_levels,
-    louvain_sweeps,
-    modularity,
-)
+from graph_python_spark.algorithms.louvain import louvain_levels, louvain_sweeps
 from graph_python_spark.algorithms.kcore import coreness_rounds, kcore, s_core
 from graph_python_spark.algorithms.ktruss import ktruss
 from graph_python_spark.algorithms.mis import maximal_independent_set
@@ -82,7 +78,6 @@ __all__ = [
     "sssp",
     "louvain_levels",
     "louvain_sweeps",
-    "modularity",
     "kcore",
     "coreness_rounds",
     "ktruss",

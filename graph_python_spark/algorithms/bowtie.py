@@ -64,12 +64,13 @@ def _reach_tagged(tagged_edges: DataFrame, tagged_seeds: DataFrame,
     frontier state keyed (tag, id), so k sweeps cost max (not sum) of
     their round counts.  Returns the pinned state; the caller releases
     it."""
-    return frontier_fixpoint(
+    state, _ = frontier_fixpoint(
         tagged_seeds.select("tag", "id").distinct(),
         lambda f: (tagged_edges.join(f.select("tag", F.col("id").alias("s")),
                                      ["tag", "s"])
                    .select("tag", F.col("d").alias("id")).distinct()),
         ["tag", "id"], max_rounds)
+    return state
 
 
 def reach_from(edges: DataFrame, seeds: DataFrame,

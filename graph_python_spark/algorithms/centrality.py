@@ -8,7 +8,9 @@ rescales — the direction after K rounds is identical to normalizing ONCE at
 the end, so the loop runs UNNORMALIZED (two sparse SpMVs per round, no
 per-round global aggregate/action) and divides by the final sums when
 materializing scores.  That both halves the per-round stage count and makes
-the fixed-K unrolled SQL oracle exact.
+the fixed-K unrolled SQL oracle exact.  SALSA is the same loop with
+degree-normalized edge weights; both run one pinned (id, x, y) state, one
+job of three stages per round.
 
 Personalized PageRank: PageRank with the teleport vector concentrated on a
 seed set S (uniform 1/|S|), pagerank_3f dangling convention (dangling
@@ -19,11 +21,12 @@ hops of S, so on a 10^9-vertex graph a 5-seed PPR touches only the seed
 neighborhood — the frontier-sized shuffles are the whole point of running
 this sparse instead of reusing the dense-teleport pagerank loop.
 
-Both loops: cached adjacency built once, every round pinned and the
-replaced state freed (the single-vector loops through the loop driver
-``plans/iterate.fixpoint``; HITS/SALSA pin their two half-steps
-themselves), shuffle width derived from the moving-state size
-(``loop_shuffle_width``), zero per-row Python.
+Every loop here — HITS/SALSA, PPR, Katz, eigenvector, the distance
+waves and both Brandes waves — builds its edge relation once and runs on
+the loop driver ``plans/iterate.fixpoint``: one pinned state per round,
+the replaced state freed, no driver probe inside the loop, shuffle width
+derived from the moving-state size (``loop_shuffle_width``), zero
+per-row Python.
 """
 
 from __future__ import annotations
@@ -34,12 +37,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_python_spark.operators.blocks import vertex_ids
-from graph_python_spark.plans.iterate import (fixpoint, iterative,
-                                              loop_shuffle_width, materialize,
-                                              release)
+from graph_python_spark.plans.iterate import (fixpoint, frontier_fixpoint,
+                                              iterative, loop_shuffle_width,
+                                              materialize, release)
 
 
-@iterative
 def hits_fixed(
     edges: DataFrame,
     iterations: int = 8,
@@ -50,63 +52,111 @@ def hits_fixed(
     L1-normalized (each column sums to 1; a vertex with no out-edges has
     hub 0, no in-edges auth 0).  h_0 = 1 on every vertex.
     """
-    # Two pinned copies of the deduped edge table, hash-partitioned on each
-    # join side (the HITS round alternates direction): the i-partitioned
-    # copy joins the i-keyed hub vector, the j-partitioned copy the j-keyed
-    # authority vector.  Each aggregate output is already hash-partitioned
-    # on its key with the same width, so NEITHER side of either join
-    # exchanges — the only per-round shuffles left are the two O(E)
-    # contribution re-keyings, which are the SpMV itself.  hash(i)
-    # co-locates (i, j) duplicates, so dropDuplicates after the repartition
-    # adds no exchange.  (The PageRank adjacency-ARRAY form was measured
-    # here too: its two grouped-array builds cost more than they save over
-    # <=8 HITS rounds — break-even at 22.9M edges, slower at sf0.1 — so the
-    # edge form stays; PageRank amortizes one build over many more
-    # iterations, which is why it wins there.)
+    def weigh(eb: DataFrame) -> tuple[DataFrame, DataFrame]:
+        # a = Aᵀh reads h by source, h = A a reads a by target
+        one = F.lit(1.0).alias("w")
+        return (eb.select(F.col("i").alias("k"), F.col("j").alias("o"), one),
+                eb.select(F.col("j").alias("k"), F.col("i").alias("o"), one))
+
+    return _hub_authority(edges, weigh, iterations, partitions, start="hub")
+
+
+def salsa_fixed(
+    edges: DataFrame,
+    iterations: int = 6,
+    partitions: Optional[int] = None,
+) -> DataFrame:
+    """SALSA (Lempel & Moran) — HITS's random-walk cousin: hubs and
+    authorities from the alternating backward/forward DEGREE-NORMALIZED
+    walk instead of raw mutual reinforcement, which makes it robust to the
+    tightly-knit-community effect that inflates HITS scores.
+
+        h_i ← Σ_{i→j} a_j / din(j)        (backward: pick a random in-link)
+        a_j ← Σ_{i→j} h_i / dout(i)       (forward: pick a random out-link)
+
+    Exactly ``iterations`` rounds from a uniform authority vector,
+    L1-normalized at the end — deterministic, so a fixed SQL unroll
+    oracles it.  (Known limit: within a connected bipartite support
+    component, authority converges to din/Σdin — the sanity property the
+    tests check.)
+
+    Plan: the HITS loop with the two normalization factors baked into
+    its pinned edge copies as per-EDGE constants (1/din(j) on the
+    backward half, 1/dout(i) on the forward half).
+    """
+    def weigh(eb: DataFrame) -> tuple[DataFrame, DataFrame]:
+        din = eb.groupBy("j").agg(F.count("*").alias("_di"))
+        dout = eb.groupBy("i").agg(F.count("*").alias("_do"))
+        return (eb.join(din, "j").select(
+                    F.col("j").alias("k"), F.col("i").alias("o"),
+                    (F.lit(1.0) / F.col("_di")).alias("w")),
+                eb.join(dout, "i").select(
+                    F.col("i").alias("k"), F.col("j").alias("o"),
+                    (F.lit(1.0) / F.col("_do")).alias("w")))
+
+    return _hub_authority(edges, weigh, iterations, partitions, start="auth")
+
+
+@iterative
+def _hub_authority(edges: DataFrame, weigh, iterations: int,
+                   partitions: Optional[int], start: str) -> DataFrame:
+    """The HITS/SALSA loop: exactly ``iterations`` rounds of y = W₁ᵀx,
+    x = W₂ᵀy from x = 1 (x the ``start`` vector, "hub" or "auth") on
+    every vertex of the deduped directed edge set; ``weigh(eb)`` maps
+    its edges (i, j) to the two half-step relations (k, o, w), which send
+    k's value times w to o.  Returns (id, hub, auth), each column
+    divided by its sum (a missing value is 0).
+
+    The state is one vertex frame (id, x, y), one pinned job a round.
+    The second relation also carries a row (v, v, null) per vertex, so
+    ONE join of the first half-step's y to it yields both the new x's
+    contributions and each vertex's own y for ONE groupBy(id): y is
+    computed once (unioning y with the contributions would plan a
+    second, unreused copy of it).  Both relations are pinned hash(k) at
+    the loop width, as is every aggregate, so no join side exchanges;
+    the two per-round shuffles are the SpMV re-keyings themselves.  (The
+    PageRank adjacency-ARRAY form costs more than it saves over <=8
+    rounds — break-even at 22.9M edges — so the edge form stays.)"""
     spark = edges.sparkSession
-    raw = edges.select("i", "j")
-    vertices = materialize(vertex_ids(raw))
-    n = vertices.count()
-    auth = None
-    with loop_shuffle_width(spark, n) as width:
+    eb = materialize(edges.select("i", "j").dropDuplicates(["i", "j"]))
+    vertices = vertex_ids(eb)
+    with loop_shuffle_width(spark, vertices.count()) as width:
         w = partitions if partitions is not None else width
         if partitions is not None:
-            # align the loop aggregates' output width with the cached edge
-            # copies (the context restores the session value on exit)
+            # align the loop aggregates' output width with the pinned
+            # edge copies (the context restores the session value on exit)
             spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
-        ebi = materialize(raw.repartition(w, "i").dropDuplicates(["i", "j"]))
-        ebj = materialize(ebi.repartition(w, "j"))
-        h = vertices.select(F.col("id").alias("i"), F.lit(1.0).alias("v"))
-        for _ in range(iterations):
-            # pin the first half-step, then build the second from the pin,
-            # so each round computes new_auth once
-            new_auth = materialize(
-                ebi.join(h, "i")
-                .groupBy(F.col("j"))
-                .agg(F.sum("v").alias("v"))
-            )
-            new_h = materialize(
-                ebj.join(new_auth, "j")
-                .groupBy(F.col("i"))
-                .agg(F.sum("v").alias("v"))
-            )
-            release(h, auth)
-            h, auth = new_h, new_auth
-    # h/auth are pinned (eager localCheckpoint), so the pinned edge copies
-    # are no longer needed by the lazy result — release their blocks
-    release(ebi, ebj)
-    sums = h.agg(F.sum("v")).crossJoin(auth.agg(F.sum("v"))).first()
+        first, second = weigh(eb)
+        diagonal = vertices.select(F.col("id").alias("k"),
+                                   F.col("id").alias("o"),
+                                   F.lit(None).cast("double").alias("w"))
+        first = materialize(first.repartition(w, "k"))
+        second = materialize(second.unionByName(diagonal).repartition(w, "k"))
+
+        def spmv(rel: DataFrame, vec: DataFrame) -> DataFrame:
+            # hash the vector: its size estimate grows every round
+            return (rel.join(vec.toDF("k", "_v").hint("shuffle_hash"), "k")
+                    .groupBy(F.col("o").alias("id")))
+
+        def step(state: DataFrame) -> DataFrame:
+            y = spmv(first, state.select("id", "x")).agg(
+                F.sum(F.col("_v") * F.col("w")).alias("y"))
+            return spmv(second, y).agg(
+                F.sum(F.col("_v") * F.col("w")).alias("x"),
+                F.sum(F.when(F.col("w").isNull(), F.col("_v"))).alias("y"))
+
+        state, _ = fixpoint(
+            vertices.select("id", F.lit(1.0).alias("x"),
+                            F.lit(None).cast("double").alias("y")),
+            step, iterations)
+    release(eb, first, second)
+    hub, auth = ("x", "y") if start == "hub" else ("y", "x")
+    sums = state.agg(F.sum(hub), F.sum(auth)).first()
     hsum, asum = float(sums[0]), float(sums[1])
-    return (
-        vertices.join(h.select(F.col("i").alias("id"), F.col("v").alias("_h")),
-                      "id", "left_outer")
-        .join(auth.select(F.col("j").alias("id"), F.col("v").alias("_a")),
-              "id", "left_outer")
-        .select(
-            "id",
-            (F.coalesce(F.col("_h"), F.lit(0.0)) / F.lit(hsum)).alias("hub"),
-            (F.coalesce(F.col("_a"), F.lit(0.0)) / F.lit(asum)).alias("auth"),
-        )
+    return state.select(
+        "id",
+        (F.coalesce(F.col(hub), F.lit(0.0)) / F.lit(hsum)).alias("hub"),
+        (F.coalesce(F.col(auth), F.lit(0.0)) / F.lit(asum)).alias("auth"),
     )
 
 
@@ -271,9 +321,12 @@ def betweenness_sources(
 
     All levels are processed for the WHOLE batch at once — the state is
     keyed (src, v), so a 1000-source batch on a 1000-executor cluster is
-    one wave of joins per level, not 1000 sequential BFS runs; per-level
-    frontiers and dependency waves are pinned (localCheckpoint) and the
-    edge relation is cached partitioned on its join key.
+    one wave of joins per level, not 1000 sequential BFS runs.  Both
+    waves run on the loop driver over ONE pinned state
+    (src, v, sigma, level): the forward wave is a frontier push, and the
+    backward wave adds ``delta`` and a level cursor ``_d`` and fills in
+    one level per round, deepest first.  The edge relation is pinned
+    partitioned on its join key.
     """
     spark = edges.sparkSession
     eb = edges.select("i", "j")
@@ -284,67 +337,57 @@ def betweenness_sources(
     eb = materialize(eb.dropDuplicates(["i", "j"]))
     n_edges = eb.count()
 
-    f0 = materialize(
-        sources.select(F.col("id").alias("src"), F.col("id").alias("v"),
-                       F.lit(1).cast("long").alias("sigma"))
-    )
-    levels = [f0]
-    visited = f0.select("src", "v").localCheckpoint(eager=True)
-    with loop_shuffle_width(spark, max(n_edges, 1)):
-        for _ in range(max_levels):
-            front = levels[-1]
-            nxt = (
-                front.join(eb, front["v"] == eb["i"])
-                .groupBy("src", F.col("j").alias("v"))
-                .agg(F.sum("sigma").alias("sigma"))
-                .join(visited, ["src", "v"], "left_anti")
-            )
-            nxt = nxt.localCheckpoint(eager=True)
-            if nxt.isEmpty():
-                release(nxt)
-                break
-            levels.append(nxt)
-            prev = visited
-            visited = visited.unionByName(nxt.select("src", "v")) \
-                             .localCheckpoint(eager=True)
-            release(prev)
+    def forward(front: DataFrame) -> DataFrame:
+        # hash the state side: its size estimate grows every round
+        return (
+            eb.join(front.select("src", F.col("v").alias("i"), "sigma",
+                                 "level").hint("shuffle_hash"), "i")
+            .groupBy("src", F.col("j").alias("v"))
+            .agg(F.sum("sigma").alias("sigma"),
+                 (F.max("level") + 1).alias("level"))
+        )
 
-        depth = len(levels) - 1
-        deltas: list[DataFrame] = [None] * (depth + 1)
-        deltas[depth] = levels[depth].withColumn("delta", F.lit(0.0))
-        for d in range(depth - 1, -1, -1):
-            nd = levels[d]
-            succ = deltas[d + 1].select(
-                "src", F.col("v").alias("w"), F.col("sigma").alias("sigma_w"),
-                F.col("delta").alias("delta_w"))
-            # dependency step: v's successors on the shortest-path DAG are
-            # exactly its out-neighbors sitting one level deeper
-            contrib = (
-                nd.join(eb, nd["v"] == eb["i"])
-                .withColumnRenamed("j", "w")
-                .join(succ, ["src", "w"], "inner")
-                .groupBy("src", "v")
-                .agg(F.sum((F.col("sigma").cast("double") / F.col("sigma_w"))
-                           * (F.lit(1.0) + F.col("delta_w"))).alias("_d"))
-            )
-            deltas[d] = (
-                nd.join(contrib, ["src", "v"], "left_outer")
-                .select("src", "v", "sigma",
-                        F.coalesce(F.col("_d"), F.lit(0.0)).alias("delta"))
-                .localCheckpoint(eager=True)
-            )
-    if depth == 0:
-        out = spark.createDataFrame([], "id long, bc double")
-    else:
-        stacked = deltas[1]
-        for d in range(2, depth + 1):
-            stacked = stacked.unionByName(deltas[d])
-        out = materialize(stacked.groupBy(F.col("v").alias("id"))
+    def backward(state: DataFrame) -> DataFrame:
+        # dependency step for level _d: v's successors on the shortest-
+        # path DAG are exactly its out-neighbors one level deeper
+        at = F.col("level") - F.col("_d")
+        succ = state.filter(at == 1).select(
+            "src", F.col("v").alias("j"), F.col("sigma").alias("sigma_w"),
+            F.col("delta").alias("delta_w"))
+        cur = state.filter(at == 0).select("src", F.col("v").alias("i"),
+                                            "sigma")
+        contrib = (
+            eb.join(cur.hint("shuffle_hash"), "i")
+            .join(succ, ["src", "j"])
+            .groupBy("src", F.col("i").alias("v"))
+            .agg(F.sum((F.col("sigma").cast("double") / F.col("sigma_w"))
+                       * (F.lit(1.0) + F.col("delta_w"))).alias("_dv"))
+        )
+        return (
+            state.join(contrib, ["src", "v"], "left")
+            .select("src", "v", "sigma", "level",
+                    F.coalesce("_dv", "delta").alias("delta"),
+                    (F.col("_d") - 1).alias("_d"))
+        )
+
+    with loop_shuffle_width(spark, max(n_edges, 1)):
+        reached, rounds = frontier_fixpoint(
+            sources.select(F.col("id").alias("src"), F.col("id").alias("v"),
+                           F.lit(1).cast("long").alias("sigma"),
+                           F.lit(0).alias("level")),
+            forward, ["src", "v"], max_levels)
+        # every round but the last adds a level; a run cut at max_levels
+        # may have added one in its last round too
+        depth = rounds if rounds == max_levels else rounds - 1
+        state, _ = fixpoint(
+            reached.select("src", "v", "sigma", "level",
+                           F.lit(0.0).alias("delta"),
+                           F.lit(depth - 1).alias("_d")),
+            backward, depth - 1)
+        out = materialize(state.filter(F.col("level") >= 1)
+                          .groupBy(F.col("v").alias("id"))
                           .agg(F.sum("delta").alias("bc")))
-    # the result is pinned, so every per-level block can be released —
-    # leaving O(levels) checkpointed frames cached would bleed executor
-    # storage into whatever runs next on the session
-    release(*levels, *deltas, visited, eb)
+    release(reached, state, eb)
     return out
 
 
@@ -535,79 +578,3 @@ def closeness_centrality(
     out = out.localCheckpoint(eager=True)
     release(dist)
     return out
-
-
-def salsa_fixed(
-    edges: DataFrame,
-    iterations: int = 6,
-    partitions: Optional[int] = None,
-) -> DataFrame:
-    """SALSA (Lempel & Moran) — HITS's random-walk cousin: hubs and
-    authorities from the alternating backward/forward DEGREE-NORMALIZED
-    walk instead of raw mutual reinforcement, which makes it robust to the
-    tightly-knit-community effect that inflates HITS scores.
-
-        h_i ← Σ_{i→j} a_j / din(j)        (backward: pick a random in-link)
-        a_j ← Σ_{i→j} h_i / dout(i)       (forward: pick a random out-link)
-
-    Exactly ``iterations`` rounds from a uniform authority vector,
-    L1-normalized at the end — deterministic, so a fixed SQL unroll
-    oracles it.  (Known limit: within a connected bipartite support
-    component, authority converges to din/Σdin — the sanity property the
-    tests check.)
-
-    Plan: the two per-round normalization factors are per-EDGE constants,
-    so they are baked into the same dual-partitioned pinned edge copies
-    the HITS loop uses (i-keyed copy carries 1/dout(i), j-keyed copy
-    1/din(j)); neither join side exchanges, and the only per-round
-    shuffles are the two O(E) contribution re-keyings — the SpMV itself.
-    """
-    spark = edges.sparkSession
-    raw = edges.select("i", "j")
-    vertices = materialize(vertex_ids(raw))
-    n = vertices.count()
-    with loop_shuffle_width(spark, n) as width:
-        w = partitions if partitions is not None else width
-        if partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
-        eb = raw.dropDuplicates(["i", "j"])
-        dout = eb.groupBy("i").agg(F.count("*").alias("_do"))
-        din = eb.groupBy("j").agg(F.count("*").alias("_di"))
-        ebi = materialize(
-            eb.join(dout, "i")
-            .select("i", "j", (F.lit(1.0) / F.col("_do")).alias("inv_dout"))
-            .repartition(w, "i"))
-        ebj = materialize(
-            eb.join(din, "j")
-            .select("i", "j", (F.lit(1.0) / F.col("_di")).alias("inv_din"))
-            .repartition(w, "j"))
-        a = vertices.select(F.col("id").alias("j"), F.lit(1.0).alias("v"))
-        h = None
-        for _ in range(iterations):
-            # first half-step pinned once; the second reads the pin
-            new_h = materialize(
-                ebj.join(a, "j")
-                .groupBy(F.col("i"))
-                .agg(F.sum(F.col("v") * F.col("inv_din")).alias("v"))
-            )
-            new_a = materialize(
-                ebi.join(new_h, "i")
-                .groupBy(F.col("j"))
-                .agg(F.sum(F.col("v") * F.col("inv_dout")).alias("v"))
-            )
-            release(h, a)
-            h, a = new_h, new_a
-    release(ebi, ebj)
-    sums = h.agg(F.sum("v")).crossJoin(a.agg(F.sum("v"))).first()
-    hsum, asum = float(sums[0]), float(sums[1])
-    return (
-        vertices.join(h.select(F.col("i").alias("id"), F.col("v").alias("_h")),
-                      "id", "left_outer")
-        .join(a.select(F.col("j").alias("id"), F.col("v").alias("_a")),
-              "id", "left_outer")
-        .select(
-            "id",
-            (F.coalesce(F.col("_h"), F.lit(0.0)) / F.lit(hsum)).alias("hub"),
-            (F.coalesce(F.col("_a"), F.lit(0.0)) / F.lit(asum)).alias("auth"),
-        )
-    )

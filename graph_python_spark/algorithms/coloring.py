@@ -83,9 +83,11 @@ def greedy_coloring(
 
     def step(state: DataFrame) -> DataFrame:
         # the adjacency is symmetric: join the state on s, which keeps
-        # the adjacency's hash(s) partitioning, and reduce per d
+        # the adjacency's hash(s) partitioning, and reduce per d (hashing
+        # the state side: its size estimate grows every round)
         nbr = (
-            adj.join(state.select(F.col("id").alias("s"), "color", "_t"), "s")
+            adj.join(state.select(F.col("id").alias("s"), "color", "_t")
+                     .hint("shuffle_hash"), "s")
             .groupBy(F.col("d").alias("id"))
             .agg(
                 # min over uncolored neighbors; none left -> null -> a win

@@ -94,7 +94,8 @@ def influence_spread(
         .select("sample", "id")
     )
     with loop_shuffle_width(spark, max(e.count(), 1)):
-        reached = frontier_fixpoint(start, expand, ["sample", "id"], rounds)
+        reached, _ = frontier_fixpoint(start, expand, ["sample", "id"],
+                                       rounds)
     release(e)
     return (
         reached.groupBy("sample")

@@ -29,7 +29,9 @@ reference's compute_modularity: Q = Σ_c [Σ_in(c)/m2 − (Σ_tot(c)/m2)²].
 
 At 100 TB scale each sweep shuffles O(E) once (the k_{v,c} groupBy) plus
 two O(V) aggregations; labels are the only moving state and the sweep
-count is fixed — same plan family as label propagation.
+count is fixed — same plan family as label propagation, on the same loop
+driver (``plans/iterate.fixpoint``): one pinned (i, c, k, _p) state per
+sweep, the parity ``_p`` a state column, the replaced labels freed.
 ``louvain_levels`` adds the reference's multi-level contraction: collapse
 each community to a vertex (one groupBy on (c_i, c_j)) and re-run sweeps
 on the coarsened graph.  A community's internal weight becomes its
@@ -49,8 +51,9 @@ from pyspark.sql import functions as F
 from typing import Optional
 
 from graph_python_spark.operators.blocks import mirror, vertex_ids
-from graph_python_spark.plans.iterate import (IterationState, iterative,
-                                              loop_shuffle_width, materialize)
+from graph_python_spark.plans.iterate import (IterationState, fixpoint,
+                                              iterative, loop_shuffle_width,
+                                              materialize, release)
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -84,7 +87,6 @@ def louvain_sweeps(edges: DataFrame, sweeps: int = 4,
     # off-diagonal rows (links from v to OTHER members of c).  On a
     # self-loop-free input graph the two relations coincide.
     sym_all = _symmetrize(edges).cache()
-    sym = sym_all.filter(F.col("i") != F.col("j"))
     k = sym_all.groupBy("i").agg(F.sum("w").alias("k")).cache()
     m2 = sym_all.agg(F.sum("w")).first()[0]
     # the loop state carries k_v alongside the label: sigma and the scored
@@ -93,23 +95,27 @@ def louvain_sweeps(edges: DataFrame, sweeps: int = 4,
     # riding in an already-moving O(V) row)
     labels = k.select("i", F.col("i").alias("c"), "k")
 
-    start = 0
+    start, save = 0, None
     if checkpoint is not None:
         restored = checkpoint.restore()
         if restored is not None:
             start, states, _ = restored
-            labels = states["labels"]
+            labels = states["labels"].select("i", "c", "k")
 
-    with loop_shuffle_width(edges.sparkSession, k.count()):
-        labels = _sweep_loop(sym, m2, labels, sweeps,
-                             start=start, checkpoint=checkpoint)
-    return labels.select(F.col("i").alias("id"), F.col("c").alias("community"))
+        def save(_old, new, r):
+            checkpoint.save(start + r + 1, {"labels": new},
+                            {"sweep": start + r + 1})
 
-
-def _sweep_loop(sym, m2, labels, sweeps, start=0, checkpoint=None):
-    for sweep in range(start, sweeps):
+    def step(labels):
         sigma = labels.groupBy("c").agg(F.sum("k").alias("sig"))
-        nbr_lab = labels.select(F.col("i").alias("j"), F.col("c").alias("cn"))
+        # parity alternation: even sweeps move even vertices, odd sweeps odd
+        # ones — the standard parallel-Louvain symmetry breaker (without it,
+        # two vertices that each prefer the other's community swap labels
+        # forever in a 2-cycle); deterministic and oracle-replicable
+        movers = labels.filter(F.pmod(F.col("i"), F.lit(2)) == F.col("_p"))
+        # hash the state side: its size estimate grows every sweep
+        nbr_lab = (labels.select(F.col("i").alias("j"), F.col("c").alias("cn"))
+                   .hint("shuffle_hash"))
         # the own-community candidate must ALWAYS be present (k_{v,c_v}
         # defaults to 0 when v has no links into its own community) —
         # otherwise a vertex alone in its community is forced into its
@@ -118,16 +124,15 @@ def _sweep_loop(sym, m2, labels, sweeps, start=0, checkpoint=None):
         # score = -k_v(sig - k_v)/m2 relative baseline, must be able to win.
         # The O(V) stay rows ride into the same O(E) groupBy — no extra
         # shuffle stage.
-        stay = labels.select("i", F.col("c").alias("cn"),
+        stay = movers.select("i", F.col("c").alias("cn"),
                              F.lit(0.0).alias("w"))
         kvc = (
             sym.join(nbr_lab, "j").select("i", "cn", "w")
             .unionByName(stay)
             .groupBy("i", "cn").agg(F.sum("w").alias("kvc"))
         )
-        cur = labels.select("i", F.col("c").alias("cv"), "k")
         scored = (
-            kvc.join(cur, "i")
+            kvc.join(movers.select("i", F.col("c").alias("cv"), "k"), "i")
             .join(sigma.select(F.col("c").alias("cn"), "sig"), "cn")
             .select(
                 "i", "cn",
@@ -138,25 +143,29 @@ def _sweep_loop(sym, m2, labels, sweeps, start=0, checkpoint=None):
                  ).alias("score"),
             )
         )
-        # parity alternation: even sweeps move even vertices, odd sweeps odd
-        # ones — the standard parallel-Louvain symmetry breaker (without it,
-        # two vertices that each prefer the other's community swap labels
-        # forever in a 2-cycle); deterministic and oracle-replicable
-        best = (
-            scored.filter(F.pmod(F.col("i"), F.lit(2)) == sweep % 2)
-            .groupBy("i").agg(
-                F.max_by(F.col("cn"), F.struct(F.col("score"), -F.col("cn"))).alias("c")
-            )
+        best = scored.groupBy("i").agg(
+            F.max_by(F.col("cn"), F.struct(F.col("score"), -F.col("cn"))).alias("c")
         )
         # vertices off-parity or isolated keep their label
-        labels = materialize(
-            labels.select("i", F.col("c").alias("_old"), "k")
+        return (
+            labels.select("i", F.col("c").alias("_old"), "k", "_p")
             .join(best, "i", "left_outer")
-            .select("i", F.coalesce(F.col("c"), F.col("_old")).alias("c"), "k")
+            .select("i", F.coalesce(F.col("c"), F.col("_old")).alias("c"), "k",
+                    (1 - F.col("_p")).alias("_p"))
         )
-        if checkpoint is not None:
-            checkpoint.save(sweep + 1, {"labels": labels}, {"sweep": sweep + 1})
-    return labels
+
+    # one pinned state (i, c, k, _p) per sweep on the loop driver; _p is
+    # the parity of the vertices that move, flipped every sweep
+    with loop_shuffle_width(edges.sparkSession, k.count()) as width:
+        # hash(j) at the loop width, as the state is hash(i): the
+        # per-sweep neighbor-label join ships neither side
+        sym = materialize(sym_all.filter(F.col("i") != F.col("j"))
+                          .repartition(width, "j"))
+        labels, _ = fixpoint(
+            labels.select("*", F.lit(start % 2).alias("_p")), step,
+            sweeps - start, after=save)
+    release(sym_all, sym, k)
+    return labels.select(F.col("i").alias("id"), F.col("c").alias("community"))
 
 
 def modularity(edges: DataFrame, labels: DataFrame) -> float:

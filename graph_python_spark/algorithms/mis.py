@@ -75,10 +75,12 @@ def maximal_independent_set(
 
     def step(state: DataFrame) -> DataFrame:
         # the adjacency is symmetric: join the state on s, which keeps
-        # the adjacency's hash(s) partitioning, and reduce per d
+        # the adjacency's hash(s) partitioning, and reduce per d (hashing
+        # the state side: its size estimate grows every round)
         nbr = (
             adj.join(state.select(F.col("id").alias("s"),
-                                  F.col("st").alias("_ss")), "s")
+                                  F.col("st").alias("_ss"))
+                     .hint("shuffle_hash"), "s")
             .groupBy(F.col("d").alias("id"))
             .agg(F.min(F.when(F.col("_ss") == 0,
                               prio(F.col("s")))).alias("_m"),

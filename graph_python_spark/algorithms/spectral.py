@@ -13,12 +13,13 @@ Engine-parity contract (the PCA/k-means discipline): every reduction is
 quantized to integer nano-units before the sum (BIGINT, order-
 independent); the per-step scalars (deflation coefficient, norm) are
 plain doubles computed with the same expression tree the unrolled
-DuckDB oracle uses, collected driver-side (2 scalars × iterations — the
-bounded-collect precedent of the peeling loops).
+DuckDB oracle uses.
 
-Scale shape: each iteration is ONE edge ⋈ x SpMV exchange over the
-pinned source-partitioned symmetric relation (the PageRank plan) plus
-two 1-row folds; x is O(V) thin rows.
+Scale shape: y = P x is the one pinned ``fixpoint`` state.  A round
+folds both scalars off the PINNED y in-plan (off a lazy y the SpMV
+would rerun per scalar) and runs ONE edge ⋈ x SpMV exchange over the
+pinned source-partitioned symmetric relation (the PageRank plan); x is
+O(V) thin rows.  Only the last norm is read on the driver.
 
 Reference parity: python-graphblas expresses the same SpMV chain via
 mxv over plus_times (reference graphblas/core/matrix.py mxv); the
@@ -31,12 +32,13 @@ from __future__ import annotations
 import math
 from typing import Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from graph_python_spark.operators.blocks import symmetric
-from graph_python_spark.plans.iterate import (iterative, loop_shuffle_width,
-                                              materialize, release)
+from graph_python_spark.plans.iterate import (fixpoint, iterative,
+                                              loop_shuffle_width, materialize,
+                                              release)
 
 
 def _q9(col):
@@ -82,42 +84,51 @@ def spectral_gap(
     digest = (F.conv(F.substring(F.md5(F.col("id").cast("string")), 1, 15),
                      16, 10).cast("long").cast("double")
               / F.lit(float(16 ** 15)))
+
+    def deflated(y: DataFrame) -> tuple[DataFrame, Column]:
+        """The one-row (c, ‖z‖²) with c = ⟨v₁, y⟩, and the Column
+        z = y − c·v₁ over y ⋈ that row (c is folded once)."""
+        z = F.col("_y") - F.col("_c") * F.col("_v1")
+        c = y.agg(_q9(F.col("_v1") * F.col("_y")).alias("_c"))
+        return (y.crossJoin(c)
+                .agg(F.max("_c").alias("_c"), _q9(z * z).alias("_n2"))), z
+
     with loop_shuffle_width(spark, max(n_verts, 1)) as width:
         e = materialize(both.repartition(partitions or width, "d"))
         base = materialize(deg.select(
             "id", "_d",
             (F.sqrt(F.col("_d").cast("double")) / F.lit(s2e)).alias("_v1")))
-        x = materialize(base.select("id", (digest - 0.5).alias("_x")))
-        lam = 0.0
-        for _ in range(iterations):
+
+        def step(state: DataFrame) -> DataFrame:
+            x = state
+            if "_y" in state.columns:
+                # the last pinned y, deflated and normalized (0 once its
+                # norm is 0, which zeroes y and stops the loop)
+                scalars, z = deflated(state)
+                x = state.crossJoin(scalars).select(
+                    "id", "_d",
+                    F.when(F.col("_n2") > 0, z / F.sqrt(F.col("_n2")))
+                    .otherwise(F.lit(0.0)).alias("_x"))
             # y = P x: one SpMV exchange; inner contribution quantized
+            # (hash x: its size estimate grows every round)
             contrib = (
-                e.join(x.select(F.col("id").alias("d"), "_x"), "d")
-                .join(base.select(F.col("id").alias("d"),
-                                  F.col("_d").alias("_dd")), "d")
+                e.join(x.select(F.col("id").alias("d"), "_x",
+                                F.col("_d").alias("_dd")).hint("shuffle_hash"),
+                       "d")
                 .groupBy(F.col("s").alias("id"))
                 .agg(_q9(F.col("_x")
                          / F.sqrt(F.col("_dd").cast("double"))).alias("_s"))
             )
-            y = (base.join(contrib, "id", "left")
-                 .select("id", "_d", "_v1",
-                         (F.coalesce("_s", F.lit(0.0))
-                          / F.sqrt(F.col("_d").cast("double"))).alias("_y")))
-            y = materialize(y)
-            c = float(y.agg(_q9(F.col("_v1") * F.col("_y"))).first()[0])
-            z = y.select("id",
-                         (F.col("_y") - F.lit(c) * F.col("_v1")).alias("_z"))
-            z = materialize(z)
-            nrm2 = float(z.agg(_q9(F.col("_z") * F.col("_z"))).first()[0])
-            lam = math.sqrt(nrm2) if nrm2 > 0 else 0.0
-            release(y)
-            if lam == 0.0:
-                release(z)
-                break
-            prev, x = x, materialize(
-                z.select("id", (F.col("_z") / F.lit(lam)).alias("_x")))
-            release(z, prev)
-        release(x, base, e)
+            return (base.join(contrib, "id", "left")
+                    .select("id", "_d", "_v1",
+                            (F.coalesce("_s", F.lit(0.0))
+                             / F.sqrt(F.col("_d").cast("double"))).alias("_y")))
+
+        y, done = fixpoint(base.select("id", "_d", (digest - 0.5).alias("_x")),
+                           step, iterations, changed=F.max(F.col("_y") != 0))
+        nrm2 = float(deflated(y)[0].first()["_n2"]) if done else 0.0
+        release(y, base, e)
+    lam = math.sqrt(nrm2) if nrm2 > 0 else 0.0
     return spark.createDataFrame(
         [(n_verts, iterations, round(lam, 6),
           round(1.0 - lam, 6))],

@@ -45,7 +45,7 @@ def _frontier_bfs(edges: DataFrame, start: DataFrame, reach: Column,
     (an aggregate over the frontier's ``s`` and value columns)."""
     value = start.columns[1]
     adj = materialize(simple(edges).toDF("s", "d"))
-    state = frontier_fixpoint(
+    state, _ = frontier_fixpoint(
         start,
         lambda f: (adj.join(f.select(F.col("id").alias("s"), value), "s")
                    .groupBy(F.col("d").alias("id")).agg(reach.alias(value))),

@@ -104,7 +104,8 @@ def fixpoint(state: Optional[DataFrame], step: Callable[..., DataFrame],
 
 def frontier_fixpoint(start: DataFrame,
                       expand: Callable[[DataFrame], DataFrame],
-                      keys: list[str], rounds: int) -> DataFrame:
+                      keys: list[str], rounds: int,
+                      ) -> tuple[DataFrame, int]:
     """Grow a keyed reached set by frontier pushes, on :func:`fixpoint`.
 
     ``start`` holds the key columns, then any value columns, one row per
@@ -113,8 +114,9 @@ def frontier_fixpoint(start: DataFrame,
     candidates (the same columns, one row per key) and merges in the
     ones the state lacks as the next frontier: ``q(~v.S) << q.vxm(A)``
     as one full outer join.  The loop stops after ``rounds`` rounds or on
-    the round that adds no row, read off the pin.  Returns the pinned
-    state, ``_new`` included; the caller releases it."""
+    the round that adds no row, read off the pin.  Returns
+    ``(state, rounds_run)`` like :func:`fixpoint`: the pinned state,
+    ``_new`` included, which the caller releases."""
     values = [c for c in start.columns if c not in keys]
 
     def step(state: DataFrame) -> DataFrame:
@@ -125,9 +127,9 @@ def frontier_fixpoint(start: DataFrame,
                         *(F.coalesce(v, f"_c{v}").alias(v) for v in values),
                         F.col("_new").isNull().alias("_new")))
 
-    state, _ = fixpoint(start.select("*", F.lit(True).alias("_new")), step,
-                        rounds, changed=F.max("_new"))
-    return state
+    return fixpoint(start.select("*", F.lit(True).alias("_new")), step,
+                    rounds, changed=F.max("_new"))
+
 
 @contextmanager
 def loop_conf(spark: SparkSession):
